@@ -599,6 +599,50 @@ def _noop_counted(df) -> int:
         p.unpersist()
 
 
+class _CompileLedger:
+    """Generated-code compilations per timed execution, keyed
+    "<block>.<point>" (operators/observability.py::codegen_compiles).
+    main() arms it with a probe over the bench session; unarmed (unit
+    tests) it only times. A repeat of code that already ran should read
+    0, because session.py sizes the codegen cache to keep every class the
+    bench compiles, so a cache that thrashes again shows up here as a
+    number rather than as JIT CPU inside the walls. The first repeat of a
+    point that has no warm-up of its own (the 10x/100x points of a
+    family, whose plans differ from the 1x plan) also books that point's
+    first-touch compiles."""
+
+    def __init__(self) -> None:
+        self.probe = None  # zero-arg callable -> JVM compile count
+        self.block = ""
+        self.points = 0
+        self.log: dict[str, list[int]] = {}
+
+    def start_block(self, name: str) -> None:
+        self.block, self.points = name, 0
+
+    def next_point(self) -> str:
+        self.points += 1
+        return f"point{self.points}"
+
+    def timed(self, fn, label):
+        """(seconds, result) of one execution of `fn`; the compile count
+        is read outside the clock and booked under `label` (a string, or
+        a tuple of strings as some replay families key their points)."""
+        before = self.probe() if self.probe else 0
+        t0 = time.perf_counter()
+        result = fn()
+        sec = time.perf_counter() - t0
+        if self.probe:
+            if isinstance(label, tuple):
+                label = ".".join(label)
+            key = f"{self.block}.{label}" if self.block else label
+            self.log.setdefault(key, []).append(self.probe() - before)
+        return sec, result
+
+
+_LEDGER = _CompileLedger()
+
+
 def _median_point(run, *, cleanup=None, warmup: bool = False, repeats: int = 3):
     """Round-9 verdict item 1: replay points were timed ONCE, and round 8's
     two same-HEAD runs measured dedup's 1x point 4.6x apart (2.22 s vs
@@ -619,10 +663,10 @@ def _median_point(run, *, cleanup=None, warmup: bool = False, repeats: int = 3):
             cleanup()
     times = []
     result = None
+    label = _LEDGER.next_point()
     for _ in range(repeats):
-        t0 = time.perf_counter()
-        result = run()
-        times.append(time.perf_counter() - t0)
+        sec, result = _LEDGER.timed(run, label)
+        times.append(sec)
         if cleanup:
             cleanup()
     return round(sorted(times)[repeats // 2], 4), result
@@ -662,9 +706,8 @@ def _interleaved_medians(
     results: dict = {}
     for _ in range(repeats):
         for k, fn in measures.items():
-            t0 = time.perf_counter()
-            results[k] = fn()
-            times[k].append(time.perf_counter() - t0)
+            sec, results[k] = _LEDGER.timed(fn, k)
+            times[k].append(sec)
             if cleanup:
                 cleanup()
     return {
@@ -1869,15 +1912,32 @@ def _timed(fn) -> float:
     return time.perf_counter() - t0
 
 
-def _timed_query(run) -> float:
+def _timed_query(name: str, run) -> float:
     """Median of three timed executions — for EVERY query, not just
     sub-second ones. Round-5 verdict item 1: the 1.5-3.5 s shuffle-heavy
     queries were single-shot, and two same-code round-5 runs measured them
     1.3x apart (dedup_ngram_jaccard 1.39x vs 1.82x calibrated), parking
     five queries one noisy run from a false 2x regression trip. The ~35 s
     the extra runs cost buys a trustworthy gate."""
-    ts = sorted([_timed(run), _timed(run), _timed(run)])
+    ts = sorted(_LEDGER.timed(run, name)[0] for _ in range(3))
     return round(ts[1], 4)
+
+
+def _session_config(spark) -> dict:
+    """The session settings every wall in the artifact depends on."""
+    from sri_spark.session import default_parallelism
+
+    conf = spark.conf
+    return {
+        "cpus": default_parallelism(),
+        "master": spark.sparkContext.master,
+        "shuffle_partitions": int(conf.get("spark.sql.shuffle.partitions")),
+        "driver_heap": conf.get("spark.driver.memory"),
+        "spark": spark.version,
+        "codegen_cache_entries": int(
+            conf.get("spark.sql.codegen.cache.maxEntries")
+        ),
+    }
 
 
 def main() -> None:
@@ -1896,6 +1956,9 @@ def main() -> None:
 
     spark = get_spark("sri_spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    from sri_spark.operators.observability import codegen_compiles
+
+    _LEDGER.probe = lambda: codegen_compiles(spark)["compiles"]
     queries = all_queries()
     names = [n for n in HEADLINE if n in queries]
 
@@ -1916,9 +1979,10 @@ def main() -> None:
 
         return run
 
+    _LEDGER.start_block("queries")
     timings: dict[str, float] = {}
     for name in names:
-        timings[name] = _timed_query(_run_one(name))
+        timings[name] = _timed_query(name, _run_one(name))
 
     ext_names = [n for n in EXTENDED if n in queries]
     for name in ext_names:  # warm-up, as for the headline set
@@ -1926,12 +1990,14 @@ def main() -> None:
         unpersist_all()
     ext_timings: dict[str, float] = {}
     for name in ext_names:
-        ext_timings[name] = _timed_query(_run_one(name))
+        ext_timings[name] = _timed_query(name, _run_one(name))
 
     # production-scale ETL replay (BASELINE.md's reference-derived target);
     # runs after the timed query pass so it never contends with it. Kept out
     # of the query total so `value` stays comparable across rounds.
+    _LEDGER.start_block("sri_etl_replay")
     replay = sri_etl_replay(spark)
+    _LEDGER.start_block("sri_etl_replay_10x")
     replay_10x = sri_etl_replay_10x(spark)
 
     # every replay block that holds a 10x/100x build (46M-row star, 117M
@@ -1940,6 +2006,7 @@ def main() -> None:
     # the driver records for the round (ADVICE r8: the guard the 100x ETL
     # had, applied to all of them)
     def _guarded(fn) -> dict:
+        _LEDGER.start_block(fn.__name__)
         try:
             return fn(spark)
         except Exception as ex:  # noqa: BLE001 — record, don't lose artifact
@@ -2062,6 +2129,9 @@ def main() -> None:
         # Shuffle bytes don't jitter with host load, so this gate can't
         # false-fire the way wall time can.
         "shuffle_regression": _latest_shuffle_regression(),
+        "session_config": _session_config(spark),
+        # classes compiled per timed execution (see _CompileLedger)
+        "codegen_compiles": _LEDGER.log,
         # the per-query dict LAST inside the line, so a truncated tail
         # still carries every raw timing
         "queries": all_timings,

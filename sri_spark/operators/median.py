@@ -1,30 +1,13 @@
 """Distributed EXACT quantiles (DuckDB quantile_cont semantics) without
 a global sort, a per-group sort of raw rows, or a value-map aggregate.
 
-Why this exists (round 12): Spark's exact `percentile` aggregate buffers
-a value→count hash map PER MAP TASK — 2.4M mostly-distinct doubles OOM'd
-a plain 1 GiB session — and the row_number-over-global-window alternative
-funnels every row through ONE sort task, which the driver-contract sweep
-session (hundreds of prior queries' memory pressure) also failed to give
-pages to. Both are anti-patterns at 100 TB for the same reason: they
-concentrate the full value set in one place.
-
-Round 13 replaced the original two-phase range-histogram selection after
-measuring its failure mode in production: range bucketing by [min, max]
-collapses under heavy tails (81% of Theil–Sen's 2.9M slopes landed in one
-of 1024 cells, silently restoring the single-task multimillion-row sort);
-the replacement bracketed the target rank with a Greenwald–Khanna sketch
-(`percentile_approx`). Round 14 retired the sketch too: GK is an
-IMPERATIVE (non-codegen) aggregate whose per-row update cost was the
-operator's measured wall floor (~1.4 s over 2.9M cached slopes, nearly
-independent of `accuracy`), and it forced a second scan of the input for
-the band pass. The current selection is pure codegen relational algebra —
-tie-collapse to (group, value, count) cells, ONE narrow range shuffle of
-the cells, and a two-phase distributed rank (partition-local cumulative
-counts + per-group partition offsets, the add_surrogate_key_scalable
-pattern expressed without any driver action) — exact by construction,
-single scan of the input, no imperative aggregate anywhere in the plan.
-See `exact_quantile_by_group` for the full design.
+Spark's exact `percentile` aggregate buffers a value→count hash map PER
+MAP TASK (2.4M mostly-distinct doubles OOM'd a plain 1 GiB session), and
+a row_number over a global window funnels every row through ONE sort
+task; both concentrate the full value set in one place. The selection
+here is pure codegen relational algebra instead: a data-independent
+histogram brackets the target ranks, and only the rows inside the
+bracket are tie-collapsed and ranked. See `exact_quantile_by_group`.
 """
 
 from __future__ import annotations
@@ -34,14 +17,7 @@ from pyspark.sql import functions as F
 
 
 def exact_median_1row(
-    df: DataFrame,
-    col: str,
-    out: str,
-    *,
-    buckets: int = 1024,
-    max_sort_rows: int = 100_000,
-    persist_input: bool = True,
-    accuracy: int = 10_000,
+    df: DataFrame, col: str, out: str, *, persist_input: bool = True
 ) -> DataFrame:
     """1-row frame (<out>,) holding the exact median of `df[col]`.
 
@@ -50,41 +26,21 @@ def exact_median_1row(
     only output column, so callers can crossJoin it as a scalar (the
     repo's provable-1-row broadcast pattern).
 
-    Since round 13 this is the constant-group case of
-    `exact_quantile_by_group` (see that docstring for the
-    exponent-histogram bracketed selection and its lineage). The result interpolation (lo + frac*(hi - lo), frac =
-    0.5) matches DuckDB's quantile_cont(0.5) within 1 ulp of the old
-    (lo + hi)/2 form; both land inside every oracle's round()/isclose
-    envelope. Since r14 the selection is LAZY (a scoped-persist leaf —
-    it runs inside the first consuming action and is shared by every
-    later one); the returned frame is that leaf plus a 1-row left join.
+    This is the one-group case of `exact_quantile_by_group` at p = 0.5;
+    its interpolation lo + 0.5·(hi − lo) matches DuckDB's
+    quantile_cont(0.5). The selection is LAZY (a scoped-persist leaf — it
+    runs inside the first consuming action and is shared by every later
+    one).
     """
-    base = df.select(F.lit(1).alias("__one"), F.col(col).alias("__m_in"))
     med = exact_quantile_by_group(
-        base,
-        ["__one"],
-        "__m_in",
-        out,
-        p=0.5,
-        accuracy=accuracy,
-        buckets=buckets,
-        max_sort_rows=max_sort_rows,
-        persist_input=persist_input,
+        df, [], col, out, p=0.5, persist_input=persist_input
     )
-    # grouped semantics drop empty/all-NULL input entirely; re-anchor on a
-    # literal 1-row frame so the scalar contract (always exactly 1 row,
-    # NULL when undefined) survives. The final keys=[] aggregate matters:
-    # it makes the result PROVABLY one row again (the checkpoint leaf
-    # underneath has no such guarantee in its plan), so callers may
-    # crossJoin it as a scalar without the plan advisor's
-    # cartesian-product gate firing — the physical cost is a first() over
-    # a single cached row.
-    one = df.sparkSession.range(1).select(F.lit(1).alias("__one"))
-    return (
-        one.join(med, "__one", "left")
-        .agg(F.first(F.col(out).cast("double")).alias(out))
-    )
-
+    # the grouped selection yields no row for empty/all-NULL input; a
+    # keys=[] aggregate restores the scalar contract (always exactly one
+    # row, NULL when undefined) and makes the result PROVABLY one row, so
+    # callers may crossJoin it without the plan advisor's
+    # cartesian-product gate firing
+    return med.agg(F.first(F.col(out).cast("double")).alias(out))
 
 
 def exact_quantile_by_group(
@@ -94,85 +50,51 @@ def exact_quantile_by_group(
     out: str,
     *,
     p: float = 0.5,
-    accuracy: int = 10_000,
-    buckets: int | None = None,
-    max_sort_rows: int | None = None,
     persist_input: bool = False,
 ) -> DataFrame:
     """Per-group EXACT continuous quantile — DuckDB `quantile_cont(col, p)
-    GROUP BY keys` semantics — in three codegen passes, with no per-group
-    sort of raw rows, no value-map aggregate, and (since round 14) no
+    GROUP BY keys` semantics — in two codegen passes over the input, with
+    no per-group sort of raw rows, no value-map aggregate and no
     imperative sketch aggregate anywhere in the plan.
 
-    Why not the predecessors:
-    - one-shot range histogram (r12): [min, max] equi-width bucketing
-      collapses under heavy tails — 81% of Theil–Sen's 2.9M slopes landed
-      in ONE of 1024 cells, silently restoring the single-task
-      multimillion-row sort;
-    - GK sketch bracket (r13): correct and deterministic, but
-      `percentile_approx` is an imperative (non-codegen) aggregate whose
-      per-row update cost was the measured wall floor (~1.4 s over the
-      2.9M-row slope set, nearly independent of `accuracy`);
-    - full tie-collapsed distributed rank (tried first in r14): exact and
-      driver-free, but on a mostly-distinct column "cells" ≈ rows, so the
-      proxy set itself had to be cached, range-shuffled, sorted and
-      windowed at data size — measured SLOWER than the GK floor it
-      replaced (Theil–Sen 3.4 → 5.3 s). Rejected.
-
-    The selection here brackets the target rank with a FIXED-ROUND
-    counted histogram — every pass an ordinary codegen hash aggregate —
-    then resolves the exact order statistics from tie-collapsed cells
-    inside the bracket (the r13 band machinery, unchanged):
-
-    1. round 1 — EXPONENT buckets: b = sign·(2048 + floor(log2|v|)), a
-       data-independent, deterministic, monotone partition of the double
-       line (≈6k buckets spanning subnormals to infinities; NaN pinned
-       above +inf to match Spark's NaN-largest ordering). Logarithmic
-       buckets need no prior [min, max] pass and cannot be stretched by
-       outliers — a heavy tail lands in its own magnitude buckets, which
-       is exactly where the r12 equi-width form collapsed. One
-       groupBy(group, bucket).agg(count, min, max) plus a ≤6k-cell
-       per-group window locate the bucket span covering both target
-       ranks ⌊(n−1)p⌋+1 and ⌈(n−1)p⌉+1, the exact count below it, and n
-       itself — all in the same pass.
-    2. round 2 — ONE equi-width split (4096 cells) of the round-1
-       bracket's OBSERVED [lo, hi] (actual data values, so the next
-       filter is exact — the r13 advisory's narrowing rule). The round-1
-       bracket spans at most two adjacent binades, so after this split
-       the bracket width is ≤ ~|lo|·2⁻¹¹: a fixed RELATIVE window no
-       distribution can stretch. Mass concentration inside it costs
-       band CELLS (ties collapse), never correctness.
-    3. band selection (r13, verbatim): rows in [lo, hi] tie-collapse to
-       (value, count) cells, below-band rows to one counter cell per
-       group; a cumulative window over the cells locates the two order
-       statistics, and the result interpolates lo + frac·(hi − lo) with
-       frac = (n−1)p − ⌊(n−1)p⌋ — DuckDB quantile_cont's exact formula,
-       bit-identical to the r12/r13 paths.
+    1. bracket — sign/exponent/mantissa buckets (see the bucket expression
+       below): a data-independent, deterministic, MONOTONE partition of
+       the double line. Logarithmic-relative buckets need no prior
+       [min, max] pass and cannot be stretched by outliers — a heavy tail
+       lands in its own magnitude buckets. One groupBy(group, bucket)
+       .agg(count, min, max) plus a per-group cumulative window locate the
+       bucket span covering both target ranks ⌊(n−1)p⌋+1 and ⌈(n−1)p⌉+1,
+       its OBSERVED value bounds [a, b], and n itself.
+    2. band selection — rows in [a, b] tie-collapse to (value, count)
+       cells, below-band rows to one counter cell per group, above-band
+       rows are dropped; a cumulative window over the cells locates the
+       two order statistics, and the result interpolates
+       lo + frac·(hi − lo) with frac = (n−1)p − ⌊(n−1)p⌋ — DuckDB
+       quantile_cont's exact formula. Mass concentration inside the
+       bracket costs band CELLS (ties collapse), never correctness.
 
     A malfunctioning bracket cannot produce a silently wrong answer: the
     final projection runs through `assert_true(both stats found)`, so a
-    coverage miss fails the job loudly. `accuracy`, `buckets` and
-    `max_sort_rows` are accepted for call-site compatibility with the
-    retired forms and ignored. `persist_input` persists the (group,
-    value)-projected input once for the three passes — leave it False
-    when regenerating the input is cheaper than caching it (the r13
-    measurement on Theil–Sen's slope set still holds: three cheap
-    regenerations beat one 2.9M-row cache write).
+    coverage miss fails the job loudly. `persist_input` persists the
+    (group, value)-projected input once for the two passes — leave it
+    False when regenerating the input is cheaper than caching it
+    (Theil–Sen's slope set: two cheap regenerations beat one 2.9M-row
+    cache write).
 
     Group keys ride inside a packed struct so NULL key values keep SQL
     GROUP BY semantics through the internal joins (struct equality is
-    null-safe per field). Result: `keys + [out]`, one row per group with
-    >= 1 non-NULL value; no qualifying groups → empty frame. The frame
-    is returned as a LAZY scoped-persist leaf — group-sized by
-    construction — so callers weave it into bigger plans without
-    re-running the selection (the cache materializes inline in their
-    first action and is shared by later ones), and nested calls
-    (Theil–Sen feeds one median's output into another's input) stay
-    ~10 plan nodes instead of compounding.
+    null-safe per field). `keys=[]` treats the whole input as one group.
+    Result: `keys + [out]`, one row per group with >= 1 non-NULL value; no
+    qualifying groups → empty frame. The frame is returned as a LAZY
+    scoped-persist leaf — group-sized by construction — so callers weave
+    it into bigger plans without re-running the selection (the cache
+    materializes inline in their first action and is shared by later
+    ones), and nested calls (Theil–Sen feeds one median's output into
+    another's input) stay ~10 plan nodes instead of compounding.
 
-    At 100 TB: all three passes are map-side-combined codegen aggregates
-    whose shuffles carry ≤ (groups × ~6k) histogram cells or the band's
-    tie-collapsed cells; the only per-group serial work is the ≤6k-cell
+    At 100 TB: both passes are map-side-combined codegen aggregates whose
+    shuffles carry ≤ (groups × populated buckets) histogram cells or the
+    band's tie-collapsed cells; the only per-group serial work is the
     histogram windows and the final band-cell window.
     """
     if not 0.0 <= p <= 1.0:
@@ -180,7 +102,7 @@ def exact_quantile_by_group(
     from sri_spark.operators.caching import scoped_persist
 
     vals = df.filter(F.col(col).isNotNull()).select(
-        F.struct(*[F.col(k) for k in keys]).alias("__g"),
+        (F.struct(*[F.col(k) for k in keys]) if keys else F.lit(0)).alias("__g"),
         F.col(col).cast("double").alias("__v"),
     )
     if persist_input:
@@ -199,11 +121,9 @@ def exact_quantile_by_group(
     # deterministic, MONOTONE partition of the double line into ≤ ~1.57M
     # possible buckets (6k binades × 256 mantissa slices per sign), of
     # which only populated ones materialize. Logarithmic-relative buckets
-    # need no prior [min, max] pass and cannot be stretched by outliers
-    # (the r12 equi-width collapse was an ABSOLUTE-width artifact: its
-    # 21k-wide bucket at range ±11M is 2^-8-RELATIVE here, i.e. the
-    # bracket narrows to values agreeing with the target through 8
-    # significand bits). FP rounding at binade edges can push a bucket
+    # need no prior [min, max] pass and cannot be stretched by outliers:
+    # every bucket is 2^-8-RELATIVE wide, so the bracket narrows to values
+    # agreeing with the target through 8 significand bits. FP rounding at binade edges can push a bucket
     # index ±1 — harmless: the mapping stays non-decreasing, which is the
     # only property the rank arithmetic uses, and the bracket's [a, b]
     # are OBSERVED data values. ±inf and NaN take sentinel buckets beyond
@@ -244,22 +164,25 @@ def exact_quantile_by_group(
     # the bracket is the (≤2-bucket) span covering [lo_rank, hi_rank],
     # with [a, b] its observed value bounds — n falls out of the same
     # pass, so the histogram scan and the band scan below are the ONLY
-    # passes over the input (same count as the retired GK form, with
-    # every operator codegen)
-    g = (
-        h1.filter(
-            (F.col("__start") < hi_rank)
-            & ((F.col("__start") + F.col("__cnt")) >= lo_rank)
-        )
-        .groupBy("__g")
-        .agg(
-            F.first("__n").alias("__n"),
-            F.min("__mn").alias("__a"),
-            F.max("__mx").alias("__b"),
-        )
+    # passes over the input
+    span = h1.filter(
+        (F.col("__start") < hi_rank)
+        & ((F.col("__start") + F.col("__cnt")) >= lo_rank)
     )
+    bounds = (
+        F.first("__n").alias("__n"),
+        F.min("__mn").alias("__a"),
+        F.max("__mx").alias("__b"),
+    )
+    if keys:
+        tagged = vals.join(span.groupBy("__g").agg(*bounds), "__g")
+    else:
+        # one group: joining on the constant key would constant-fold into
+        # a CartesianProduct; a keys=[] aggregate is provably one row, so
+        # it crossJoins as a broadcast scalar instead
+        tagged = vals.crossJoin(span.agg(*bounds))
 
-    # band selection in ONE scan (r13, verbatim): tag each row
+    # band selection in ONE scan: tag each row
     # below(-1)/inside(0)/above(+1) the group's bracket and collapse to
     # (tag, value) cells, keeping only in-band values — below-band rows
     # merge into a single counter cell per group (their values don't
@@ -269,8 +192,7 @@ def exact_quantile_by_group(
         F.col("__v") > F.col("__b"), F.lit(1)
     ).otherwise(F.lit(0))
     cells_all = (
-        vals.join(g, "__g")
-        .select(
+        tagged.select(
             "__g",
             "__n",
             tag.alias("__t"),
@@ -334,17 +256,15 @@ def exact_quantile_by_group(
             + (h - F.floor(h)) * (F.col("__vhi") - F.col("__vlo")),
         ).alias(out),
     )
-    # LAZY materialization (r14): scoped_persist bounds nested callers'
-    # plans with an InMemoryRelation leaf exactly like the old eager
-    # localCheckpoint did, but the selection now FUSES into the caller's
-    # action instead of paying its own build-time job — the caches
-    # materialize inline on first read (the r13 PCA lesson), twin calls
-    # over the same input share their histogram exchanges via
-    # ReuseExchange, and builders become action-free here.
+    # LAZY materialization: scoped_persist bounds nested callers' plans
+    # with an InMemoryRelation leaf, and the selection FUSES into the
+    # caller's action instead of paying its own build-time job — the
+    # caches materialize inline on first read, twin calls over the same
+    # input share their histogram exchanges via ReuseExchange, and
+    # builders stay action-free.
     return scoped_persist(
         guarded.select(*[F.col(f"__g.{k}").alias(k) for k in keys], out)
     )
-
 
 
 def weighted_quantile_by_group(

@@ -16,6 +16,10 @@ Batch usage:
 
 Streaming: the same `observe` call surfaces per-micro-batch metrics in
 `StreamingQueryProgress.observedMetrics` — one definition, both runtimes.
+
+`codegen_compiles` reads the JVM's generated-code compile counters, so a
+caller can diff them around a run and see whether it recompiled classes
+the session had already compiled (see session.py's codegen cache cap).
 """
 
 from __future__ import annotations
@@ -36,3 +40,19 @@ def observed(
         raise ValueError("observed() needs at least one metric column")
     obs = Observation(name)
     return obs, df.observe(obs, *[c.alias(n) for n, c in metrics.items()])
+
+
+def codegen_compiles(spark) -> dict[str, int]:
+    """JVM-wide generated-code compile counters since the JVM started:
+    {"compiles": Janino compilations, "classes": class files they produced}.
+
+    Diff two readings to count what a run compiled; a warm run whose
+    plans the codegen cache still holds reads 0. The counters are
+    process-wide: in local mode the driver and the executors share one
+    JVM, so the count covers both. On a cluster it covers the driver only.
+    """
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return {
+        "compiles": int(metrics.METRIC_COMPILATION_TIME().getCount()),
+        "classes": int(metrics.METRIC_GENERATED_CLASS_BYTECODE_SIZE().getCount()),
+    }

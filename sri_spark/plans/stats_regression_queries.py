@@ -988,10 +988,9 @@ def stats_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     median slope when the intercept residuals are formed.
 
     Cross-engine determinism AND memory safety: medians come from
-    operators/median.py::exact_median_1row — a single-scan tie-collapse
-    plus a range-partitioned distributed exact rank over the collapsed
-    (value, count) cells (r14) — whose result is bit-identical to
-    DuckDB's quantile_cont(0.5) interpolation. Spark's exact `percentile` aggregate is deliberately
+    operators/median.py::exact_median_1row — a codegen histogram bracket
+    plus a tie-collapsed band selection — whose result is bit-identical
+    to DuckDB's quantile_cont(0.5) interpolation. Spark's exact `percentile` aggregate is deliberately
     NOT used (its per-task value→count hash map OOM'd the plain 1 GiB
     driver-contract session on 2.4M mostly-distinct slopes), and neither
     is a global row_number window (one sort task holding every row — the
@@ -1050,14 +1049,7 @@ def stats_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sri_spark.operators.median import exact_median_1row
 
-    # r14: the median operator is now a single-scan codegen selection
-    # (tie-collapse + distributed two-phase rank — operators/median.py),
-    # so the slope set is generated ONCE per median instead of twice and
-    # the r13 GK-sketch wall floor (~1.4 s of imperative aggregate over
-    # the 2.9M rows) is gone; `accuracy` is accepted-and-ignored
-    m = exact_median_1row(
-        slopes, "slope", "m_slope", persist_input=False, accuracy=1000
-    )
+    m = exact_median_1row(slopes, "slope", "m_slope", persist_input=False)
     icpt = exact_median_1row(
         daily.crossJoin(m).select(
             (F.col("rev") - F.col("m_slope") * F.col("x")).alias("resid")

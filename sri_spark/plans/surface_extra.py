@@ -77,12 +77,11 @@ def agg_group_scalable_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     8). `agg_percentiles` above uses Spark's built-in exact `percentile`,
     whose per-task value→count map OOMs on high-distinct columns (it
     OOM'd a 1 GiB session at 2.4M distinct doubles, round 12); this
-    operator answers the same question in one codegen pass over the raw
-    rows (tie-collapse to (group, value, count) cells) plus a narrow
-    range-partitioned distributed rank over the cells, so it survives
-    columns whose per-group distinct count is data-sized — no per-task
-    value map, no imperative sketch aggregate (r14). Same quantile_cont
-    oracle."""
+    operator answers the same question with a codegen histogram bracket
+    over the raw rows plus a tie-collapsed band selection inside it, so
+    it survives columns whose per-group distinct count is data-sized — no
+    per-task value map, no imperative sketch aggregate. Same
+    quantile_cont oracle."""
     from sri_spark.operators.median import exact_quantile_by_group
 
     orders = load_table(spark, sf_dir, "orders").select(

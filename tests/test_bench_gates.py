@@ -347,6 +347,38 @@ def test_median_point_defaults_unchanged_without_env(monkeypatch):
     assert calls == ["a", "a", "b", "a", "b", "a", "b"]
 
 
+def test_compile_ledger_books_every_timed_repeat(monkeypatch):
+    """Each timed execution books the compile-count delta under
+    "<block>.<point>"; warm-ups stay off the ledger, and an unarmed
+    ledger (no probe) records nothing."""
+    import bench
+
+    monkeypatch.delenv("SPARK_GRAFT_REPLAY_REPEATS", raising=False)
+    ledger = bench._CompileLedger()
+    monkeypatch.setattr(bench, "_LEDGER", ledger)
+    bench._median_point(lambda: None, warmup=True, repeats=3)
+    assert ledger.log == {}
+
+    compiled = [0]
+    ledger.probe = lambda: compiled[0]
+
+    def cold_once():  # compiles 5 classes on its first call only
+        compiled[0] += 5 if compiled[0] == 0 else 0
+
+    ledger.start_block("fam")
+    bench._median_point(cold_once, warmup=False, repeats=3)
+    bench._interleaved_medians(
+        {"one_x": lambda: None, ("ten_x", "win"): lambda: None},
+        repeats=2,
+        warmup_keys=("one_x",),
+    )
+    assert ledger.log == {
+        "fam.point1": [5, 0, 0],
+        "fam.one_x": [0, 0],
+        "fam.ten_x.win": [0, 0],
+    }
+
+
 def test_compact_final_line_fits_driver_tail_window():
     """Round-12 verdict item 1: the driver tail-captures the last 2,000
     chars of stdout, so the final bench line must stay under budget or

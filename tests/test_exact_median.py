@@ -12,12 +12,12 @@ import pytest
 from sri_spark.operators.median import exact_median_1row
 
 
-def _med(spark, values, buckets=1024):
+def _med(spark, values):
     df = spark.createDataFrame([(float(v),) if v is not None else (None,)
                                 for v in values] or [(None,)], "v double")
     if not values:
         df = df.limit(0)
-    return exact_median_1row(df, "v", "med", buckets=buckets).first()["med"]
+    return exact_median_1row(df, "v", "med").first()["med"]
 
 
 def test_median_matches_numpy_on_random_data(spark):
@@ -51,17 +51,15 @@ def test_median_ignores_nulls_and_handles_empty(spark):
     assert _med(spark, []) is None
 
 
-def test_median_tiny_bucket_count_still_exact(spark):
-    # buckets=2 forces multi-row buckets and the cross-bucket position
-    # bookkeeping; the result must not depend on the bucket count
+def test_median_values_straddling_zero(spark):
+    # negative, zero and positive values land in sign-mirrored histogram
+    # buckets; the bracket's rank bookkeeping must cross the sign boundary
     rng = np.random.default_rng(7)
     vals = rng.uniform(-5, 5, size=200).round(4).tolist()
-    assert _med(spark, vals, buckets=2) == pytest.approx(
-        float(np.median(vals)), abs=1e-12
-    )
-    assert _med(spark, vals, buckets=3) == pytest.approx(
-        float(np.median(vals)), abs=1e-12
-    )
+    assert _med(spark, vals) == pytest.approx(float(np.median(vals)), abs=1e-12)
+    vals = [-3.0, -1.0, 0.0, 0.0, 2.0, 4.0]
+    assert _med(spark, vals) == 0.0
+    assert _med(spark, [-2.0, 6.0]) == 2.0
 
 
 # ---------------------------------------------------------------------------

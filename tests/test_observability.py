@@ -82,3 +82,26 @@ def test_observe_metrics_in_streaming_progress(spark, sf_dir, tmp_path):
     from sri_spark.sources.testdata import load_table
 
     assert total_rows == load_table(spark, sf_dir, "events").count()
+
+
+def test_codegen_compiles_counts_new_code_once(spark):
+    """A plan with code the JVM has not generated before compiles at least
+    one class; rerunning it hits the codegen cache and compiles none."""
+    import time
+
+    from sri_spark.operators.observability import codegen_compiles
+
+    # a literal unique to this run makes the generated source new
+    salt = time.time_ns() % 1_000_000_007
+    df = spark.range(100).selectExpr(f"id * {salt} + 3 AS x").groupBy(
+        F.col("x") % 7
+    ).count()
+
+    before = codegen_compiles(spark)
+    df.collect()
+    cold = codegen_compiles(spark)
+    df.collect()
+    warm = codegen_compiles(spark)
+    assert cold["compiles"] > before["compiles"]
+    assert cold["classes"] - before["classes"] >= cold["compiles"] - before["compiles"]
+    assert warm == cold

@@ -483,14 +483,6 @@ BOUNDED_BY_CONSTRUCTION_BNLJ = {
     # exempted by name in test_tpch_shapes_no_cartesian
     "tpch_q11_important_stock",
     "tpch_q15_top_supplier",
-    # r12: operators/median.py::exact_median_1row crossJoins its 1-row
-    # (min, max, n) scalar aggregate at THREE points (bucketing, target
-    # selection, final projection); Spark plans the repeats as
-    # ReusedExchange over the first broadcast, and the 1-row prover
-    # deliberately fails closed on ReusedExchange. Every build side here
-    # is a keys=[] global aggregate by construction — the benign scalar
-    # pattern, just reused.
-    "stats_theil_sen_trend",
 }
 
 
