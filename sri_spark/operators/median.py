@@ -1,19 +1,29 @@
-"""Distributed EXACT quantiles (DuckDB quantile_cont semantics) without
-a global sort, a per-group sort of raw rows, or a value-map aggregate.
+"""Distributed EXACT quantiles without a global sort, a per-group sort of
+raw rows, or a value-map aggregate.
 
 Spark's exact `percentile` aggregate buffers a value→count hash map PER
 MAP TASK (2.4M mostly-distinct doubles OOM'd a plain 1 GiB session), and
 a row_number over a global window funnels every row through ONE sort
 task; both concentrate the full value set in one place. The selection
-here is pure codegen relational algebra instead: a data-independent
-histogram brackets the target ranks, and only the rows inside the
-bracket are tie-collapsed and ranked. See `exact_quantile_by_group`.
+here is pure codegen relational algebra instead, one engine for both
+public quantiles: a data-independent histogram brackets the target rank
+(`_bracket`), only the rows inside the bracket are tie-collapsed and
+ranked (`_band`), and a finale reads the answer off the band's
+cumulative mass —
+
+- `exact_quantile_by_group`: mass is the row count, and the finale
+  interpolates the two order statistics DuckDB quantile_cont blends;
+- `weighted_quantile_by_group`: mass is the decimal weight sum, and the
+  finale takes the inverted CDF (the smallest value whose cumulative
+  weight reaches p·W).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from sri_spark.operators.caching import scoped_persist
 
 
 def exact_median_1row(
@@ -57,21 +67,16 @@ def exact_quantile_by_group(
     no per-group sort of raw rows, no value-map aggregate and no
     imperative sketch aggregate anywhere in the plan.
 
-    1. bracket — sign/exponent/mantissa buckets (see the bucket expression
-       below): a data-independent, deterministic, MONOTONE partition of
-       the double line. Logarithmic-relative buckets need no prior
-       [min, max] pass and cannot be stretched by outliers — a heavy tail
-       lands in its own magnitude buckets. One groupBy(group, bucket)
-       .agg(count, min, max) plus a per-group cumulative window locate the
-       bucket span covering both target ranks ⌊(n−1)p⌋+1 and ⌈(n−1)p⌉+1,
-       its OBSERVED value bounds [a, b], and n itself.
-    2. band selection — rows in [a, b] tie-collapse to (value, count)
-       cells, below-band rows to one counter cell per group, above-band
-       rows are dropped; a cumulative window over the cells locates the
-       two order statistics, and the result interpolates
-       lo + frac·(hi − lo) with frac = (n−1)p − ⌊(n−1)p⌋ — DuckDB
-       quantile_cont's exact formula. Mass concentration inside the
-       bracket costs band CELLS (ties collapse), never correctness.
+    1. bracket (`_bracket`, mass = row count) — the ≤2-bucket span
+       covering both target ranks ⌊(n−1)p⌋+1 and ⌈(n−1)p⌉+1, its
+       OBSERVED value bounds [a, b], n itself, and the rank count below
+       the span.
+    2. band (`_band`) — rows in [a, b] tie-collapse to (value, count)
+       cells; one cumulative window over the cells, offset by the count
+       below the span, locates the two order statistics, and the result
+       interpolates lo + frac·(hi − lo) with frac = (n−1)p − ⌊(n−1)p⌋ —
+       DuckDB quantile_cont's exact formula. Mass concentration inside
+       the bracket costs band CELLS (ties collapse), never correctness.
 
     A malfunctioning bracket cannot produce a silently wrong answer: the
     final projection runs through `assert_true(both stats found)`, so a
@@ -99,148 +104,34 @@ def exact_quantile_by_group(
     """
     if not 0.0 <= p <= 1.0:
         raise ValueError(f"quantile p must be in [0,1], got {p}")
-    from sri_spark.operators.caching import scoped_persist
+    vals = _grouped_values(df, keys, col, None, persist_input)
 
-    vals = df.filter(F.col(col).isNotNull()).select(
-        (F.struct(*[F.col(k) for k in keys]) if keys else F.lit(0)).alias("__g"),
-        F.col(col).cast("double").alias("__v"),
-    )
-    if persist_input:
-        vals = scoped_persist(vals)
-
-    v = F.col("__v")
     # continuous-quantile anchor: h = (n-1)*p (0-based); target 1-based
     # ranks floor(h)+1 and ceil(h)+1, blended by frac = h - floor(h)
-    h = (F.col("__n") - F.lit(1)).cast("double") * F.lit(float(p))
+    h = (F.col("__total") - F.lit(1)).cast("double") * F.lit(float(p))
     lo_rank = (F.floor(h) + F.lit(1)).cast("long")
     hi_rank = (F.ceil(h) + F.lit(1)).cast("long")
 
-    # ONE bracket pass — sign/exponent/mantissa buckets:
-    #   b = sign · ((2048 + floor(log2|v|)) · 256 + floor((m − 1) · 256)),
-    # m = |v| / 2^floor(log2|v|) ∈ [1, 2) — a data-independent,
-    # deterministic, MONOTONE partition of the double line into ≤ ~1.57M
-    # possible buckets (6k binades × 256 mantissa slices per sign), of
-    # which only populated ones materialize. Logarithmic-relative buckets
-    # need no prior [min, max] pass and cannot be stretched by outliers:
-    # every bucket is 2^-8-RELATIVE wide, so the bracket narrows to values
-    # agreeing with the target through 8 significand bits. FP rounding at binade edges can push a bucket
-    # index ±1 — harmless: the mapping stays non-decreasing, which is the
-    # only property the rank arithmetic uses, and the bracket's [a, b]
-    # are OBSERVED data values. ±inf and NaN take sentinel buckets beyond
-    # every finite one (NaN above +inf: Spark orders NaN largest).
-    sentinel = 10_000_000
-    exp = F.floor(F.log2(F.abs(v)))
-    mant = F.abs(v) / F.pow(F.lit(2.0), exp)  # division: subnormal-safe
-    mag = (F.lit(2048.0) + exp) * F.lit(256.0) + F.floor(
-        (mant - F.lit(1.0)) * F.lit(256.0)
-    )
-    bucket = (
-        F.when(F.isnan(v), F.lit(sentinel + 1))
-        .when(v == F.lit(float("inf")), F.lit(sentinel))
-        .when(v == F.lit(float("-inf")), F.lit(-sentinel))
-        .when(v == F.lit(0.0), F.lit(0))
-        .otherwise((F.signum(v) * mag).cast("long"))
-    )
-
-    w_cum = (
-        Window.partitionBy("__g")
-        .orderBy("__bk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    h1 = (
-        vals.select("__g", "__v", bucket.alias("__bk"))
-        .groupBy("__g", "__bk")
-        .agg(
-            F.count("*").alias("__cnt"),
-            F.min("__v").alias("__mn"),
-            F.max("__v").alias("__mx"),
-        )
-        .withColumn("__n", F.sum("__cnt").over(Window.partitionBy("__g")))
-        .withColumn(
-            "__start", F.coalesce(F.sum("__cnt").over(w_cum), F.lit(0))
-        )
-    )
-    # a bucket covers global 1-based ranks (__start, __start + __cnt];
-    # the bracket is the (≤2-bucket) span covering [lo_rank, hi_rank],
-    # with [a, b] its observed value bounds — n falls out of the same
-    # pass, so the histogram scan and the band scan below are the ONLY
-    # passes over the input
-    span = h1.filter(
+    # a bucket covers 1-based ranks (__start, __start + __m]; the span is
+    # the (≤2-bucket) run covering [lo_rank, hi_rank]
+    hist = _bracket(vals, F.count("*"))
+    span = hist.filter(
         (F.col("__start") < hi_rank)
-        & ((F.col("__start") + F.col("__cnt")) >= lo_rank)
+        & ((F.col("__start") + F.col("__m")) >= lo_rank)
     )
-    bounds = (
-        F.first("__n").alias("__n"),
-        F.min("__mn").alias("__a"),
-        F.max("__mx").alias("__b"),
-    )
-    if keys:
-        tagged = vals.join(span.groupBy("__g").agg(*bounds), "__g")
-    else:
-        # one group: joining on the constant key would constant-fold into
-        # a CartesianProduct; a keys=[] aggregate is provably one row, so
-        # it crossJoins as a broadcast scalar instead
-        tagged = vals.crossJoin(span.agg(*bounds))
+    cells = _band(vals, span, keys, F.count("*"))
 
-    # band selection in ONE scan: tag each row
-    # below(-1)/inside(0)/above(+1) the group's bracket and collapse to
-    # (tag, value) cells, keeping only in-band values — below-band rows
-    # merge into a single counter cell per group (their values don't
-    # matter, only how many rank positions they occupy), above-band rows
-    # are dropped at the aggregate.
-    tag = F.when(F.col("__v") < F.col("__a"), F.lit(-1)).when(
-        F.col("__v") > F.col("__b"), F.lit(1)
-    ).otherwise(F.lit(0))
-    cells_all = (
-        tagged.select(
-            "__g",
-            "__n",
-            tag.alias("__t"),
-            F.when(tag == 0, F.col("__v")).alias("__cv"),
+    # a cell covers 1-based ranks (__cum - __m, __cum]
+    def value_at(rank: Column) -> Column:
+        covers = (F.col("__cum") - F.col("__m") < rank) & (
+            rank <= F.col("__cum")
         )
-        .filter(F.col("__t") <= 0)
-        .groupBy("__g", "__t", "__cv")
-        .agg(F.count("*").alias("__c"), F.first("__n").alias("__n"))
-    )
-    wg = Window.partitionBy("__g")
-    win = (
-        Window.partitionBy("__g")
-        .orderBy("__cv")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    positioned = (
-        cells_all.withColumn(
-            "__below",
-            F.coalesce(
-                F.sum(F.when(F.col("__t") == -1, F.col("__c"))).over(wg),
-                F.lit(0),
-            ),
-        )
-        .filter(F.col("__t") == 0)
-        .withColumn(
-            "__cum_before", F.coalesce(F.sum("__c").over(win), F.lit(0))
-        )
-        .withColumn("__pos_lo", F.col("__below") + F.col("__cum_before"))
-        .withColumn(
-            "__pos_hi", F.col("__below") + F.col("__cum_before") + F.col("__c")
-        )
-        .withColumn("__v", F.col("__cv"))
-    )
-    # a cell covers global 1-based ranks (__pos_lo, __pos_hi]
-    stats = positioned.groupBy("__g").agg(
-        F.max(
-            F.when(
-                (lo_rank > F.col("__pos_lo")) & (lo_rank <= F.col("__pos_hi")),
-                F.col("__v"),
-            )
-        ).alias("__vlo"),
-        F.max(
-            F.when(
-                (hi_rank > F.col("__pos_lo")) & (hi_rank <= F.col("__pos_hi")),
-                F.col("__v"),
-            )
-        ).alias("__vhi"),
-        F.first("__n").alias("__n"),
+        return F.max(F.when(covers, F.col("__v")))
+
+    stats = cells.groupBy("__g").agg(
+        value_at(lo_rank).alias("__vlo"),
+        value_at(hi_rank).alias("__vhi"),
+        F.first("__total").alias("__total"),
     )
     guarded = stats.select(
         "__g",
@@ -256,15 +147,7 @@ def exact_quantile_by_group(
             + (h - F.floor(h)) * (F.col("__vhi") - F.col("__vlo")),
         ).alias(out),
     )
-    # LAZY materialization: scoped_persist bounds nested callers' plans
-    # with an InMemoryRelation leaf, and the selection FUSES into the
-    # caller's action instead of paying its own build-time job — the
-    # caches materialize inline on first read, twin calls over the same
-    # input share their histogram exchanges via ReuseExchange, and
-    # builders stay action-free.
-    return scoped_persist(
-        guarded.select(*[F.col(f"__g.{k}").alias(k) for k in keys], out)
-    )
+    return _lazy_leaf(guarded, keys, out)
 
 
 def weighted_quantile_by_group(
@@ -275,9 +158,6 @@ def weighted_quantile_by_group(
     out: str,
     *,
     p: float = 0.5,
-    buckets: int = 1024,
-    max_cell_values: int = 100_000,
-    max_rounds: int = 12,
     persist_input: bool = True,
 ) -> DataFrame:
     """Per-group EXACT WEIGHTED quantile: the smallest value v whose
@@ -286,24 +166,15 @@ def weighted_quantile_by_group(
     weights; the weighted median at p=0.5). Rows with NULL value, NULL
     weight, or weight <= 0 are ignored.
 
-    Weighted ranks have no GK sketch (percentile_approx is frequency-1
-    only), so this uses the ITERATIVE range-narrowing selection: each
-    round buckets the in-range rows of every unresolved group into
-    `buckets` value-range cells, aggregates each cell's weight, exact
-    [min, max] and an approx distinct-value count, locates the target
-    cell with a cumulative-weight window (cell-sized, <= `buckets` rows
-    per group), and narrows to that cell's observed [min, max] — so an
-    outlier-stretched or heavy-tailed distribution re-buckets against
-    its own sub-range instead of degenerating (the round-13 advisory
-    fix, applied here from birth). A cell that collapses to one value
-    (min == max) IS the answer regardless of its weight — billion-row
-    tie runs resolve without any sort. The loop is driver-paced
-    (bounded 1-row probes, like dedup/components.py's convergence
-    check) and exits once every unresolved cell holds <= `max_cell_values`
-    distinct values (approx count — a sizing heuristic only, never a
-    correctness input); the finale tie-collapses those cells to
-    (value, weight) rows and takes the first value whose running weight
-    crosses the target. `max_rounds` overruns raise loudly.
+    The same two passes as `exact_quantile_by_group`, with the row count
+    swapped for the weight sum: the bracket (`_bracket`) locates the one
+    bucket whose cumulative weight first reaches t = p·W, and the band
+    (`_band`) tie-collapses its rows to (value, weight) cells, so a
+    billion-row tie run is one cell. The finale takes the smallest value
+    whose cumulative weight (offset by the weight below the bucket)
+    reaches t, behind the same loud `assert_true` guard. No driver round
+    trip, no data-dependent round count: the result is a lazy
+    scoped-persist leaf like the unweighted one.
 
     Cross-engine determinism: weights are summed as decimal(38,6) —
     EXACT, order-independent — so the boundary comparison
@@ -312,161 +183,164 @@ def weighted_quantile_by_group(
     in decimal(12,10) (0.5, 0.25, 0.9, ...), which covers any p a query
     would write literally.
 
-    At 100 TB: every pass is a map-side-combined aggregate; shuffles
-    carry per-cell rows (<= buckets x groups) except the finale's
-    (value, weight) collapse, bounded by max_cell_values per group.
+    At 100 TB: both passes are map-side-combined aggregates; shuffles
+    carry ≤ (groups × populated buckets) histogram cells or one bucket's
+    tie-collapsed (value, weight) cells per group.
     """
     if not 0.0 <= p <= 1.0:
         raise ValueError(f"quantile p must be in [0,1], got {p}")
-    from sri_spark.operators.caching import scoped_persist
+    vals = _grouped_values(df, keys, col, weight_col, persist_input)
 
-    w_dec = F.col(weight_col).cast("decimal(38,6)")
-    vals = (
-        df.filter(
-            F.col(col).isNotNull()
-            & F.col(weight_col).isNotNull()
-            & (F.col(weight_col) > 0)
-        )
-        .select(
-            F.struct(*[F.col(k) for k in keys]).alias("__g"),
-            F.col(col).cast("double").alias("__v"),
-            w_dec.alias("__w"),
-        )
+    t = F.col("__total") * F.lit(p).cast("decimal(12,10)")
+    # weights are > 0, so exactly one bucket has start < t <= start + mass
+    # — except at t = 0 (p = 0), where the first bucket (start = 0) holds
+    # the answer
+    hist = _bracket(vals, F.sum("__w"))
+    span = hist.filter(
+        ((F.col("__start") < t) | (F.col("__start") == 0))
+        & ((F.col("__start") + F.col("__m")) >= t)
     )
-    if persist_input:
-        vals = scoped_persist(vals)
-
-    p_dec = F.lit(p).cast("decimal(12,10)")
-    g0 = vals.groupBy("__g").agg(
-        F.min("__v").alias("__lo"),
-        F.max("__v").alias("__hi"),
-        F.sum("__w").alias("__W"),
-        F.approx_count_distinct("__v").alias("__nd"),
+    cells = _band(vals, span, keys, F.sum("__w"))
+    picked = cells.groupBy("__g").agg(
+        F.min(F.when(F.col("__cum") >= t, F.col("__v"))).alias("__q")
     )
-    state = g0.select(
+    guarded = picked.select(
         "__g",
-        "__lo",
-        "__hi",
-        (F.col("__W") * p_dec).alias("__t"),
-        F.lit(0).cast("decimal(38,6)").alias("__below"),
-        F.when(F.col("__lo") == F.col("__hi"), F.col("__lo"))
-        .when(F.lit(p == 0.0), F.col("__lo"))
-        .alias("__val"),
-        F.col("__nd"),
-    ).localCheckpoint()
-    maxnd = (
-        state.filter(F.col("__val").isNull()).agg(F.max("__nd")).first()[0]
+        F.when(
+            F.assert_true(
+                F.col("__q").isNotNull(),
+                F.lit(
+                    "weighted_quantile_by_group: histogram bracket missed "
+                    "the target weight — bracket invariant broken"
+                ),
+            ).isNull(),
+            F.col("__q"),
+        ).alias(out),
+    )
+    return _lazy_leaf(guarded, keys, out)
+
+
+def _grouped_values(
+    df: DataFrame,
+    keys: list[str],
+    col: str,
+    weight_col: str | None,
+    persist_input: bool,
+) -> DataFrame:
+    """(__g, __v[, __w]) rows that take part in the selection: non-NULL
+    values and, when weighted, non-NULL positive weights as decimal(38,6)
+    (exact, order-independent sums)."""
+    keep = F.col(col).isNotNull()
+    cols = [
+        (F.struct(*[F.col(k) for k in keys]) if keys else F.lit(0)).alias("__g"),
+        F.col(col).cast("double").alias("__v"),
+    ]
+    if weight_col is not None:
+        keep = keep & F.col(weight_col).isNotNull() & (F.col(weight_col) > 0)
+        cols.append(F.col(weight_col).cast("decimal(38,6)").alias("__w"))
+    vals = df.filter(keep).select(*cols)
+    return scoped_persist(vals) if persist_input else vals
+
+
+def _bracket(vals: DataFrame, mass: Column) -> DataFrame:
+    """ONE histogram pass: per (group, bucket) its `mass` (__m), OBSERVED
+    [min, max] (__mn, __mx), the group's total mass (__total) and the mass of
+    all earlier buckets (__start) — so a bucket covers the cumulative
+    mass (__start, __start + __m].
+
+    Sign/exponent/mantissa buckets:
+      b = sign · ((2048 + floor(log2|v|)) · 256 + floor((m − 1) · 256)),
+    m = |v| / 2^floor(log2|v|) ∈ [1, 2) — a data-independent,
+    deterministic, MONOTONE partition of the double line into ≤ ~1.57M
+    possible buckets (6k binades × 256 mantissa slices per sign), of
+    which only populated ones materialize. Logarithmic-relative buckets
+    need no prior [min, max] pass and cannot be stretched by outliers:
+    every bucket is 2^-8-RELATIVE wide, so the bracket narrows to values
+    agreeing with the target through 8 significand bits. FP rounding at
+    binade edges can push a bucket index ±1 — harmless: the mapping
+    stays non-decreasing, which is the only property the mass arithmetic
+    uses, and the bracket's bounds are OBSERVED data values. ±inf and NaN
+    take sentinel buckets beyond every finite one (NaN above +inf: Spark
+    orders NaN largest).
+    """
+    v = F.col("__v")
+    sentinel = 10_000_000
+    exp = F.floor(F.log2(F.abs(v)))
+    mant = F.abs(v) / F.pow(F.lit(2.0), exp)  # division: subnormal-safe
+    mag = (F.lit(2048.0) + exp) * F.lit(256.0) + F.floor(
+        (mant - F.lit(1.0)) * F.lit(256.0)
+    )
+    bucket = (
+        F.when(F.isnan(v), F.lit(sentinel + 1))
+        .when(v == F.lit(float("inf")), F.lit(sentinel))
+        .when(v == F.lit(float("-inf")), F.lit(-sentinel))
+        .when(v == F.lit(0.0), F.lit(0))
+        .otherwise((F.signum(v) * mag).cast("long"))
+    )
+    before = (
+        Window.partitionBy("__g")
+        .orderBy("__bk")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    return (
+        vals.groupBy("__g", bucket.alias("__bk"))
+        .agg(
+            mass.alias("__m"),
+            F.min("__v").alias("__mn"),
+            F.max("__v").alias("__mx"),
+        )
+        .withColumn("__total", F.sum("__m").over(Window.partitionBy("__g")))
+        .withColumn("__start", F.coalesce(F.sum("__m").over(before), F.lit(0)))
     )
 
-    rounds = 0
-    while maxnd is not None and maxnd > max_cell_values:
-        if rounds >= max_rounds:
-            raise RuntimeError(
-                f"weighted_quantile_by_group: a target cell still holds "
-                f"~{maxnd} distinct values after {max_rounds} narrowing "
-                f"rounds (buckets={buckets}, "
-                f"max_cell_values={max_cell_values}) — raise the knobs "
-                "for this distribution"
-            )
-        rounds += 1
-        active = state.filter(F.col("__val").isNull()).drop("__val", "__nd")
-        rows = vals.join(F.broadcast(active), "__g").filter(
-            (F.col("__v") >= F.col("__lo")) & (F.col("__v") <= F.col("__hi"))
-        )
-        span = F.col("__hi") - F.col("__lo")
-        bid = F.greatest(
-            F.lit(0).cast("long"),
-            F.least(
-                F.lit(buckets - 1).cast("long"),
-                F.floor((F.col("__v") - F.col("__lo")) / span * buckets).cast(
-                    "long"
-                ),
-            ),
-        )
-        cells = (
-            rows.select(
-                "__g", "__t", "__below", bid.alias("__b"), "__v", "__w"
-            )
-            .groupBy("__g", "__t", "__below", "__b")
-            .agg(
-                F.sum("__w").alias("__cw"),
-                F.min("__v").alias("__cmn"),
-                F.max("__v").alias("__cmx"),
-                F.approx_count_distinct("__v").alias("__nd"),
-            )
-        )
-        win = (
-            Window.partitionBy("__g")
-            .orderBy("__b")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        end_cum = F.col("__below") + F.col("__cum_before") + F.col("__cw")
-        start_cum = F.col("__below") + F.col("__cum_before")
-        narrowed = (
-            cells.withColumn(
-                "__cum_before",
-                F.coalesce(
-                    F.sum("__cw").over(win), F.lit(0).cast("decimal(38,6)")
-                ),
-            )
-            # first cell whose END cumulative weight reaches the target
-            # (start < t <= end); p == 0 resolved at init, so t > 0 here
-            .filter((start_cum < F.col("__t")) & (F.col("__t") <= end_cum))
-            .select(
-                "__g",
-                F.col("__cmn").alias("__lo"),
-                F.col("__cmx").alias("__hi"),
-                "__t",
-                start_cum.alias("__below"),
-                F.when(F.col("__cmn") == F.col("__cmx"), F.col("__cmn")).alias(
-                    "__val"
-                ),
-                F.col("__nd"),
-            )
-        )
-        new_state = (
-            state.filter(F.col("__val").isNotNull())
-            .unionByName(narrowed)
-            .localCheckpoint()
-        )
-        maxnd = (
-            new_state.filter(F.col("__val").isNull())
-            .agg(F.max("__nd"))
-            .first()[0]
-        )
-        state.unpersist()
-        state = new_state
 
-    unresolved = state.filter(F.col("__val").isNull()).drop("__val", "__nd")
-    finale_cells = (
-        vals.join(F.broadcast(unresolved), "__g")
-        .filter(
-            (F.col("__v") >= F.col("__lo")) & (F.col("__v") <= F.col("__hi"))
-        )
-        .groupBy("__g", "__t", "__below", "__v")
-        .agg(F.sum("__w").alias("__cw"))
+def _band(
+    vals: DataFrame, span: DataFrame, keys: list[str], mass: Column
+) -> DataFrame:
+    """ONE band pass: the rows whose value lies in the span's observed
+    [a, b], tie-collapsed to (value, mass) cells, each with __cum — the
+    cumulative mass through the cell, counted from the group's smallest
+    value — plus the group's total mass __total.
+
+    The bucket map is non-decreasing, so every row below a sits in a
+    bucket before the span: the mass below the band is the span's first
+    __start, known from the bracket without counting those rows again.
+    Rows above b are dropped by the same filter."""
+    bounds = (
+        F.first("__total").alias("__total"),
+        F.min("__mn").alias("__a"),
+        F.max("__mx").alias("__b"),
+        F.min("__start").alias("__below"),
     )
-    vwin = (
+    if keys:
+        tagged = vals.join(span.groupBy("__g").agg(*bounds), "__g")
+    else:
+        # one group: joining on the constant key would constant-fold into
+        # a CartesianProduct; a keys=[] aggregate is provably one row, so
+        # it crossJoins as a broadcast scalar instead
+        tagged = vals.crossJoin(span.agg(*bounds))
+    through = (
         Window.partitionBy("__g")
         .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, 0)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    picked = (
-        finale_cells.withColumn("__cum", F.sum("__cw").over(vwin))
-        .groupBy("__g")
-        .agg(
-            F.min(
-                F.when(
-                    F.col("__below") + F.col("__cum") >= F.col("__t"),
-                    F.col("__v"),
-                )
-            ).alias("__val")
+    return (
+        tagged.filter(
+            (F.col("__v") >= F.col("__a")) & (F.col("__v") <= F.col("__b"))
         )
+        .groupBy("__g", "__total", "__below", "__v")
+        .agg(mass.alias("__m"))
+        .withColumn("__cum", F.col("__below") + F.sum("__m").over(through))
     )
-    allvals = state.filter(F.col("__val").isNotNull()).select(
-        "__g", "__val"
-    ).unionByName(picked)
-    return allvals.select(
-        *[F.col(f"__g.{k}").alias(k) for k in keys],
-        F.col("__val").alias(out),
-    ).localCheckpoint()
+
+
+def _lazy_leaf(guarded: DataFrame, keys: list[str], out: str) -> DataFrame:
+    """`keys + [out]` as a LAZY scoped-persist leaf: it bounds nested
+    callers' plans with an InMemoryRelation, and the selection FUSES into
+    the caller's action instead of paying its own build-time job — the
+    caches materialize inline on first read, twin calls over the same
+    input share their histogram exchanges via ReuseExchange, and builders
+    stay action-free."""
+    return scoped_persist(
+        guarded.select(*[F.col(f"__g.{k}").alias(k) for k in keys], out)
+    )

@@ -289,9 +289,13 @@ def advise_plan(plan: str, *, max_exchanges: int = 6) -> list[dict]:
 # are action-free; iterative algorithms (fixpoint convergence checks,
 # sample-trained index builds) are the documented exception.
 
-# DataFrame methods that launch a job and move rows to the driver. show()
-# included: it is a debug leak in library code. persist()/cache() are NOT
-# actions (lazy) and writes are sinks, not query builders.
+# DataFrame methods that launch a job during plan construction: those that
+# move rows to the driver, show() (a debug leak in library code), and
+# checkpoint()/localCheckpoint() — even with eager=False, because under AQE
+# the call runs the plan's shuffle stages to fix its final plan (a lazy
+# localCheckpoint of a grouped frame ran one job at the call).
+# persist()/cache() are NOT actions (lazy) and writes are sinks, not query
+# builders.
 DRIVER_ACTION_METHODS = (
     "count",
     "collect",
@@ -304,6 +308,8 @@ DRIVER_ACTION_METHODS = (
     "foreach",
     "foreachPartition",
     "show",
+    "checkpoint",
+    "localCheckpoint",
 )
 
 from contextlib import contextmanager  # noqa: E402

@@ -123,10 +123,12 @@ def agg_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantity-WEIGHTED median line price per return flag — the
     inverted-CDF weighted median via
     operators/median.py::weighted_quantile_by_group. The oracle's window
-    formulation sorts every row per group; the operator's iterative
-    range-narrowing touches only cell aggregates (decimal-exact weight
-    sums, so the cum_weight >= p*W boundary cannot flip on float
-    summation order between engines). The weighted shape is what a
+    formulation sorts every row per group; the operator orders only
+    cell aggregates — the histogram bracket's buckets, then the
+    tie-collapsed (value, weight) cells of the one bucket whose
+    cumulative weight reaches p*W (decimal-exact weight sums, so the
+    cum_weight >= p*W boundary cannot flip on float summation order
+    between engines). The weighted shape is what a
     training-corpus budget stage needs (median quality weighted by token
     count) where per-document weights make quantile_cont unusable."""
     from sri_spark.operators.median import weighted_quantile_by_group

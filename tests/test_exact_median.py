@@ -95,16 +95,22 @@ def test_grouped_quantile_skewed_group_sizes(spark):
             assert got[k] == pytest.approx(want, rel=1e-12, abs=1e-9), (p, k)
 
 
-def test_grouped_quantile_ties_and_null_keys(spark):
+@pytest.mark.parametrize("weighted", [False, True], ids=["cont", "weighted"])
+def test_grouped_quantile_ties_and_null_keys(spark, weighted):
     """Tie runs collapse to single cells (no raw-row sort), and a NULL
     group key must survive the internal joins with SQL GROUP BY
-    semantics (struct equality is null-safe)."""
+    semantics (struct equality is null-safe) — through both finales,
+    which share the bracket and the band (unit weights make the
+    inverted-CDF answer coincide with quantile_cont's here)."""
     rows = (
         [("t", 5.0)] * 999
         + [("t", 0.0), ("t", 10.0)]
         + [(None, float(v)) for v in range(11)]
     )
-    got = _gq(spark, rows, 0.5)
+    if weighted:
+        got = _wq(spark, [(k, v, 1.0) for k, v in rows], 0.5)
+    else:
+        got = _gq(spark, rows, 0.5)
     assert got["t"] == 5.0
     assert got[None] == 5.0
 
@@ -131,11 +137,11 @@ def test_grouped_quantile_rejects_bad_p(spark):
 # weighted form: weighted_quantile_by_group (inverted-CDF convention)
 # ---------------------------------------------------------------------------
 
-def _wq(spark, rows, p, **kw):
+def _wq(spark, rows, p):
     from sri_spark.operators.median import weighted_quantile_by_group
 
     df = spark.createDataFrame(rows, "k string, v double, w double")
-    res = weighted_quantile_by_group(df, ["k"], "v", "w", "q", p=p, **kw)
+    res = weighted_quantile_by_group(df, ["k"], "v", "w", "q", p=p)
     return {r["k"]: r["q"] for r in res.collect()}
 
 
@@ -159,6 +165,10 @@ def test_weighted_median_matches_inverted_cdf(spark):
             np.concatenate([[1e13], rng.normal(size=2_000)]),
             np.ones(2_001),
         ),
+        # p·W falls exactly on a cell's (and a bucket's) end: the answer
+        # is that cell's value, not the next one
+        "pair": (np.array([1.0, 1000.0]), np.ones(2)),
+        "quad": (np.array([1.0, 2.0, 3.0, 4.0]), np.ones(4)),
     }
     rows = [
         (k, float(v), float(w))
@@ -166,20 +176,22 @@ def test_weighted_median_matches_inverted_cdf(spark):
         for v, w in zip(vs, ws)
     ]
     for p in (0.5, 0.9, 0.25):
-        got = _wq(spark, rows, p, buckets=64, max_cell_values=200)
+        got = _wq(spark, rows, p)
         for k, (vs, ws) in groups.items():
             assert got[k] == _np_weighted(vs, ws, p), (p, k)
+        if p == 0.5:
+            assert (got["pair"], got["quad"]) == (1.0, 2.0)
 
 
 def test_weighted_median_tie_run_resolves_without_sort(spark):
-    """A dominant tie run must resolve via the cell min == max shortcut
-    (the narrowing loop can never shrink it) — and its value must win
-    whenever the target weight lands inside the run."""
+    """A dominant tie run collapses to one (value, weight) band cell —
+    and its value must win whenever the target weight lands inside the
+    run."""
     rows = (
         [("t", 7.0, 5.0)] * 10_000
         + [("t", 0.0, 1.0), ("t", 99.0, 1.0)]
     )
-    assert _wq(spark, rows, 0.5, buckets=8, max_cell_values=10)["t"] == 7.0
+    assert _wq(spark, rows, 0.5)["t"] == 7.0
 
 
 def test_weighted_median_ignores_nonpositive_weights(spark):
@@ -193,3 +205,34 @@ def test_weighted_quantile_extremes(spark):
     rows = [("a", float(v), 2.0) for v in range(10)]
     assert _wq(spark, rows, 0.0)["a"] == 0.0
     assert _wq(spark, rows, 1.0)["a"] == 9.0
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [float("inf"), float("-inf"), float("nan")],
+    ids=["inf", "-inf", "nan"],
+)
+def test_weighted_quantile_wide_group_with_non_finite_value(spark, bad):
+    """A group of 150k distinct values plus one non-finite row. Non-finite
+    values take sentinel buckets beyond every finite one, so the bracket
+    still isolates the target bucket, where a value-range split of
+    [min, max] has an infinite or NaN width and cannot narrow. NaN ranks
+    largest, as Spark orders it (numpy's argsort agrees)."""
+    from pyspark.sql import functions as F
+
+    from sri_spark.operators.median import weighted_quantile_by_group
+
+    n = 150_000
+    df = spark.range(n).select(
+        F.lit("a").alias("k"),
+        (F.col("id") * 1.0001).alias("v"),
+        F.lit(1.0).alias("w"),
+    ).unionByName(
+        spark.createDataFrame([("a", bad, 1.0)], "k string, v double, w double")
+    )
+    vs = np.append(np.arange(n) * 1.0001, bad)
+    for p in (0.0, 0.5, 1.0):
+        res = weighted_quantile_by_group(df, ["k"], "v", "w", "q", p=p)
+        got = res.first()["q"]
+        want = _np_weighted(vs, np.ones(n + 1), p)
+        assert got == want or (np.isnan(got) and np.isnan(want)), p
