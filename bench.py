@@ -10,6 +10,7 @@ collection.
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import json
 import os
@@ -247,8 +248,8 @@ def sri_etl_replay_100x(spark, *, shuffle_partitions: int | None = 128) -> dict:
     # single-shot BY CHOICE (the one replay point exempt from verdict
     # item 1's median-of-3): an ~8-minute 46M-row build has <2% scheduler
     # noise, a median would triple a 25-minute block, and its cross-round
-    # cost gate is shuffle BYTES (scripts/dump_etl_shuffle.py), which
-    # don't jitter with host load.
+    # cost gate is the shuffle and spill BYTES the ledger records for the
+    # build (shuffle_gate), which don't jitter with host load.
     #
     # 128 shuffle partitions, not the session's cores=32 default: the r11
     # knob forensics (docs/ETL_100X_knobs_r11.json) measured this point
@@ -266,15 +267,18 @@ def sri_etl_replay_100x(spark, *, shuffle_partitions: int | None = 128) -> dict:
     if shuffle_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     effective_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    t0 = time.perf_counter()
-    try:
+
+    def run():
         tables = run_pipeline(
             spark,
             csv_path,
             EtlConfig(mode="fixed", scalable_keys=True, broadcast_lookups=False),
         )
         write_star(tables, out_dir)
-        elapsed = time.perf_counter() - t0
+        return tables
+
+    try:
+        elapsed, tables = _LEDGER.timed(run, _LEDGER.next_point())
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     n_fact = spark.read.parquet(
@@ -540,30 +544,11 @@ def _current_round() -> int:
     return (max(driver_rounds) + 1) if driver_rounds else 1
 
 
-# Byte-audit mode: scripts/dump_etl_shuffle.py (and any stage-metrics
-# consumer) sums shuffle/spill bytes across EVERY execution in a block, so
-# timing repeats would multiply the audited bytes by the repeat count and
-# trip the cross-round byte gate on methodology, not on plans. Setting
-# SPARK_GRAFT_REPLAY_REPEATS=1 makes every replay point run exactly once
-# (no warm-up) — wall times are then single-shot, but byte audits never
-# read wall time.
-_REPLAY_REPEATS_ENV = "SPARK_GRAFT_REPLAY_REPEATS"
-
-
-def _forced_repeats() -> int | None:
-    v = os.environ.get(_REPLAY_REPEATS_ENV)
-    if not v:
-        return None
-    try:
-        return max(1, int(v))
-    except ValueError:
-        # a malformed knob must not kill the whole bench run (ADVICE r9)
-        print(
-            f"WARNING: ignoring malformed {_REPLAY_REPEATS_ENV}={v!r} "
-            f"(expected an integer); replay points use default repeats",
-            file=sys.stderr,
-        )
-        return None
+# Timed executions per replay point; the published `sec` is their median.
+# 1 is single-shot: every point runs once, whatever repeat count it asks
+# for, with no warm-up. The replay-invariant tests set it, because they
+# assert counts and never read a wall.
+REPLAY_REPEATS = 3
 
 
 def _noop(df) -> None:
@@ -599,23 +584,39 @@ def _noop_counted(df) -> int:
         p.unpersist()
 
 
-class _CompileLedger:
-    """Generated-code compilations per timed execution, keyed
-    "<block>.<point>" (operators/observability.py::codegen_compiles).
-    main() arms it with a probe over the bench session; unarmed (unit
-    tests) it only times. A repeat of code that already ran should read
-    0, because session.py sizes the codegen cache to keep every class the
-    bench compiles, so a cache that thrashes again shows up here as a
-    number rather than as JIT CPU inside the walls. The first repeat of a
-    point that has no warm-up of its own (the 10x/100x points of a
-    family, whose plans differ from the 1x plan) also books that point's
-    first-touch compiles."""
+class _Ledger:
+    """What each timed execution compiled and what its stages did, keyed
+    "<block>.<point>", one entry per repeat:
+    - `compiles`: generated-code compilations
+      (operators/observability.py::codegen_compiles). A repeat of code
+      that already ran should read 0, because session.py sizes the codegen
+      cache to keep every class the bench compiles, so a cache that
+      thrashes again shows up here as a number rather than as JIT CPU
+      inside the walls. The first repeat of a point that has no warm-up of
+      its own (the 10x/100x points of a family, whose plans differ from
+      the 1x plan) also books that point's first-touch compiles.
+    - `stage_metrics`: jobs, stages, tasks, executor time, shuffle, spill,
+      input and task skew (operators/observability.py::stage_metrics),
+      the numbers shuffle_gate compares across rounds.
+    Both are read outside the clock. main() arms it over the bench
+    session; unarmed (unit tests) it only times."""
 
     def __init__(self) -> None:
         self.probe = None  # zero-arg callable -> JVM compile count
+        self.reader = None  # label -> context manager yielding stage metrics
         self.block = ""
         self.points = 0
-        self.log: dict[str, list[int]] = {}
+        self.compiles: dict[str, list[int]] = {}
+        self.stage_metrics: dict[str, list[dict]] = {}
+
+    def arm(self, spark) -> None:
+        from sri_spark.operators.observability import (
+            codegen_compiles,
+            stage_metrics,
+        )
+
+        self.probe = lambda: codegen_compiles(spark)["compiles"]
+        self.reader = lambda label: stage_metrics(spark, label)
 
     def start_block(self, name: str) -> None:
         self.block, self.points = name, 0
@@ -625,39 +626,40 @@ class _CompileLedger:
         return f"point{self.points}"
 
     def timed(self, fn, label):
-        """(seconds, result) of one execution of `fn`; the compile count
-        is read outside the clock and booked under `label` (a string, or
-        a tuple of strings as some replay families key their points)."""
+        """(seconds, result) of one execution of `fn`, booked under
+        `label` (a string, or a tuple of strings as some replay families
+        key their points)."""
+        if isinstance(label, tuple):
+            label = ".".join(label)
+        key = f"{self.block}.{label}" if self.block else label
         before = self.probe() if self.probe else 0
-        t0 = time.perf_counter()
-        result = fn()
-        sec = time.perf_counter() - t0
+        with (self.reader(key) if self.reader else contextlib.nullcontext()) as sm:
+            t0 = time.perf_counter()
+            result = fn()
+            sec = time.perf_counter() - t0
         if self.probe:
-            if isinstance(label, tuple):
-                label = ".".join(label)
-            key = f"{self.block}.{label}" if self.block else label
-            self.log.setdefault(key, []).append(self.probe() - before)
+            self.compiles.setdefault(key, []).append(self.probe() - before)
+        if self.reader:
+            self.stage_metrics.setdefault(key, []).append(sm)
         return sec, result
 
 
-_LEDGER = _CompileLedger()
+_LEDGER = _Ledger()
 
 
-def _median_point(run, *, cleanup=None, warmup: bool = False, repeats: int = 3):
+def _median_point(run, *, cleanup=None, warmup: bool = False):
     """Round-9 verdict item 1: replay points were timed ONCE, and round 8's
     two same-HEAD runs measured dedup's 1x point 4.6x apart (2.22 s vs
     10.16 s — first-touch codegen/JIT noise), swinging the published growth
     ratios up to 3x. Same medicine the catalog queries got in round 5
-    (_timed_query): the published `sec` is the median of `repeats` timed
-    executions. `warmup` adds one untimed execution first and is only
+    (_timed_query): the published `sec` is the median of REPLAY_REPEATS
+    timed executions. `warmup` adds one untimed execution first and is only
     needed on the FIRST point of a replay family — the smaller points of
     the same operator warm the code path for the bigger ones. `cleanup`
     releases scoped persists between runs so every timed run re-does the
     full work. Returns (median_sec, last_run_result)."""
-    forced = _forced_repeats()
-    if forced is not None:
-        repeats, warmup = forced, forced > 1 and warmup
-    if warmup:
+    repeats = REPLAY_REPEATS
+    if warmup and repeats > 1:
         run()
         if cleanup:
             cleanup()
@@ -673,7 +675,7 @@ def _median_point(run, *, cleanup=None, warmup: bool = False, repeats: int = 3):
 
 
 def _interleaved_medians(
-    measures: dict, *, cleanup=None, repeats: int = 3, warmup_keys=()
+    measures: dict, *, cleanup=None, repeats: int | None = None, warmup_keys=()
 ) -> dict:
     """Time-INTERLEAVE the repeats across a replay family's points
     (cycle 1: 1x,10x,100x; cycle 2: 1x,10x,100x; ...) instead of
@@ -692,12 +694,11 @@ def _interleaved_medians(
     `measures` is {label: zero-arg callable}; returns
     {label: (median_sec, last_result)}. `warmup_keys` run once untimed
     first (JIT/codegen warm-up; the family's other points share the code
-    path)."""
-    forced = _forced_repeats()
-    if forced is not None:
-        repeats = forced
-        if forced == 1:
-            warmup_keys = ()
+    path). `repeats` defaults to REPLAY_REPEATS."""
+    if repeats is None or REPLAY_REPEATS == 1:
+        repeats = REPLAY_REPEATS
+    if repeats == 1:
+        warmup_keys = ()
     for k in warmup_keys:
         measures[k]()
         if cleanup:
@@ -1161,9 +1162,9 @@ def ann_planted(spark) -> dict:
 
 
 def _events_base(spark):
-    """The events replay family's base frame — hoisted so the knob
-    forensics sweep (scripts/replay_knob_forensics.py events) measures the
-    exact corpus/plan shapes events_replay_10x times."""
+    """The events replay family's base frame — shared with
+    replay_plan_probes, so the plan-integrity gate checks the exact
+    corpus/plan shapes events_replay_10x times."""
     from sri_spark.sources.testdata import load_table
 
     return load_table(spark, SF_DIR, "events").select(
@@ -1263,7 +1264,7 @@ def events_replay_10x(spark) -> dict:
 
 def _trade_pairs(spark):
     """The graph replay family's base (customer, supplier) trade pairs —
-    hoisted so the knob forensics and the plan-integrity probes measure
+    shared with replay_plan_probes, so the plan-integrity gate checks
     exactly the replay's edge construction."""
     from pyspark.sql import functions as F
 
@@ -1881,29 +1882,146 @@ def regression_block(
     }
 
 
-def _latest_shuffle_regression() -> dict | None:
-    """The `regression` block of the newest docs/SHUFFLE_r*.json (written
-    and gated by scripts/dump_shuffle.py), surfaced in the bench artifact
-    so the round record carries the deterministic shuffle-bytes verdict
-    alongside the noisy wall-time one.
+MIB = 2**20
 
-    Only the NEWEST parseable audit counts: if it carries no `regression`
-    block (e.g. the first audit ever taken, which has no floor), the
-    artifact records null rather than silently resurrecting a stale
-    verdict from an older round's file."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    paths = sorted(glob.glob(os.path.join(here, "docs", "SHUFFLE_r*.json")))
-    for path in reversed(paths):
+
+def _median_repeat(reps: list[dict]) -> dict:
+    """Each stage metric's median over a key's repeats (the upper middle
+    for an even count, as for the walls)."""
+    return {k: sorted(r[k] for r in reps)[len(reps) // 2] for k in reps[0]}
+
+
+def _incomplete(reps: list[dict]) -> bool:
+    return any(r.get("evicted", 0) or r.get("jobs_dropped", 0) for r in reps)
+
+
+def shuffle_regression(
+    current: dict, floor: dict, *, abs_mib: float, spill_floor_mib: float
+) -> dict:
+    """Deterministic scale-cost gate (round-5 verdict item 2) over two
+    stage-metrics ledgers, {"<block>.<point>": [per-repeat metrics]}.
+    Shuffle bytes, unlike wall time, do not jitter with host load, so
+    growth against the floor is a plan change, not noise. A key regresses
+    if its median-repeat shuffle traffic (write + read) grows >20% AND by
+    more than `abs_mib` (the absolute floor keeps small points from
+    tripping on rounding), or if its disk spill exceeds
+    max(`spill_floor_mib`, 1.2x the floor's spill): the absolute arm
+    catches new spill where the floor had none, the relative arm catches
+    growth of existing spill without a nonzero floor permanently disabling
+    detection. Floor keys absent from `current` are reported as `missing`
+    (a visible coverage shrink, not a failure — an intentional rename
+    clears on the next floor). A key where any repeat, in the run or in
+    the floor, lost stages or jobs to the status store's retention caps
+    (`evicted`, `jobs_dropped`) summed short bytes, so it is reported as
+    `unmeasured` rather than ok or regressed."""
+    per_key = {}
+    counts = {"ok": 0, "regressed": 0, "new": 0, "missing": 0, "unmeasured": 0}
+    for key in sorted(set(floor) - set(current)):
+        counts["missing"] += 1
+        per_key[key] = "missing (in floor, not in this run)"
+    for key, reps in sorted(current.items()):
+        if key not in floor:
+            counts["new"] += 1
+            per_key[key] = "new"
+            continue
+        if _incomplete(reps) or _incomplete(floor[key]):
+            counts["unmeasured"] += 1
+            per_key[key] = "unmeasured (the status store dropped stages or jobs)"
+            continue
+        m, base = _median_repeat(reps), _median_repeat(floor[key])
+        cur = (m["shuffle_write"] + m["shuffle_read"]) / MIB
+        ref = (base["shuffle_write"] + base["shuffle_read"]) / MIB
+        spill, base_spill = m["spill_disk"] / MIB, base["spill_disk"] / MIB
+        spilled = spill > max(spill_floor_mib, base_spill * 1.2)
+        grew = cur > ref * 1.2 and cur - ref > abs_mib
+        ratio = round(cur / ref, 2) if ref else None
+        shown = f"{ratio}x" if ratio is not None else "from 0 MiB"
+        if grew or spilled:
+            counts["regressed"] += 1
+            why = "spill" if spilled else shown
+            per_key[key] = (
+                f"regressed:{why} (shuffle {ref:.2f}->{cur:.2f} MiB,"
+                f" spill {base_spill:.2f}->{spill:.2f} MiB)"
+            )
+        else:
+            counts["ok"] += 1
+            per_key[key] = f"ok:{shown}"
+    return {
+        "threshold": (
+            f"shuffle(write+read) > 1.2x floor and > +{abs_mib:g} MiB, "
+            f"or spill > max({spill_floor_mib:g} MiB, 1.2x floor spill)"
+        ),
+        "counts": counts,
+        "per_key": per_key,
+    }
+
+
+def _stage_metrics_floor(here: str, this_round: int) -> tuple[str, dict] | None:
+    """(file name, stage_metrics) of the newest docs/BENCH_full_r{N}.json
+    with N < this_round that carries a stage-metrics ledger."""
+    rounds = []
+    for path in glob.glob(os.path.join(here, "docs", "BENCH_full_r*.json")):
+        m = re.fullmatch(r"BENCH_full_r(\d+)\.json", os.path.basename(path))
+        if m and int(m.group(1)) < this_round:
+            rounds.append((int(m.group(1)), path))
+    for _, path in sorted(rounds, reverse=True):
         try:
             with open(path) as f:
                 doc = json.load(f)
         except (OSError, json.JSONDecodeError):
-            continue  # unreadable file: fall back to the next-newest
-        reg = doc.get("regression")
-        if reg is None:
-            return None
-        return {"audit": os.path.basename(path), **reg}
+            continue
+        if doc.get("stage_metrics"):
+            return os.path.basename(path), doc["stage_metrics"]
     return None
+
+
+def shuffle_gate(ledger: dict, here: str, this_round: int) -> dict | None:
+    """shuffle_regression of this run's stage-metrics ledger against the
+    floor (_stage_metrics_floor): the catalog queries at a 1 MiB shuffle
+    and 1 MiB spill floor, the replay points — which move GiBs, and whose
+    100x ETL point legitimately spills tens of GiB on one host
+    (docs/SCALE.md) — at 100 MiB and 1 GiB. None when no prior artifact
+    carries a ledger."""
+    loaded = _stage_metrics_floor(here, this_round)
+    if loaded is None:
+        return None
+    name, floor = loaded
+
+    def scope(log: dict, queries: bool) -> dict:
+        return {k: v for k, v in log.items() if k.startswith("queries.") == queries}
+
+    return {
+        "floor": name,
+        "queries": shuffle_regression(
+            scope(ledger, True), scope(floor, True), abs_mib=1.0, spill_floor_mib=1.0
+        ),
+        "replays": shuffle_regression(
+            scope(ledger, False),
+            scope(floor, False),
+            abs_mib=100.0,
+            spill_floor_mib=1024.0,
+        ),
+    }
+
+
+def check_shuffle_gate(path: str) -> int:
+    """Exit status for a bench artifact's shuffle gate: 1 when any key
+    regressed (printed), else 0. scripts/round_artifacts.sh runs it after
+    bench.py, which itself always exits 0 and only records the verdict."""
+    with open(path) as f:
+        gate = json.load(f).get("shuffle_regression")
+    if gate is None:
+        print(f"shuffle gate: {path} has no floor yet, nothing to check")
+        return 0
+    failed = 0
+    for scope in ("queries", "replays"):
+        block = gate[scope]
+        print(f"shuffle gate {scope} vs {gate['floor']}: {block['counts']}")
+        for key, verdict in block["per_key"].items():
+            if verdict.startswith(("regressed", "unmeasured")):
+                print(f"  {key}: {verdict}")
+        failed += block["counts"]["regressed"]
+    return 1 if failed else 0
 
 
 def _timed(fn) -> float:
@@ -1921,6 +2039,48 @@ def _timed_query(name: str, run) -> float:
     the extra runs cost buys a trustworthy gate."""
     ts = sorted(_LEDGER.timed(run, name)[0] for _ in range(3))
     return round(ts[1], 4)
+
+
+def _bench_queries(spark, queries: dict, names: list[str], plan_ms: dict) -> dict:
+    """Median walls (_timed_query) of the catalog queries in `names`,
+    after an untimed warm-up pass over all of them (JIT, codegen caches,
+    file-footer reads), so the timed pass measures steady-state engine
+    work. Each execution builds the query, noop-sinks it and releases its
+    scoped caches. plan_ms[name] is the warm-up frame's planning time,
+    read after its write (which warmed the same planning code) and before
+    its caches go, so the plan it times reads the same cached leaves."""
+    from sri_spark.operators.caching import unpersist_all
+
+    names = [n for n in names if n in queries]
+    for name in names:
+        df = queries[name](spark, SF_DIR)
+        df.write.format("noop").mode("overwrite").save()
+        plan_ms[name] = _plan_ms(df)
+        unpersist_all()
+
+    def run_one(name):
+        def run():
+            queries[name](spark, SF_DIR).write.format("noop").mode(
+                "overwrite"
+            ).save()
+            unpersist_all()  # release per-query scoped caches
+
+        return run
+
+    return {name: _timed_query(name, run_one(name)) for name in names}
+
+
+def _plan_ms(df) -> int:
+    """Analysis + optimization + physical planning time of a built frame,
+    from its own query execution's phase tracker. Forces the physical
+    plan, so call it outside any clock."""
+    qe = df._jdf.queryExecution()
+    qe.executedPlan()
+    it = qe.tracker().phases().iterator()
+    total = 0
+    while it.hasNext():
+        total += it.next()._2().durationMs()
+    return total
 
 
 def _session_config(spark) -> dict:
@@ -1945,10 +2105,8 @@ def main() -> None:
     # the execution-memory edge BY DESIGN (~50 GiB spill), and at the old
     # 12g default it OOMed (UNABLE_TO_ACQUIRE_MEMORY) for the first time in
     # r11 once the catalog grew past 275 sessions-worth of codegen/broadcast
-    # residue — the same marginal failure dump_etl_shuffle hit in r10 and
-    # fixed the same way (round_artifacts.sh). Heap is a single-host knob;
-    # every gated signal (shuffle/spill bytes, calibrated walls) is
-    # unchanged by it.
+    # residue. Heap is a single-host knob; every gated signal (shuffle/spill
+    # bytes, calibrated walls) is unchanged by it.
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
 
     from sri_spark.plans import all_queries
@@ -1956,41 +2114,15 @@ def main() -> None:
 
     spark = get_spark("sri_spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    from sri_spark.operators.observability import codegen_compiles
-
-    _LEDGER.probe = lambda: codegen_compiles(spark)["compiles"]
+    _LEDGER.arm(spark)
     queries = all_queries()
-    names = [n for n in HEADLINE if n in queries]
 
     from sri_spark.operators.caching import unpersist_all
 
-    # warm-up pass (JIT, codegen caches, file-footer reads) — untimed, so the
-    # timed pass measures steady-state engine work
-    for name in names:
-        queries[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        unpersist_all()
-
-    def _run_one(name):
-        def run():
-            queries[name](spark, SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            unpersist_all()  # release per-query scoped caches
-
-        return run
-
     _LEDGER.start_block("queries")
-    timings: dict[str, float] = {}
-    for name in names:
-        timings[name] = _timed_query(name, _run_one(name))
-
-    ext_names = [n for n in EXTENDED if n in queries]
-    for name in ext_names:  # warm-up, as for the headline set
-        queries[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        unpersist_all()
-    ext_timings: dict[str, float] = {}
-    for name in ext_names:
-        ext_timings[name] = _timed_query(name, _run_one(name))
+    plan_ms: dict[str, int] = {}
+    timings = _bench_queries(spark, queries, HEADLINE, plan_ms)
+    ext_timings = _bench_queries(spark, queries, EXTENDED, plan_ms)
 
     # production-scale ETL replay (BASELINE.md's reference-derived target);
     # runs after the timed query pass so it never contends with it. Kept out
@@ -2064,6 +2196,7 @@ def main() -> None:
     # continuity with rounds 1-3 artifacts.
     all_timings = {**timings, **ext_timings}
 
+    here = os.path.dirname(os.path.abspath(__file__))
     m = re.search(r"sf([0-9.]+)", SF_DIR)
     sf = float(m.group(1).rstrip(".")) if m else None
     regression = regression_block(
@@ -2123,15 +2256,20 @@ def main() -> None:
             or regression["host_factor"] is None
             or regression["host_factor"] <= FLOOR_HOST_FACTOR_BAND[1]
         ),
-        # deterministic scale-cost gate (round-5 verdict item 2): the
-        # newest committed shuffle audit's >20%-growth verdicts, produced
-        # by scripts/dump_shuffle.py against the prior round's audit.
-        # Shuffle bytes don't jitter with host load, so this gate can't
-        # false-fire the way wall time can.
-        "shuffle_regression": _latest_shuffle_regression(),
+        # deterministic scale-cost gate (round-5 verdict item 2): this
+        # run's per-key shuffle and spill bytes against the newest prior
+        # artifact that recorded them. Shuffle bytes don't jitter with host
+        # load, so this gate can't false-fire the way wall time can.
+        "shuffle_regression": shuffle_gate(
+            _LEDGER.stage_metrics, here, _current_round()
+        ),
         "session_config": _session_config(spark),
-        # classes compiled per timed execution (see _CompileLedger)
-        "codegen_compiles": _LEDGER.log,
+        # per timed execution (see _Ledger): classes compiled, and what
+        # its stages did
+        "codegen_compiles": _LEDGER.compiles,
+        "stage_metrics": _LEDGER.stage_metrics,
+        # analysis + optimization + planning of each query's built frame
+        "plan_ms": plan_ms,
         # the per-query dict LAST inside the line, so a truncated tail
         # still carries every raw timing
         "queries": all_timings,
@@ -2139,7 +2277,6 @@ def main() -> None:
     line = json.dumps(artifact)
     # commit-able complete copy (tail truncation loses the line's head):
     # docs/BENCH_full_r{N}.json is also a floor candidate for next round
-    here = os.path.dirname(os.path.abspath(__file__))
     full_path = os.path.join(
         here, "docs", f"BENCH_full_r{_current_round():02d}.json"
     )

@@ -1,7 +1,10 @@
-"""Simulate the driver's verify: default SparkSession + __spark_entry__ contract."""
-import sys, math, datetime as dt, numbers
+"""Oracle sweep of the __spark_entry__ contract in a default SparkSession.
+
+Checks the checkout this script sits in (its parent directory), so a run
+from another copy of the repo checks that copy's code."""
+import os, sys, math, datetime as dt, numbers
 from decimal import Decimal
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import numpy as np
 from pyspark.sql import SparkSession
@@ -124,7 +127,7 @@ for name in sorted(only or qs):
             pass
 print("FAILS:", fails if fails else "none")
 
-import json, os
+import json
 out_path = os.environ.get("SIM_JSON_OUT")
 if out_path:
     with open(out_path, "w") as fh:

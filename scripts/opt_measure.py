@@ -6,6 +6,11 @@ runs) so numbers here are comparable to bench.py's, and optionally dumps
 `explain('formatted')` to plans/r13/<query>_<tag>.txt — the before/after
 evidence the optimization round commits.
 
+Each timed execution goes through bench.py's ledger, so next to its median
+wall every query prints its median-repeat stage metrics: jobs, tasks,
+executor time, shuffle write/read, disk spill and task skew — the layer
+that moved in an A/B, not just the wall.
+
 Usage:
     python scripts/opt_measure.py q1 q2 ...            # time only
     python scripts/opt_measure.py --explain before q1  # also dump plans
@@ -20,7 +25,6 @@ import io
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -48,13 +52,14 @@ def main() -> None:
     import bench
 
     plans_dir = os.path.join(here, "plans", f"r{bench._current_round()}")
+    ledger = bench._Ledger()
+    ledger.arm(spark)
 
-    out: dict[str, float] = {}
+    out: dict[str, dict] = {}
     for name in args.queries:
         if name not in queries:
             print(f"!! unknown query {name}", file=sys.stderr)
             continue
-        spark.sparkContext.setJobDescription(f"opt:{name}")
         if args.explain:
             os.makedirs(plans_dir, exist_ok=True)
             buf = io.StringIO()
@@ -71,16 +76,18 @@ def main() -> None:
             unpersist_all()
 
         run()  # warm-up, untimed (JIT, codegen caches, footer reads)
-        ts = []
-        for _ in range(args.repeats):
-            t0 = time.perf_counter()
-            run()
-            ts.append(time.perf_counter() - t0)
-        ts.sort()
-        out[name] = round(ts[len(ts) // 2], 4)
-        print(f"{name}: median {out[name]}s  (all: {[round(t, 3) for t in ts]})",
+        ts = sorted(ledger.timed(run, name)[0] for _ in range(args.repeats))
+        sm = bench._median_repeat(ledger.stage_metrics[name])
+        out[name] = {"sec": round(ts[len(ts) // 2], 4), "stage_metrics": sm}
+        print(f"{name}: median {out[name]['sec']}s  (all: {[round(t, 3) for t in ts]})"
+              f"  jobs {sm['jobs']} tasks {sm['tasks']} exec {sm['exec_ms']} ms"
+              f"  shuffle w/r {sm['shuffle_write'] / bench.MIB:.2f}/"
+              f"{sm['shuffle_read'] / bench.MIB:.2f} MiB"
+              f"  spill {sm['spill_disk'] / bench.MIB:.2f} MiB"
+              f"  skew {sm['task_skew']}"
+              + ("  (store dropped work: bytes read low)"
+                 if bench._incomplete(ledger.stage_metrics[name]) else ""),
               flush=True)
-        spark.sparkContext.setJobDescription(None)
     print(json.dumps(out))
 
 

@@ -9,8 +9,9 @@
 #
 # Produces/refreshes:
 #   CORRECTNESS_full_r{N}.json   full 260+-query DuckDB-oracle sweep (sf0.01)
-#   docs/SHUFFLE_r{N}.json       shuffle-bytes audit + regression gate
-#   docs/BENCH_full_r{N}.json    complete bench artifact (bench.py side copy)
+#   docs/BENCH_full_r{N}.json    complete bench artifact (bench.py side copy):
+#                                walls, per-execution stage metrics and the
+#                                shuffle-bytes regression gate
 # and re-runs the FULL pytest suite last so the committed artifacts are
 # paired with a green-suite statement.
 set -euo pipefail
@@ -24,18 +25,12 @@ python scripts/check_bench_artifact.py
 echo "== full-catalog correctness sweep =="
 SIM_JSON_OUT="CORRECTNESS_full_r${N}.json" python scripts/driver_sim.py
 
-echo "== shuffle audit =="
-python scripts/dump_shuffle.py
-
-echo "== ETL replay shuffle audit (1x/10x/100x) =="
-# 24g since r10: the 100x fact write OOMed reproducibly at 16g (twice,
-# identical code/config/data as r9's passing run — the workload sits on
-# the heap edge by design, ~50 GiB spill). Heap is a single-host knob;
-# shuffle/spill bytes, the gate's actual signal, are unchanged by it.
-SPARK_GRAFT_DRIVER_MEM=24g python scripts/dump_etl_shuffle.py
-
-echo "== bench =="
+echo "== bench (walls, plus per-execution stage metrics and the shuffle gate) =="
 python bench.py
+
+echo "== shuffle gate (fails the round on a shuffle or spill regression) =="
+python -c 'import sys, bench; sys.exit(bench.check_shuffle_gate(sys.argv[1]))' \
+    "docs/BENCH_full_r${N}.json"
 
 echo "== full test suite =="
 # -m "" overrides pytest.ini's default "not slow" deselection (r14): the

@@ -20,9 +20,20 @@ Streaming: the same `observe` call surfaces per-micro-batch metrics in
 `codegen_compiles` reads the JVM's generated-code compile counters, so a
 caller can diff them around a run and see whether it recompiled classes
 the session had already compiled (see session.py's codegen cache cap).
+
+`stage_metrics` reads what Spark's scheduler recorded for the jobs a block
+ran: jobs, stages, tasks, executor time, shuffle, spill, input and task
+skew, from the in-process status store, which works with the UI off:
+
+    with stage_metrics(spark, "fact_write") as m:
+        df.write.parquet(...)
+    m["shuffle_write"], m["spill_disk"]
 """
 
 from __future__ import annotations
+
+import contextlib
+import itertools
 
 from pyspark.sql import Column, DataFrame, Observation
 
@@ -56,3 +67,114 @@ def codegen_compiles(spark) -> dict[str, int]:
         "compiles": int(metrics.METRIC_COMPILATION_TIME().getCount()),
         "classes": int(metrics.METRIC_GENERATED_CLASS_BYTECODE_SIZE().getCount()),
     }
+
+
+# the local properties SparkContext.setJobGroup sets
+_GROUP_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
+_GROUP_SEQ = itertools.count(1)
+
+
+@contextlib.contextmanager
+def stage_metrics(spark, label: str):
+    """Run the body under a job group of its own and yield a dict that,
+    once the block exits normally, holds the summed metrics of every
+    stage the group's jobs completed:
+
+    jobs, stages, tasks, exec_ms (executor run time), shuffle_read,
+    shuffle_write, spill_disk, spill_mem, input_bytes (bytes);
+    task_skew: max / median task duration of the stage with the most
+    executor time (0.0 when no stage ran more than one task);
+    evicted: completed stages the status store no longer holds;
+    jobs_dropped: jobs the scheduler started during the block that the
+    status store no longer holds.
+
+    The group id is `label` plus a sequence number, so repeated blocks
+    with one label never share jobs; the job group set before the block
+    is restored after it. The read waits for the listener bus to drain,
+    so every stage of the block has landed in the store, and it reads
+    each stage only after the status tracker resolves its id: asking the
+    store for a stage it no longer holds raises a py4j error, a round
+    trip far dearer than the tracker's lookup.
+
+    The store keeps `spark.ui.retainedStages` stages (session.py caps it
+    at 200) and drops the oldest once a block runs more. `evicted` is the
+    jobs' own completed-stage count minus the completed stages read, so a
+    block that outran the cap reads nonzero there instead of quietly low
+    byte counts. A job the store dropped (`spark.ui.retainedJobs`) is not
+    listed at all, stages and all, so `evicted` cannot see it; instead
+    every job id the scheduler issued during the block is looked up, and
+    those the store no longer holds count in `jobs_dropped`. Jobs another
+    thread started meanwhile count too, so a nonzero value means "maybe
+    incomplete".
+    """
+    sc = spark.sparkContext
+    scheduler = sc._jsc.sc().dagScheduler()
+    saved = {p: sc.getLocalProperty(p) for p in _GROUP_PROPS}
+    group = f"{label}#{next(_GROUP_SEQ)}"
+    sc.setJobGroup(group, label)
+    first_job = scheduler.numTotalJobs()
+    out: dict = {}
+    try:
+        yield out
+    finally:
+        for p, v in saved.items():
+            sc.setLocalProperty(p, v)
+    end_job = scheduler.numTotalJobs()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    out.update(_read_group(sc, group))
+    tracker = sc.statusTracker()
+    out["jobs_dropped"] = sum(
+        tracker.getJobInfo(j) is None for j in range(first_job, end_job)
+    )
+
+
+def _read_group(sc, group: str) -> dict:
+    store = sc._jsc.sc().statusStore()
+    tracker = sc.statusTracker()
+    out = dict.fromkeys(
+        ("jobs", "stages", "tasks", "exec_ms", "shuffle_read", "shuffle_write",
+         "spill_disk", "spill_mem", "input_bytes"),
+        0,
+    )
+    completed, seen, dominant = 0, set(), None
+    for job in tracker.getJobIdsForGroup(group):
+        out["jobs"] += 1
+        completed += store.job(job).numCompletedStages()
+        info = tracker.getJobInfo(job)
+        for sid in info.stageIds if info else ():
+            if sid in seen or tracker.getStageInfo(sid) is None:
+                continue
+            seen.add(sid)
+            st = store.lastStageAttempt(sid)
+            if st.status().toString() != "COMPLETE":
+                continue  # a skipped stage: an earlier stage wrote its output
+            out["stages"] += 1
+            out["tasks"] += st.numCompleteTasks()
+            out["exec_ms"] += st.executorRunTime()
+            out["shuffle_read"] += st.shuffleReadBytes()
+            out["shuffle_write"] += st.shuffleWriteBytes()
+            out["spill_disk"] += st.diskBytesSpilled()
+            out["spill_mem"] += st.memoryBytesSpilled()
+            out["input_bytes"] += st.inputBytes()
+            if st.numCompleteTasks() > 1 and (
+                dominant is None or st.executorRunTime() > dominant.executorRunTime()
+            ):
+                dominant = st
+    out["task_skew"] = _task_skew(sc, store, dominant) if dominant else 0.0
+    out["evicted"] = completed - out["stages"]
+    return out
+
+
+def _task_skew(sc, store, st) -> float:
+    q = sc._gateway.new_array(sc._gateway.jvm.double, 2)
+    q[0], q[1] = 0.5, 1.0
+    summary = store.taskSummary(st.stageId(), st.attemptId(), q)
+    if not summary.isDefined():
+        return 0.0
+    dur = summary.get().duration()
+    med, top = dur.apply(0), dur.apply(1)
+    return round(top / med, 3) if med > 0 else 0.0

@@ -1,98 +1,174 @@
 """Unit tests for the two bench regression gates (round-5 verdict items
 1-2): the wall-time block's calibration-scalar preference and the
-deterministic shuffle-bytes gate. Pure Python — no Spark session — so the
-gate logic itself is pinned, not just observed through round artifacts."""
+deterministic shuffle-bytes gate over the bench's stage-metrics ledger.
+Pure Python — no Spark session — so the gate logic itself is pinned, not
+just observed through round artifacts."""
 
 from __future__ import annotations
 
-import importlib.util
+import contextlib
 import json
 import os
 import re
-import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _load(name: str, path: str):
-    spec = importlib.util.spec_from_file_location(name, path)
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules[name] = mod
-    spec.loader.exec_module(mod)
-    return mod
+MIB = 2**20
 
 
-def _dump_shuffle():
-    return _load("dump_shuffle", os.path.join(REPO, "scripts", "dump_shuffle.py"))
+def _metrics(
+    write_mib=10.0, read_mib=10.0, spill_mib=0.0, evicted=0, jobs_dropped=0
+) -> dict:
+    """One execution's stage metrics, as the bench ledger books them."""
+    return {
+        "jobs": 1,
+        "stages": 2,
+        "tasks": 4,
+        "exec_ms": 100,
+        "shuffle_read": int(read_mib * MIB),
+        "shuffle_write": int(write_mib * MIB),
+        "spill_disk": int(spill_mib * MIB),
+        "spill_mem": 0,
+        "input_bytes": 0,
+        "task_skew": 1.0,
+        "evicted": evicted,
+        "jobs_dropped": jobs_dropped,
+    }
 
 
-def _mk_floor(tmp_path, round_n, queries):
-    doc = {"sf_dir": "x", "unit": "MiB", "queries": queries}
+def _mk_floor(tmp_path, round_n, ledger):
+    """A committed bench artifact carrying a stage-metrics ledger."""
     d = tmp_path / "docs"
     d.mkdir(exist_ok=True)
-    with open(d / f"SHUFFLE_r{round_n:02d}.json", "w") as f:
-        json.dump(doc, f)
+    with open(d / f"BENCH_full_r{round_n:02d}.json", "w") as f:
+        json.dump({"queries": {}, "stage_metrics": ledger}, f)
     return str(tmp_path)
 
 
-BASE = {
-    "shuffle_write_mb": 10.0,
-    "shuffle_read_mb": 10.0,
-    "spill_disk_mb": 0,
-    "spill_mem_mb": 0,
-}
+BASE = [_metrics()]
 
 
 def test_shuffle_gate_flags_growth_and_spill(tmp_path):
-    ds = _dump_shuffle()
-    here = _mk_floor(tmp_path, 5, {"q_ok": BASE, "q_grew": BASE, "q_spill": BASE})
+    import bench
+
+    here = _mk_floor(
+        tmp_path,
+        5,
+        {"queries.q_ok": BASE, "queries.q_grew": BASE, "queries.q_spill": BASE},
+    )
     out = {
-        "q_ok": {**BASE, "shuffle_write_mb": 11.0},  # +5%: fine
-        "q_grew": {**BASE, "shuffle_write_mb": 20.0},  # +50% and +10 MiB
-        "q_spill": {**BASE, "spill_disk_mb": 3.0},  # new spill > 1 MiB
-        "q_new": BASE,
+        "queries.q_ok": [_metrics(write_mib=11.0)],  # +5%: fine
+        "queries.q_grew": [_metrics(write_mib=20.0)],  # +50% and +10 MiB
+        "queries.q_spill": [_metrics(spill_mib=3.0)],  # new spill > 1 MiB
+        "queries.q_new": BASE,
     }
-    reg = ds.shuffle_regression_block(here, 6, out)
-    assert reg["counts"] == {"ok": 1, "regressed": 2, "new": 1, "missing": 0}
-    assert reg["per_query"]["q_grew"].startswith("regressed:1.5x")
-    assert reg["per_query"]["q_spill"].startswith("regressed:spill")
-    assert reg["per_query"]["q_new"] == "new"
-    assert reg["floor"] == "SHUFFLE_r05.json"
+    gate = bench.shuffle_gate(out, here, 6)
+    reg = gate["queries"]
+    assert reg["counts"] == {"ok": 1, "regressed": 2, "new": 1, "missing": 0, "unmeasured": 0}
+    assert reg["per_key"]["queries.q_grew"].startswith("regressed:1.5x")
+    assert reg["per_key"]["queries.q_spill"].startswith("regressed:spill")
+    assert reg["per_key"]["queries.q_new"] == "new"
+    assert gate["floor"] == "BENCH_full_r05.json"
 
 
 def test_shuffle_gate_ignores_subme_mib_spill_but_reports_missing(tmp_path):
     """Sub-MiB spill is host memory pressure, not plan shape — no trip;
-    and a floor query absent from the audit is surfaced as `missing`
-    (visible coverage shrink), not silently dropped."""
-    ds = _dump_shuffle()
-    here = _mk_floor(tmp_path, 5, {"q_a": BASE, "q_dropped": BASE})
-    out = {"q_a": {**BASE, "spill_disk_mb": 0.4}}
-    reg = ds.shuffle_regression_block(here, 6, out)
-    assert reg["counts"] == {"ok": 1, "regressed": 0, "new": 0, "missing": 1}
-    assert reg["per_query"]["q_dropped"].startswith("missing")
+    and a floor query absent from the run is surfaced as `missing`
+    (visible coverage shrink), not silently dropped. The gate reads each
+    key's median repeat, so one odd repeat does not trip it."""
+    import bench
+
+    here = _mk_floor(tmp_path, 5, {"queries.q_a": BASE, "queries.q_dropped": BASE})
+    out = {
+        "queries.q_a": [
+            _metrics(spill_mib=0.4),
+            _metrics(write_mib=30.0, spill_mib=9.0),
+            _metrics(spill_mib=0.4),
+        ]
+    }
+    reg = bench.shuffle_gate(out, here, 6)["queries"]
+    assert reg["counts"] == {"ok": 1, "regressed": 0, "new": 0, "missing": 1, "unmeasured": 0}
+    assert reg["per_key"]["queries.q_dropped"].startswith("missing")
 
 
 def test_shuffle_gate_absolute_floor_protects_tiny_queries(tmp_path):
     """A kilobyte-scale query tripling its shuffle is rounding noise, not
-    a plan change — the +1 MiB absolute floor must hold it back."""
-    ds = _dump_shuffle()
-    tiny = {**BASE, "shuffle_write_mb": 0.1, "shuffle_read_mb": 0.1}
-    here = _mk_floor(tmp_path, 5, {"q_tiny": tiny})
-    out = {"q_tiny": {**tiny, "shuffle_write_mb": 0.6}}  # 3.5x but +0.5 MiB
-    reg = ds.shuffle_regression_block(here, 6, out)
-    assert reg["counts"]["regressed"] == 0
+    a plan change — the +1 MiB absolute floor must hold it back. Replay
+    points move GiBs and are held to +100 MiB and a 1 GiB spill floor:
+    +50 MiB on a replay point is fine, 1.5 GiB of new spill is not."""
+    import bench
+
+    tiny = [_metrics(write_mib=0.1, read_mib=0.1)]
+    point = [_metrics(write_mib=100.0, read_mib=100.0)]
+    grown = [_metrics(write_mib=150.0, read_mib=100.0)]  # 1.25x, +50 MiB
+    here = _mk_floor(
+        tmp_path,
+        5,
+        {"queries.q_tiny": tiny, "fam.one_x": point, "fam.ten_x": point},
+    )
+    out = {
+        "queries.q_tiny": [_metrics(write_mib=0.6, read_mib=0.1)],  # 3.5x, +0.5 MiB
+        "fam.one_x": grown,
+        "fam.ten_x": [_metrics(write_mib=100.0, read_mib=100.0, spill_mib=1536.0)],
+    }
+    gate = bench.shuffle_gate(out, here, 6)
+    assert gate["queries"]["counts"]["regressed"] == 0
+    reps = gate["replays"]
+    assert reps["counts"] == {"ok": 1, "regressed": 1, "new": 0, "missing": 0, "unmeasured": 0}
+    assert reps["per_key"]["fam.one_x"].startswith("ok:1.25x")
+    assert reps["per_key"]["fam.ten_x"].startswith("regressed:spill")
+    # the same growth on a catalog query, at the query thresholds, regresses
+    q = bench.shuffle_regression(
+        {"queries.q": grown}, {"queries.q": point}, abs_mib=1.0, spill_floor_mib=1.0
+    )
+    assert q["counts"]["regressed"] == 1
+
+
+def test_shuffle_gate_reports_truncated_reads_as_unmeasured(tmp_path):
+    """A key whose run or floor lost stages or jobs to the status store's
+    retention caps summed short bytes: it is neither ok nor regressed,
+    however its bytes compare."""
+    import bench
+
+    here = _mk_floor(
+        tmp_path,
+        5,
+        {
+            "fam.floor_short": [_metrics(write_mib=1.0, evicted=3)],
+            "fam.run_short": [_metrics(), _metrics(jobs_dropped=2), _metrics()],
+            "fam.whole": [_metrics()],
+        },
+    )
+    out = {
+        "fam.floor_short": [_metrics(write_mib=900.0)],
+        "fam.run_short": [_metrics(), _metrics(write_mib=1.0, jobs_dropped=2), _metrics()],
+        "fam.whole": [_metrics(write_mib=900.0)],
+    }
+    reps = bench.shuffle_gate(out, here, 6)["replays"]
+    assert reps["counts"] == {
+        "ok": 0, "regressed": 1, "new": 0, "missing": 0, "unmeasured": 2
+    }
+    assert reps["per_key"]["fam.floor_short"].startswith("unmeasured")
+    assert reps["per_key"]["fam.run_short"].startswith("unmeasured")
 
 
 def test_shuffle_gate_uses_newest_prior_round_only(tmp_path):
-    ds = _dump_shuffle()
-    here = _mk_floor(tmp_path, 4, {"q": BASE})
-    _mk_floor(tmp_path, 5, {"q": {**BASE, "shuffle_write_mb": 40.0}})
-    # current round 6 must diff against r05 (the 40 MiB floor), not r04
-    reg = ds.shuffle_regression_block(here, 6, {"q": {**BASE, "shuffle_write_mb": 41.0}})
-    assert reg["floor"] == "SHUFFLE_r05.json"
-    assert reg["counts"]["regressed"] == 0
+    """The floor is the newest PRIOR-round artifact that carries stage
+    metrics: artifacts from before the ledger existed are skipped, and
+    same/future rounds are ignored entirely."""
+    import bench
+
+    here = _mk_floor(tmp_path, 4, {"queries.q": BASE})
+    _mk_floor(tmp_path, 5, {"queries.q": [_metrics(write_mib=40.0)]})
+    with open(tmp_path / "docs" / "BENCH_full_r06.json", "w") as f:
+        json.dump({"queries": {"q": 1.0}}, f)  # no ledger: not a floor
+    # current round 7 must diff against r05 (the 40 MiB floor), not r04
+    gate = bench.shuffle_gate({"queries.q": [_metrics(write_mib=41.0)]}, here, 7)
+    assert gate["floor"] == "BENCH_full_r05.json"
+    assert gate["queries"]["counts"]["regressed"] == 0
     # and ignores same/future rounds entirely
-    assert ds.shuffle_regression_block(here, 4, {"q": BASE}) is None
+    assert bench.shuffle_gate({"queries.q": BASE}, here, 4) is None
 
 
 def test_walltime_gate_prefers_multicore_scalar(monkeypatch):
@@ -232,19 +308,17 @@ def test_floor_loader_honors_explicit_eligibility_key(tmp_path, monkeypatch):
 
 
 def test_bench_and_audit_name_lists_resolve_in_catalog():
-    """A typo'd or renamed query in bench.py's HEADLINE/EXTENDED or
-    dump_shuffle's QUERIES silently drops out of measurement (both
-    harnesses skip unknown names) — exactly the silent coverage shrink
-    the gates exist to prevent. Pin every listed name to the catalog."""
+    """A typo'd or renamed query in bench.py's HEADLINE/EXTENDED silently
+    drops out of measurement (the bench skips unknown names) — exactly
+    the silent coverage shrink the gates exist to prevent. Pin every
+    listed name to the catalog."""
     import bench
     from sri_spark.plans import all_queries
 
-    ds = _dump_shuffle()
     catalog = set(all_queries())
     for lst, origin in (
         (bench.HEADLINE, "bench.HEADLINE"),
         (bench.EXTENDED, "bench.EXTENDED"),
-        (ds.QUERIES, "dump_shuffle.QUERIES"),
     ):
         unknown = sorted(set(lst) - catalog)
         assert not unknown, f"{origin} names not in catalog: {unknown}"
@@ -303,44 +377,45 @@ def test_committed_bench_artifact_schema():
     assert "floor_eligible" in art
     assert "lsh_multiprobe" in art["ann_recall"]
     assert "lsh_margin_probe16" in art["ann_recall"]["planted"]
+    # artifacts that record their session config also record what every
+    # timed execution's stages did: the shuffle gate's input
+    if "session_config" in art:
+        assert art["stage_metrics"], "bench artifact missing stage_metrics"
+        assert all(k.count(".") >= 1 for k in art["stage_metrics"])
 
 
 def test_median_point_honors_single_shot_env(monkeypatch):
-    """SPARK_GRAFT_REPLAY_REPEATS=1 (set by the byte audits) must make a
-    replay point run exactly once with no warm-up — the stage-metrics
-    consumers sum bytes across every execution, so a stray repeat would
-    multiply the audited bytes and trip the cross-round gate on
-    methodology (the r9 gate's first armed run fired on exactly this)."""
+    """REPLAY_REPEATS = 1 (what the replay-invariant tests set) must make
+    every replay point run exactly once with no warm-up, whatever repeat
+    count the point asks for — those tests assert counts, so extra
+    executions are pure cost."""
     import bench
 
-    monkeypatch.setenv("SPARK_GRAFT_REPLAY_REPEATS", "1")
+    monkeypatch.setattr(bench, "REPLAY_REPEATS", 1)
     calls = []
-    sec, result = bench._median_point(
-        lambda: calls.append(1) or "r", warmup=True, repeats=3
-    )
+    sec, result = bench._median_point(lambda: calls.append(1) or "r", warmup=True)
     assert len(calls) == 1 and result == "r"
 
     calls.clear()
     med = bench._interleaved_medians(
         {"a": lambda: calls.append("a"), "b": lambda: calls.append("b")},
-        repeats=3,
+        repeats=5,
         warmup_keys=("a",),
     )
     assert calls == ["a", "b"] and set(med) == {"a", "b"}
 
 
-def test_median_point_defaults_unchanged_without_env(monkeypatch):
+def test_median_point_defaults_unchanged_without_env():
     import bench
 
-    monkeypatch.delenv("SPARK_GRAFT_REPLAY_REPEATS", raising=False)
+    assert bench.REPLAY_REPEATS == 3
     calls = []
-    bench._median_point(lambda: calls.append(1), warmup=True, repeats=3)
+    bench._median_point(lambda: calls.append(1), warmup=True)
     assert len(calls) == 4  # warm-up + 3 timed
 
     calls.clear()
     bench._interleaved_medians(
         {"a": lambda: calls.append("a"), "b": lambda: calls.append("b")},
-        repeats=3,
         warmup_keys=("a",),
     )
     # warm-up a, then 3 interleaved cycles of (a, b)
@@ -348,35 +423,48 @@ def test_median_point_defaults_unchanged_without_env(monkeypatch):
 
 
 def test_compile_ledger_books_every_timed_repeat(monkeypatch):
-    """Each timed execution books the compile-count delta under
-    "<block>.<point>"; warm-ups stay off the ledger, and an unarmed
-    ledger (no probe) records nothing."""
+    """Each timed execution books its compile-count delta and its stage
+    metrics under "<block>.<point>"; warm-ups stay off the ledger, and an
+    unarmed ledger (no probe, no reader) records nothing."""
     import bench
 
-    monkeypatch.delenv("SPARK_GRAFT_REPLAY_REPEATS", raising=False)
-    ledger = bench._CompileLedger()
+    ledger = bench._Ledger()
     monkeypatch.setattr(bench, "_LEDGER", ledger)
-    bench._median_point(lambda: None, warmup=True, repeats=3)
-    assert ledger.log == {}
+    bench._median_point(lambda: None, warmup=True)
+    assert ledger.compiles == {} and ledger.stage_metrics == {}
 
     compiled = [0]
     ledger.probe = lambda: compiled[0]
+    read = []
+
+    @contextlib.contextmanager
+    def reader(label):
+        out = {}
+        yield out
+        read.append(label)  # after the body, as the real reader reads
+        out["label"] = label
+
+    ledger.reader = reader
 
     def cold_once():  # compiles 5 classes on its first call only
         compiled[0] += 5 if compiled[0] == 0 else 0
 
     ledger.start_block("fam")
-    bench._median_point(cold_once, warmup=False, repeats=3)
+    bench._median_point(cold_once, warmup=False)
     bench._interleaved_medians(
         {"one_x": lambda: None, ("ten_x", "win"): lambda: None},
         repeats=2,
         warmup_keys=("one_x",),
     )
-    assert ledger.log == {
+    assert ledger.compiles == {
         "fam.point1": [5, 0, 0],
         "fam.one_x": [0, 0],
         "fam.ten_x.win": [0, 0],
     }
+    assert {k: [m["label"] for m in v] for k, v in ledger.stage_metrics.items()} == {
+        k: [k] * len(v) for k, v in ledger.compiles.items()
+    }
+    assert len(read) == 7  # timed executions only, not the warm-up
 
 
 def test_compact_final_line_fits_driver_tail_window():

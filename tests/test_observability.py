@@ -105,3 +105,69 @@ def test_codegen_compiles_counts_new_code_once(spark):
     assert cold["compiles"] > before["compiles"]
     assert cold["classes"] - before["classes"] >= cold["compiles"] - before["compiles"]
     assert warm == cold
+
+
+def test_stage_metrics_reads_a_groupby_shuffle(spark):
+    """A groupBy writes its map output once and reads all of it back: the
+    group's write and read bytes are equal and nonzero, every completed
+    stage is still in the status store, and the jobs, stages and tasks
+    are counted."""
+    from sri_spark.operators.observability import stage_metrics
+
+    with stage_metrics(spark, "groupby") as m:
+        spark.range(20_000).groupBy((F.col("id") % 97).alias("k")).count().collect()
+    assert m["shuffle_write"] == m["shuffle_read"] > 0
+    assert m["evicted"] == 0 and m["jobs_dropped"] == 0
+    assert m["jobs"] >= 1 and m["stages"] >= 2 and m["tasks"] >= m["stages"]
+    assert m["spill_disk"] == 0 and m["task_skew"] >= 1.0
+
+
+def test_stage_metrics_shuffle_free_action_reads_no_shuffle(spark):
+    from sri_spark.operators.observability import stage_metrics
+
+    with stage_metrics(spark, "narrow") as m:
+        spark.range(1_000).selectExpr("id * 2 AS x").collect()
+    assert m["jobs"] >= 1 and m["stages"] >= 1
+    assert m["shuffle_write"] == m["shuffle_read"] == 0
+    assert m["evicted"] == 0 and m["jobs_dropped"] == 0
+
+
+def test_stage_metrics_counts_jobs_the_store_dropped(spark):
+    """A block that runs more jobs than the status store retains loses
+    its oldest jobs, stages and all, so `evicted` alone reads 0 on short
+    byte sums; `jobs_dropped` counts the jobs that went missing."""
+    from sri_spark.operators.observability import stage_metrics
+
+    sc = spark.sparkContext
+    retained = int(sc.getConf().get("spark.ui.retainedJobs", "1000"))
+    if retained > 300:
+        pytest.skip("the session retains too many jobs to outrun cheaply")
+    ran = retained + 20
+    with stage_metrics(spark, "many-jobs") as m:
+        for _ in range(ran):
+            sc.parallelize([1], 1).count()
+    assert m["jobs"] < ran
+    assert m["jobs_dropped"] >= ran - m["jobs"]
+
+
+def test_stage_metrics_restores_the_callers_job_group(spark):
+    """The block runs under its own group and puts the caller's back, and
+    two blocks with one label never count each other's jobs."""
+    from sri_spark.operators.observability import stage_metrics
+
+    sc = spark.sparkContext
+    sc.setJobGroup("caller-group", "caller description")
+    try:
+        seen = []
+        for _ in range(2):
+            with stage_metrics(spark, "same-label") as m:
+                seen.append(sc.getLocalProperty("spark.jobGroup.id"))
+                spark.range(10).collect()
+            assert m["jobs"] == 1
+        assert seen[0] != seen[1] and "caller-group" not in seen
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+        assert sc.getLocalProperty("spark.job.description") == "caller description"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)

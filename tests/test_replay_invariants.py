@@ -25,7 +25,7 @@ def _small_sf(monkeypatch):
     # these tests assert COUNT invariants (sessions, clusters, nodes,
     # candidate disjointness), never wall times — run every replay point
     # once instead of paying for the interleaved timing cycles
-    monkeypatch.setenv("SPARK_GRAFT_REPLAY_REPEATS", "1")
+    monkeypatch.setattr(bench, "REPLAY_REPEATS", 1)
 
 
 def test_events_replay_copies_preserve_session_structure(spark):
@@ -72,44 +72,3 @@ def test_ann_replay_buckets_grow_tenfold(spark):
     assert out["rows_1x"] == n and out["rows_10x"] == 10 * n
     for path in ("lsh_probe_time_growth", "ivf_probe_time_growth"):
         assert out[path] > 0  # structure present; wall time is bench's job
-
-
-def test_events_100m_corpus_matches_union_replication(spark):
-    """scripts/events_hundred_m.py replicates via events x broadcast(range)
-    instead of the N-branch union (plan analysis cost at 1000 copies).
-    Pin that the two constructions build the SAME corpus: identical row
-    count, identical distinct-user count (disjoint shifts), and identical
-    session count at 5 copies."""
-    import sys
-    from pathlib import Path
-
-    from pyspark.sql import functions as F
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
-    from events_hundred_m import _corpus
-
-    from sri_spark.plans.events_queries import sessionize
-    from sri_spark.sources.testdata import load_table
-
-    base = load_table(spark, SF, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    fast = _corpus(spark, base, 5)
-    slow = bench._replicated_union(
-        base,
-        5,
-        lambda df, i: df.select(
-            (F.col("event_id") + F.lit(i * 100_000_000_000)).alias("event_id"),
-            "ts",
-            (F.col("user_id") + F.lit(i * 100_000_000)).alias("user_id"),
-            "event_type",
-            "value",
-        ),
-    )
-    assert fast.count() == slow.count() == 5 * base.count()
-    assert (
-        fast.select("user_id").distinct().count()
-        == slow.select("user_id").distinct().count()
-        == 5 * base.select("user_id").distinct().count()
-    )
-    assert sessionize(fast).count() == sessionize(slow).count()

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import subprocess
 import sys
 
@@ -111,53 +112,6 @@ def test_replay_growth_band_violation_fails(tmp_path):
     assert r.returncode == 0, r.stdout
 
 
-def test_knob_forensics_classification():
-    """replay_knob_forensics._classify semantics (round-11 item 2): spill
-    byte-stability across layouts is what separates capacity-bound from
-    layout-bound, and a spill-free family is labeled as such rather than
-    vacuously 'capacity_bound'. These labels feed SCALE.md's conclusions,
-    so a refactor must not silently flip them."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "rkf", os.path.join(REPO, "scripts", "replay_knob_forensics.py")
-    )
-    rkf = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(rkf)
-
-    def run(sec, disk, mem):
-        return {"sec": sec, "spill_disk_mb": disk, "spill_mem_mb": mem}
-
-    # byte-stable spill + stable wall -> capacity_bound
-    c = rkf._classify({"a": run(100, 3000, 18000), "b": run(110, 3100, 18100)})
-    assert c["conclusion"] == "capacity_bound" and c["spill_byte_stable"]
-    # spill moves 2.5x with layout -> layout_bound (the r11 ETL finding)
-    c = rkf._classify({"a": run(646, 35724, 95484), "b": run(416, 10570, 41412)})
-    assert c["conclusion"] == "layout_bound" and not c["spill_byte_stable"]
-    # zero spill everywhere -> explicitly not a capacity story (graph)
-    c = rkf._classify({"a": run(58, 0.0, 0.0), "b": run(455, 0.0, 0.0)})
-    assert c["conclusion"] == "no_spill_either_layout"
-    assert c["spill_byte_stable"] is None
-    # stable spill but layout-sensitive wall -> the hybrid label
-    c = rkf._classify({"a": run(100, 3000, 18000), "b": run(60, 3050, 18050)})
-    assert c["conclusion"] == "capacity_bound_spill_layout_sensitive_wall"
-
-
-def test_forced_repeats_ignores_malformed_env(monkeypatch, capsys):
-    sys.path.insert(0, REPO)
-    import bench
-
-    monkeypatch.setenv("SPARK_GRAFT_REPLAY_REPEATS", "one")
-    assert bench._forced_repeats() is None
-    err = capsys.readouterr().err
-    assert "SPARK_GRAFT_REPLAY_REPEATS" in err
-
-    monkeypatch.setenv("SPARK_GRAFT_REPLAY_REPEATS", "2")
-    assert bench._forced_repeats() == 2
-    monkeypatch.delenv("SPARK_GRAFT_REPLAY_REPEATS")
-    assert bench._forced_repeats() is None
-
-
 # ---------------------------------------------------------------------------
 # check_bench_artifact.py fragment-length guard: exercised via the module's
 # main() against a fake repo layout (the script globs its own parent dir,
@@ -222,3 +176,42 @@ def test_bench_artifact_short_fragment_with_wrong_value_fails(tmp_path):
     frag = '{"metric": "bench_total", "value": 99.999'
     rc, out = _run_bench_check(tmp_path, frag, _FULL)
     assert rc == 1, out
+
+
+def _gate_step() -> list[str]:
+    """The shuffle-gate command round_artifacts.sh runs after bench.py."""
+    with open(os.path.join(REPO, "scripts", "round_artifacts.sh")) as f:
+        text = f.read()
+    assert text.index("python bench.py") < text.index("check_shuffle_gate")
+    code = re.search(r"python -c '([^']*check_shuffle_gate[^']*)'", text)
+    return [sys.executable, "-c", code.group(1)]
+
+
+def test_round_close_fails_on_a_shuffle_regression(tmp_path):
+    """bench.py only records the shuffle gate's verdict; the round-close
+    step after it must exit nonzero when a key regressed, and pass an
+    artifact whose gate found none, or that had no floor yet."""
+
+    def gate(scope_counts: dict) -> dict:
+        return {
+            "floor": "BENCH_full_r05.json",
+            "queries": {"counts": {"regressed": 0}, "per_key": {}},
+            "replays": {"counts": {"regressed": 0}, "per_key": {}},
+            **scope_counts,
+        }
+
+    regressed = gate(
+        {
+            "replays": {
+                "counts": {"regressed": 1},
+                "per_key": {"fam.ten_x": "regressed:spill (shuffle 1->1 MiB)"},
+            }
+        }
+    )
+    for shuffle_regression, rc in ((regressed, 1), (gate({}), 0), (None, 0)):
+        path = _write(tmp_path, "BENCH_full_r06.json",
+                      {"shuffle_regression": shuffle_regression})
+        r = subprocess.run(_gate_step() + [path], cwd=REPO,
+                           capture_output=True, text=True)
+        assert r.returncode == rc, r.stdout + r.stderr
+        assert ("fam.ten_x" in r.stdout) == (rc == 1), r.stdout
