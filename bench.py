@@ -137,23 +137,19 @@ def sri_etl_replay(spark) -> dict:
     def run():
         shutil.rmtree(out_dir, ignore_errors=True)  # each repeat builds fresh
         tables = run_pipeline(spark, csv_path, EtlConfig(mode="fixed"))
-        write_star(tables, out_dir)
+        return write_star(tables, out_dir)
 
     # median-of-3 + warm-up like every other replay point (verdict item 1);
-    # clearCache between repeats releases the 5 star tables AND the src scan
-    elapsed, _ = _median_point(run, cleanup=spark.catalog.clearCache, warmup=True)
-    # row counts from the WRITTEN star (shuffle-free parquet counts): the
-    # pipeline frames are uncached after cleanup, and recomputing
-    # dim_vehiculo from source costs a shuffle the byte audit would book
-    # against this block (+61 MiB on the r9 gate's first armed run)
-    n_fact = spark.read.parquet(
-        os.path.join(out_dir, "fact_registro_vehiculos")
-    ).count()
-    n_veh = spark.read.parquet(os.path.join(out_dir, "dim_vehiculo")).count()
+    # clearCache between repeats releases the 5 star tables AND the src scan.
+    # Row counts come from the quality report the writes observed: no
+    # re-read of the written star, no recompute of a dim
+    elapsed, report = _median_point(
+        run, cleanup=spark.catalog.clearCache, warmup=True
+    )
     return {
         "sec": elapsed,
-        "fact_rows": n_fact,
-        "dim_vehiculo_rows": n_veh,
+        "fact_rows": report["fact_registro_vehiculos"]["total_registros"],
+        "dim_vehiculo_rows": report["dim_vehiculo"]["total_registros"],
         "source_rows": 460550,
         # ADVICE r11: the 100x point records its forced 128-reducer layout;
         # record the session layout here too so growth_vs_* readers see the
@@ -190,19 +186,16 @@ def sri_etl_replay_10x(spark) -> dict:
         tables = run_pipeline(
             spark, csv_path, EtlConfig(mode="fixed", scalable_keys=True)
         )
-        write_star(tables, out_dir)
+        return write_star(tables, out_dir)
 
     # median-of-3, no separate warm-up: the 1x replay just ran the same
     # pipeline code (verdict item 1)
-    elapsed, _ = _median_point(run, cleanup=spark.catalog.clearCache)
-    n_fact = spark.read.parquet(
-        os.path.join(out_dir, "fact_registro_vehiculos")
-    ).count()
+    elapsed, report = _median_point(run, cleanup=spark.catalog.clearCache)
     spark.catalog.clearCache()
     shutil.rmtree(out_dir, ignore_errors=True)  # ~0.5 GB — don't accrete
     return {
         "sec": elapsed,
-        "fact_rows": n_fact,
+        "fact_rows": report["fact_registro_vehiculos"]["total_registros"],
         "source_rows": n,
         "scalable_keys": True,
         # ADVICE r11: make the 10x->100x layout asymmetry explicit in-artifact
@@ -274,23 +267,18 @@ def sri_etl_replay_100x(spark, *, shuffle_partitions: int | None = 128) -> dict:
             csv_path,
             EtlConfig(mode="fixed", scalable_keys=True, broadcast_lookups=False),
         )
-        write_star(tables, out_dir)
-        return tables
+        return write_star(tables, out_dir)
 
     try:
-        elapsed, tables = _LEDGER.timed(run, _LEDGER.next_point())
+        elapsed, report = _LEDGER.timed(run, _LEDGER.next_point())
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    n_fact = spark.read.parquet(
-        os.path.join(out_dir, "fact_registro_vehiculos")
-    ).count()
-    n_veh = tables["dim_vehiculo"].count()
     spark.catalog.clearCache()
     shutil.rmtree(out_dir, ignore_errors=True)  # multi-GB — don't accrete
     return {
         "sec": round(elapsed, 4),
-        "fact_rows": n_fact,
-        "dim_vehiculo_rows": n_veh,
+        "fact_rows": report["fact_registro_vehiculos"]["total_registros"],
+        "dim_vehiculo_rows": report["dim_vehiculo"]["total_registros"],
         "source_rows": n,
         "scalable_keys": True,
         "broadcast_lookups": False,

@@ -38,8 +38,9 @@ class EtlConfig:
     broadcast_lookups: bool = True
     # reference semantics fill unmatched lookup FKs with 1 before loading,
     # which makes null-FK validation vacuous (the reference's own check never
-    # fires). False keeps misses as nulls so quality_report's
-    # max_null_percentage threshold actually gates
+    # fires). False keeps misses as nulls, so the null-FK counts observed in
+    # the fact write are real and the max_null_percentage threshold (the
+    # `gate=` of write_star, or quality_report(enforce=True)) actually gates
     fill_missing_fk: bool = True
     # assign ID_Registro with the sort-free two-phase ranking
     # (operators.keys.add_surrogate_key_scalable). Costs one extra shuffle +

@@ -28,6 +28,9 @@ one non-scalable step; swap in operators.keys.add_surrogate_key_scalable
 
 from __future__ import annotations
 
+import functools
+import operator
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -68,6 +71,41 @@ def check_fanout(dim_vehiculo: DataFrame, dim_transaccion: DataFrame, cfg: EtlCo
             "use fixed mode or raise max_fanout_factor"
         )
     return factor
+
+
+# the fact's referential-integrity flag: true when all four keys find
+# their dim row (reference :735-748); never written to a sink
+RI = "__ri"
+# (dim, surrogate key, broadcast?) of the flag's lookups: the bounded dims
+# are hint-broadcast; dim_vehiculo grows with the data, so AQE decides
+_RI_LOOKUPS = (
+    ("dim_tiempo", "ID_Tiempo", True),
+    ("dim_vehiculo", "ID_Vehiculo", False),
+    ("dim_transaccion", "ID_Transaccion", True),
+    ("dim_ubicacion", "ID_Ubicacion", True),
+)
+
+
+def flag_integrity(
+    tables: dict[str, DataFrame], carry: dict[str, list[str]] | None = None
+) -> DataFrame:
+    """The star's fact left-joined to each dim on its surrogate key: the
+    fact's own columns, then the `carry[dim]` columns, then the `RI` flag.
+    The dims' surrogate keys are unique, so no lookup fans a fact row out,
+    and the count of true flags equals the reference's 4-way inner star
+    join count."""
+    carry = carry or {}
+    fact = tables["fact_registro_vehiculos"]
+    out, found = fact, []
+    for name, key, bounded in _RI_LOOKUPS:
+        mark = f"__found_{name}"
+        dim = tables[name].select(key, *carry.get(name, ()), F.lit(True).alias(mark))
+        out = out.join(F.broadcast(dim) if bounded else dim, key, "left")
+        found.append(F.col(mark).isNotNull())
+    carried = [c for name, _k, _b in _RI_LOOKUPS for c in carry.get(name, ())]
+    return out.select(
+        *fact.columns, *carried, functools.reduce(operator.and_, found).alias(RI)
+    )
 
 
 def build_fact(

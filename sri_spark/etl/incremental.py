@@ -45,6 +45,8 @@ from sri_spark.etl.dims import (
     build_dim_vehiculo,
 )
 from sri_spark.etl.fact import build_fact
+from sri_spark.etl.publish import publish, recover
+from sri_spark.etl.quality import FACT, TABLES
 from sri_spark.etl.source import read_sri_csv, with_src_id
 
 # dimension grain = every non-key column (the builders' dropDuplicates set)
@@ -150,34 +152,17 @@ def read_star(spark: SparkSession, star_dir: str) -> dict[str, DataFrame]:
     next write)."""
     import os
 
-    names = [
-        "dim_tiempo",
-        "dim_vehiculo",
-        "dim_transaccion",
-        "dim_ubicacion",
-        "fact_registro_vehiculos",
-    ]
-    tables = {n: spark.read.parquet(os.path.join(star_dir, n)) for n in names}
-    fact = tables["fact_registro_vehiculos"]
+    tables = {n: spark.read.parquet(os.path.join(star_dir, n)) for n in TABLES}
+    fact = tables[FACT]
     layout_cols = [c for c in ("Anio", "Marca") if c in fact.columns]
     if layout_cols:
-        tables["fact_registro_vehiculos"] = fact.drop(*layout_cols)
+        tables[FACT] = fact.drop(*layout_cols)
     return tables
 
 
 # test seam: set to True to simulate a crash between the fact-delta append
 # and the dim swaps (tests/test_incremental_etl.py exercises the recovery)
 _CRASH_AFTER_FACT_APPEND = False
-
-
-def _fact_files(fact_dir: str) -> set[str]:
-    import os
-
-    return {
-        os.path.relpath(os.path.join(dp, f), fact_dir)
-        for dp, _dns, fs in os.walk(fact_dir)
-        for f in fs
-    }
 
 
 def publish_increment(
@@ -196,84 +181,35 @@ def publish_increment(
     serving queries on the combined table. Dims are dimension-sized, so
     truncate-writing them stays cheap at any fact scale.
 
-    Crash safety (single-writer): a write-ahead manifest snapshots the
-    fact's file listing BEFORE the append; the manifest is deleted only
-    after every dim swap lands (the commit point). If a publish dies at
-    any intermediate point, the next publish (a) rolls the fact back by
-    deleting files absent from the snapshot, (b) restores any
-    half-swapped dim from its `.old` backup. Dims are append-only with
-    stable keys, so a crash AFTER some dim swaps rolls back only the fact
-    and re-running the same increment converges to the same final state
-    (the grain anti-join re-inserts nothing; ID_Registro continues from
-    the rolled-back maximum). The file-listing snapshot is metadata-sized;
-    object-store deployments would swap it for the transaction log their
-    table format provides (Delta/Iceberg)."""
-    import json
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F  # noqa: F811 — local alias
-
+    Crash safety (single writer) is `etl/publish.py`'s protocol, shared
+    with the full refresh: a write-ahead manifest snapshots the fact's
+    file listing BEFORE the append, the dims are staged and swapped in
+    with backups, and deleting the manifest is the commit point. If a
+    publish dies at any point before it, the next publish rolls the fact
+    back to the snapshot and every swapped dim back to its backup, then
+    re-applies the increment; dims are append-only with stable keys, so
+    the result is the state a never-crashed publish reaches."""
     cfg = cfg or EtlConfig(mode="fixed")
-    _DIMS = ("dim_vehiculo", "dim_transaccion", "dim_ubicacion", "dim_tiempo")
-    fact_dir = os.path.join(star_dir, "fact_registro_vehiculos")
-    manifest = os.path.join(star_dir, "_publish_manifest.json")
-
-    # --- recovery from a previously interrupted publish ---------------
-    # (1) uncommitted manifest -> roll the fact back to its snapshot
-    if os.path.exists(manifest):
-        with open(manifest) as fh:
-            snap = set(json.load(fh)["fact_files"])
-        for rel in _fact_files(fact_dir) - snap:
-            os.remove(os.path.join(fact_dir, rel))
-        for dp, _dns, _fs in os.walk(fact_dir, topdown=False):
-            if dp != fact_dir and not os.listdir(dp):
-                os.rmdir(dp)  # prune partition dirs the rollback emptied
-        os.remove(manifest)
-    # (2) dim swap interrupted between renames -> restore from backup
-    for name in _DIMS:
-        out = os.path.join(star_dir, name)
-        if not os.path.exists(out) and os.path.exists(out + ".old"):
-            os.rename(out + ".old", out)
-        if os.path.exists(out + ".staging"):
-            shutil.rmtree(out + ".staging")
-
+    # recover BEFORE reading: the lazy plans below read the on-disk star
+    recover(star_dir, TABLES)
     existing = read_star(spark, star_dir)
     updated = apply_increment(spark, existing, source, cfg)
     delta = updated.pop("__fact_increment")
-
-    # write-ahead snapshot of the fact BEFORE appending: anything beyond
-    # this listing is delta debris if the publish dies before commit
-    with open(manifest, "w") as fh:
-        json.dump({"fact_files": sorted(_fact_files(fact_dir))}, fh)
-
-    # ORDER MATTERS: every lazy plan in `updated`/`delta` reads the
-    # CURRENT on-disk dims, so (1) append the fact delta while those
-    # directories are intact, (2) stage-write each dim (also reads the old
-    # dir) and swap, (3) hand back FRESH reads of the published layout —
-    # the in-memory plans are stale the moment the swaps happen.
     anio = updated["dim_tiempo"].select("ID_Tiempo", "Anio")
-    (
-        delta.join(F.broadcast(anio), "ID_Tiempo", "left")
-        .na.fill({"Anio": 0})
-        .write.mode("append")
-        .partitionBy("Anio")
-        .parquet(fact_dir)
+    delta = delta.join(F.broadcast(anio), "ID_Tiempo", "left").na.fill({"Anio": 0})
+
+    def append_fact(path: str) -> None:
+        delta.write.mode("append").partitionBy("Anio").parquet(path)
+        if _CRASH_AFTER_FACT_APPEND:
+            raise RuntimeError("simulated crash after fact append")
+
+    # every lazy plan in `updated`/`delta` reads the CURRENT on-disk dims,
+    # and publish appends and stages everything before its first swap; the
+    # in-memory plans are stale once the swaps happen, so hand back FRESH
+    # reads of the published layout
+    publish(
+        star_dir,
+        {n: updated[n].write.mode("overwrite").parquet for n in TABLES if n != FACT},
+        append=(FACT, append_fact),
     )
-    if _CRASH_AFTER_FACT_APPEND:
-        raise RuntimeError("simulated crash after fact append")
-
-    # Crash-safe dim swap: write staging, rename the live dir ASIDE
-    # (out -> out.old), rename staging into place, delete the backup last.
-    for name in _DIMS:
-        out = os.path.join(star_dir, name)
-        staging, backup = out + ".staging", out + ".old"
-        updated[name].write.mode("overwrite").parquet(staging)
-        if os.path.exists(backup):
-            shutil.rmtree(backup)
-        os.rename(out, backup)
-        os.rename(staging, out)
-        shutil.rmtree(backup)
-
-    os.remove(manifest)  # commit point — the increment is fully published
     return read_star(spark, star_dir)

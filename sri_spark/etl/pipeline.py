@@ -9,7 +9,6 @@ four lookups broadcast the freshly-built dims.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from sri_spark.etl.config import EtlConfig
 from sri_spark.etl.dims import (
@@ -18,8 +17,18 @@ from sri_spark.etl.dims import (
     build_dim_ubicacion,
     build_dim_vehiculo,
 )
-from sri_spark.etl.fact import build_fact, check_fanout
+from sri_spark.etl.fact import RI, build_fact, check_fanout, flag_integrity
+from sri_spark.etl.publish import publish
+from sri_spark.etl.quality import (
+    FACT,
+    METRICS,
+    QualityThresholds,
+    assemble,
+    check,
+    quality_report,
+)
 from sri_spark.etl.source import read_sri_csv, with_src_id
+from sri_spark.operators.observability import observed
 
 
 def run_pipeline(
@@ -66,9 +75,29 @@ def write_star(
     partition_fact_by_year: bool = True,
     clustering_fields: tuple[str, ...] = ("Anio", "Marca"),
     fmt: str = "parquet",
-) -> None:
-    """Persist the star — truncate-load semantics (mode='overwrite', the
-    reference's WRITE_TRUNCATE).
+    gate: QualityThresholds | None = None,
+) -> dict:
+    """Publish the star with truncate-load semantics (the reference's
+    WRITE_TRUNCATE) and return its quality report (etl/quality.py).
+
+    The quality metrics ride the writes: each table's `observe()` columns
+    sit at the top of its write plan, the fact's above the range exchange
+    and the sort (`operators.observability.observed` says why), so
+    `quality_report` on these same frames runs nothing but its duplicate
+    pass. The fact's referential-integrity flag comes from the write's own
+    lookups: the tiempo and vehiculo joins that supply `Anio` and `Marca`,
+    plus broadcast lookups on the transaccion and ubicacion keys
+    (`fact.flag_integrity`); the flag is dropped before the sink.
+
+    With the default path-based parquet sink, each table is written to
+    `<out_dir>/<name>.staging`; the report is assembled from the
+    observations; `gate`, when set, enforces its thresholds; only then is
+    the staging swapped into place by the write-ahead-manifest protocol of
+    `etl/publish.py`, which `publish_increment` shares. A failing gate, or
+    a crash the next publish recovers from, leaves the prior star as it
+    was. The other sinks write straight to their target, a warehouse
+    table id and not a directory that can be renamed, so `gate` is
+    refused with them.
 
     `fmt` selects a registered sink (sources/sinks.py): 'parquet' (default)
     writes a local/lake star; 'bigquery' targets the reference's warehouse
@@ -101,22 +130,49 @@ def write_star(
     from sri_spark.sources.sinks import get_sink
 
     sink = get_sink(fmt)
+    if gate is not None and fmt != "parquet":
+        raise ValueError(f"gate= needs the staged parquet sink; {fmt!r} writes in place")
+    observations, writers = {}, {}
     for name, df in tables.items():
-        if name == "fact_registro_vehiculos" and partition_fact_by_year:
-            anio = tables["dim_tiempo"].select("ID_Tiempo", "Anio")
-            df = (
-                df.join(F.broadcast(anio), "ID_Tiempo", "left").na.fill({"Anio": 0})
-            )
-            cluster = [c for c in clustering_fields if c != "Anio"]
-            if "Marca" in cluster and "Marca" not in df.columns:
-                marca = tables["dim_vehiculo"].select("ID_Vehiculo", "Marca")
-                df = df.join(marca, "ID_Vehiculo", "left")
-            cluster = [c for c in cluster if c in df.columns]
-            if cluster:
-                df = df.repartitionByRange("Anio", *cluster).sortWithinPartitions(
-                    "Anio", *cluster
-                )
-            writer = df.write.mode("overwrite").partitionBy("Anio")
-        else:
-            writer = df.write.mode("overwrite")
-        sink(writer, out_dir, name)
+        partition = name == FACT and partition_fact_by_year
+        if name == FACT:
+            df = _fact_layout(tables, partition, clustering_fields)
+        observations[name], df = observed(df, name, **METRICS[name]())
+        writer = df.drop(RI).write.mode("overwrite")
+        writers[name] = writer.partitionBy("Anio") if partition else writer
+
+    def assemble_and_gate() -> None:
+        report = assemble(tables, observations)
+        if gate is not None:
+            check(report, gate, tables[FACT])
+
+    if fmt == "parquet":
+        publish(
+            out_dir,
+            {name: w.parquet for name, w in writers.items()},
+            check=assemble_and_gate,
+        )
+    else:
+        for name, writer in writers.items():
+            sink(writer, out_dir, name)
+        assemble_and_gate()
+    return quality_report(tables)
+
+
+def _fact_layout(
+    tables: dict[str, DataFrame], partition: bool, clustering_fields: tuple[str, ...]
+) -> DataFrame:
+    """The fact as write_star lays it out, carrying the `RI` flag."""
+    if not partition:
+        return flag_integrity(tables)
+    cluster = [c for c in clustering_fields if c != "Anio"]
+    carry = {"dim_tiempo": ["Anio"]}
+    if "Marca" in cluster and "Marca" not in tables[FACT].columns:
+        carry["dim_vehiculo"] = ["Marca"]
+    df = flag_integrity(tables, carry).na.fill({"Anio": 0})
+    cluster = [c for c in cluster if c in df.columns]
+    if cluster:
+        df = df.repartitionByRange("Anio", *cluster).sortWithinPartitions(
+            "Anio", *cluster
+        )
+    return df

@@ -1,11 +1,11 @@
 """In-flight pipeline metrics via Spark's Observation API.
 
-`quality_report` (etl/quality.py) audits tables AFTER they materialize —
-a second pass over each output. `observe()` metrics ride along with the
-job itself: named aggregates are accumulated DURING the action that
-produces the output, so row counts / null counts / value sums cost zero
-extra scans — the observability a 100 TB pipeline needs, where "run a
-count(*) afterwards" doubles the bill.
+`observe()` metrics ride along with the job itself: named aggregates are
+accumulated DURING the action that produces the output, so row counts /
+null counts / value sums cost zero extra scans — the observability a
+100 TB pipeline needs, where "run a count(*) afterwards" doubles the bill.
+`etl/pipeline.py::write_star` computes the star's quality report this way,
+inside the writes that publish it.
 
 Batch usage:
 
@@ -46,6 +46,15 @@ def observed(
     The metrics accumulate during whatever action later runs on `df`
     (write, collect, count) — read `observation.get` AFTER that action.
     Each metric must be an aggregate Column; names become dict keys.
+    DISTINCT aggregates are rejected; `size(collect_set(c))` counts the
+    distinct values of a low-cardinality column.
+
+    Placement: attach at the top of the action's plan, above any range
+    exchange or sort. `repartitionByRange` (and a global sort) samples its
+    child in a job of its own to pick the range bounds, so an observation
+    below the exchange also runs in that sampling job and reads up to
+    twice the rows. Above it, the observation sits in the action's result
+    stage, whose task updates Spark applies exactly once.
     """
     if not metrics:
         raise ValueError("observed() needs at least one metric column")

@@ -2,12 +2,13 @@
 
 from __future__ import annotations
 
+import json
 import os
 
 from tests.sri_fixture import write_sri_csv
 
 
-def test_cli_end_to_end_and_idempotent_rerun(spark, tmp_path):
+def test_cli_end_to_end_and_idempotent_rerun(spark, tmp_path, capsys):
     csv = str(tmp_path / "sri.csv")
     write_sri_csv(csv, n=500, seed=7)
     out = str(tmp_path / "star")
@@ -24,6 +25,16 @@ def test_cli_end_to_end_and_idempotent_rerun(spark, tmp_path):
         "fact_registro_vehiculos",
     }
     assert first["dim_tiempo"] == 2192
+
+    # one JSON run report: verdict, rows and bytes per table, per-leg metrics
+    run = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert run["gate"] == "skipped"
+    assert run["rows"] == first
+    assert run["quality"]["dim_tiempo"]["total_registros"] == 2192
+    assert all(b > 0 for b in run["bytes"].values())
+    assert run["legs"]["publish"]["jobs"] > 0
+    assert run["legs"]["metrics"]["jobs"] > 0
+    assert set(run["metricas"]) == {"por_anio", "por_marca", "por_provincia"}
 
     # rerun = truncate-load: identical table states, no appends
     main(["--source", csv, "--out", out, "--mode", "fixed", "--no-enforce"])

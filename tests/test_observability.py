@@ -42,6 +42,26 @@ def test_observed_survives_downstream_transforms(spark, sf_dir):
     assert n_kept < obs.get["rows"]
 
 
+def test_observed_above_range_exchange_counts_each_row_once(spark, sf_dir, tmp_path):
+    """The placement rule in `observed`'s docstring: attached on top of a
+    repartitionByRange + sortWithinPartitions write, the observation reads
+    the exact row count; attached below the exchange, it also runs in the
+    range partitioner's sampling job and reads the rows twice."""
+    orders = load_table(spark, sf_dir, "orders")
+    n = orders.count()
+
+    def clustered(df):
+        return df.repartitionByRange("o_orderdate").sortWithinPartitions("o_orderdate")
+
+    top, df = observed(clustered(orders), "top", rows=F.count(F.lit(1)))
+    df.write.mode("overwrite").parquet(str(tmp_path / "top"))
+    assert top.get["rows"] == n
+
+    below, df = observed(orders, "below", rows=F.count(F.lit(1)))
+    clustered(df).write.mode("overwrite").parquet(str(tmp_path / "below"))
+    assert below.get["rows"] == 2 * n
+
+
 def test_observed_requires_metrics(spark, sf_dir):
     orders = load_table(spark, sf_dir, "orders")
     with pytest.raises(ValueError, match="metric"):
