@@ -160,12 +160,11 @@ def sri_etl_replay(spark) -> dict:
 
 def sri_etl_replay_10x(spark) -> dict:
     """Round-3 verdict item 6: the same star build at 10x the rows
-    (4,605,500) with `scalable_keys=True`, substituting the sort-free
-    two-phase ID_Registro assignment (operators.keys.add_surrogate_key_scalable)
-    for the parity global sort. Recording both replay rows per round
-    demonstrates the documented scalable-keys path actually runs and that
-    the build scales superlinearly-safe (10x rows should cost ~10x, not
-    100x)."""
+    (4,605,500). The source's planned size (~640 MB) exceeds one scan
+    task, so the build takes the sort-free two-phase keys
+    (operators.keys.fits_one_task) with no config. Recording both replay
+    rows per round shows that path runs and that the build scales
+    superlinearly-safe (10x rows should cost ~10x, not 100x)."""
     import shutil
 
     from sri_spark.etl import EtlConfig, run_pipeline
@@ -183,9 +182,7 @@ def sri_etl_replay_10x(spark) -> dict:
 
     def run():
         shutil.rmtree(out_dir, ignore_errors=True)  # each repeat builds fresh
-        tables = run_pipeline(
-            spark, csv_path, EtlConfig(mode="fixed", scalable_keys=True)
-        )
+        tables = run_pipeline(spark, csv_path, EtlConfig(mode="fixed"))
         return write_star(tables, out_dir)
 
     # median-of-3, no separate warm-up: the 1x replay just ran the same
@@ -197,22 +194,33 @@ def sri_etl_replay_10x(spark) -> dict:
         "sec": elapsed,
         "fact_rows": report["fact_registro_vehiculos"]["total_registros"],
         "source_rows": n,
-        "scalable_keys": True,
         # ADVICE r11: make the 10x->100x layout asymmetry explicit in-artifact
         "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
     }
 
 
-def sri_etl_replay_100x(spark, *, shuffle_partitions: int | None = 128) -> dict:
+# Shuffle partitions of the 100x star build, not the session's cores=32
+# default: the r11 knob forensics (docs/ETL_100X_knobs_r11.json) measured
+# that point LAYOUT-bound — 128 reducers cut wall 646->416 s (-35%) and disk
+# spill 35.7->10.6 GiB (-70%) at byte-identical shuffle volume (~87 GiB,
+# +1.2%) — and 128 is inside the tuning.py prescription for the build's
+# widest shuffles (~8-20 GiB / 128 MiB-per-task => 64-160 tasks). This is
+# the config a cluster would run, so it is the config the growth curve
+# should measure.
+ETL_100X_SHUFFLE_PARTITIONS = 128
+
+
+def sri_etl_replay_100x(spark) -> dict:
     """Round-7 verdict item 3 (carried from r6 ask #1): the star build at
     100x the reference's production rows (46,055,000) — the largest
     single-host point on the growth curve, sized so near-linear
-    10x->100x scaling is measured, not extrapolated. Same scalable-keys
-    config as the 10x point PLUS broadcast_lookups=False: the code pool
-    scales with the rows, so dim_vehiculo lands at ~33M rows (GBs
-    serialized) and force-broadcasting it is exactly the executor OOM the
-    flag exists to avoid — the fact lookups run as AQE-planned shuffle
-    joins, the same shape a 1000-executor cluster uses at 100 TB.
+    10x->100x scaling is measured, not extrapolated. Same config as every
+    other caller: the source exceeds one scan task, so the build takes the
+    two-phase keys, and the code pool scales with the rows, so dim_vehiculo
+    lands at ~33M rows (GBs serialized) — its lookup is never
+    hint-broadcast (etl/fact.py::_RI_LOOKUPS), so it runs as an
+    AQE-planned shuffle join, the same shape a 1000-executor cluster uses
+    at 100 TB.
 
     The source CSV (~7.3 GB) is generated once into the bench cache by the
     parallel chunked writer and reused across rounds."""
@@ -243,30 +251,11 @@ def sri_etl_replay_100x(spark, *, shuffle_partitions: int | None = 128) -> dict:
     # noise, a median would triple a 25-minute block, and its cross-round
     # cost gate is the shuffle and spill BYTES the ledger records for the
     # build (shuffle_gate), which don't jitter with host load.
-    #
-    # 128 shuffle partitions, not the session's cores=32 default: the r11
-    # knob forensics (docs/ETL_100X_knobs_r11.json) measured this point
-    # LAYOUT-bound — 128 reducers cut wall 646->416 s (-35%) and disk
-    # spill 35.7->10.6 GiB (-70%) at byte-identical shuffle volume
-    # (~87 GiB, +1.2%) — and 128 is inside the tuning.py prescription for
-    # the build's widest shuffles (~8-20 GiB / 128 MiB-per-task => 64-160
-    # tasks). This is the config a cluster would run, so it is the config
-    # the growth curve should measure. `shuffle_partitions=None` leaves the
-    # session layout untouched — the escape hatch the knob-forensics sweep
-    # needs to measure the TRUE 32-partition layout (ADVICE r11: the
-    # unconditional set here silently overrode the sweep's builder-level
-    # config, so both labeled layouts actually ran at 128).
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    effective_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    spark.conf.set("spark.sql.shuffle.partitions", str(ETL_100X_SHUFFLE_PARTITIONS))
 
     def run():
-        tables = run_pipeline(
-            spark,
-            csv_path,
-            EtlConfig(mode="fixed", scalable_keys=True, broadcast_lookups=False),
-        )
+        tables = run_pipeline(spark, csv_path, EtlConfig(mode="fixed"))
         return write_star(tables, out_dir)
 
     try:
@@ -280,9 +269,7 @@ def sri_etl_replay_100x(spark, *, shuffle_partitions: int | None = 128) -> dict:
         "fact_rows": report["fact_registro_vehiculos"]["total_registros"],
         "dim_vehiculo_rows": report["dim_vehiculo"]["total_registros"],
         "source_rows": n,
-        "scalable_keys": True,
-        "broadcast_lookups": False,
-        "shuffle_partitions": effective_parts,
+        "shuffle_partitions": ETL_100X_SHUFFLE_PARTITIONS,
     }
 
 

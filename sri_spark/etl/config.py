@@ -12,6 +12,11 @@ Two semantic modes (SURVEY §7.1):
 
 ``run_date`` replaces the reference's ``datetime.now().date()`` (reference
 dags/sri_vehiculos_etl_dag.py:462-463) so parity outputs are deterministic.
+
+The surrogate-key path and the lookup join strategies are not options: the
+build picks them from what it can observe, the source's planned size
+(`operators.keys.fits_one_task`) and which dims stay bounded as the data
+grows (`etl/fact.py::_RI_LOOKUPS`).
 """
 
 from __future__ import annotations
@@ -31,23 +36,12 @@ class EtlConfig:
     # it through the reference's positional-order global sort — use fixed
     # mode (1:1 lookups) for real workloads, as the survey prescribes
     max_fanout_factor: float = 100.0
-    # force broadcast of the dimension sides of the fact lookups. Right for
-    # dims up to a few hundred MB (production dim_vehiculo: 331k rows); set
-    # False when a dim outgrows executor memory — joins fall back to
-    # Catalyst/AQE strategy selection (sort-merge with skew splitting)
-    broadcast_lookups: bool = True
     # reference semantics fill unmatched lookup FKs with 1 before loading,
     # which makes null-FK validation vacuous (the reference's own check never
     # fires). False keeps misses as nulls, so the null-FK counts observed in
     # the fact write are real and the max_null_percentage threshold (the
     # `gate=` of write_star, or quality_report(enforce=True)) actually gates
     fill_missing_fk: bool = True
-    # assign ID_Registro with the sort-free two-phase ranking
-    # (operators.keys.add_surrogate_key_scalable). Costs one extra shuffle +
-    # a per-partition-count job, so it only pays off once the fact outgrows a
-    # single executor's sort buffer (~10M+ rows); identical key values either
-    # way (same total order)
-    scalable_keys: bool = False
 
     def __post_init__(self) -> None:
         if self.mode not in ("parity", "fixed"):

@@ -29,17 +29,26 @@ from sri_spark.etl.schema import (
 from sri_spark.etl.source import SRC_ID, pandas_str, pandas_str_double
 from sri_spark.functions.cleaning import clean_text
 from sri_spark.functions.dates import date_parts, nombre_dia_es, nombre_mes_es
-from sri_spark.operators.keys import add_surrogate_key, add_surrogate_key_scalable
+from sri_spark.operators.caching import scoped_persist
+from sri_spark.operators.keys import (
+    add_surrogate_key,
+    add_surrogate_key_scalable,
+    fits_one_task,
+)
+
+_CALENDAR_START = "2020-01-01"
 
 
 def build_dim_tiempo(spark: SparkSession) -> DataFrame:
     """Generated daily calendar 2020-01-01..2025-12-31, 2,192 rows
     (reference dags/sri_vehiculos_etl_dag.py:50-121). Narrow generate —
-    no shuffle; surrogate key ordered by date (same order pandas used)."""
+    no shuffle. The days are consecutive, so the key in date order (the
+    order pandas used) is the day's offset from the first one: arithmetic,
+    with no window and no single-partition exchange."""
     days = spark.range(1).select(
         F.explode(
             F.sequence(
-                F.to_date(F.lit("2020-01-01")),
+                F.to_date(F.lit(_CALENDAR_START)),
                 F.to_date(F.lit("2025-12-31")),
                 F.expr("interval 1 day"),
             )
@@ -52,9 +61,11 @@ def build_dim_tiempo(spark: SparkSession) -> DataFrame:
         nombre_mes_es(F.col("FechaCompleta")).alias("NombreMes"),
         nombre_dia_es(F.col("FechaCompleta")).alias("NombreDiaSemana"),
     )
-    dim = add_surrogate_key(dim, "ID_Tiempo", [F.col("FechaCompleta")])
     return dim.select(
-        "ID_Tiempo", "FechaCompleta", "Anio", "Trimestre", "Mes", "Dia",
+        (F.datediff("FechaCompleta", F.lit(_CALENDAR_START)) + 1)
+        .cast("long")
+        .alias("ID_Tiempo"),
+        "FechaCompleta", "Anio", "Trimestre", "Mes", "Dia",
         "NombreMes", "NombreDiaSemana",
     )
 
@@ -72,19 +83,18 @@ def build_dim_vehiculo(src: DataFrame, cfg: EtlConfig) -> DataFrame:
     occurrence, text nulls become 'NAN'.
     fixed: standardize first, then dedup, key by natural sort, nulls stay null.
 
-    Physically: the dedup is one hash-aggregate shuffle on the 12 columns with
-    map-side partial aggregation; the key assignment sorts only the deduped
-    output (331k rows at production scale — SURVEY §7.4). Unlike the other
-    dims, dim_vehiculo is DATA-SIZED (most source rows carry a distinct
-    vehicle combo), so with ``cfg.scalable_keys`` its surrogate keys use the
-    same sort-free two-phase ranking as the fact's ID_Registro — identical
-    key values (same total order), no single-partition window sort.
+    Physically: the dedup is one hash-aggregate shuffle on the 12 columns
+    with map-side partial aggregation. Unlike the other dims, dim_vehiculo
+    is DATA-SIZED (most source rows carry a distinct vehicle combo), so in
+    fixed mode a source larger than one scan task (`fits_one_task`) keys it
+    with the sort-free two-phase ranking the fact uses: identical key
+    values (same total order), no single-partition window sort. Parity
+    mode always uses the window keyer: it is a small-fixture tool.
     """
-    keyer = add_surrogate_key_scalable if cfg.scalable_keys else add_surrogate_key
     cols = VEHICULO_COLS
     if cfg.parity:
         dedup = src.groupBy(*cols).agg(F.min(SRC_ID).alias("__ord"))
-        dedup = keyer(dedup, "ID_Vehiculo", [F.col("__ord")])
+        dedup = add_surrogate_key(dedup, "ID_Vehiculo", [F.col("__ord")])
         cleaned = dedup.select(
             "ID_Vehiculo",
             *[
@@ -105,32 +115,22 @@ def build_dim_vehiculo(src: DataFrame, cfg: EtlConfig) -> DataFrame:
         )
         std = std.withColumn(COL_COLOR2, F.coalesce(F.col(f"`{COL_COLOR2}`"), F.lit("N/A")))
         key_cols = [F.col(f"`{c}`") for c in cols]
-        if cfg.scalable_keys:
-            # r14 (docs/ETL_STAGE_ATTRIB_r14.json): dropDuplicates-then-
-            # range-repartition paid TWO data-sized exchanges of this
-            # data-sized dim. Range-partition FIRST: equal rows co-locate
-            # (RangePartitioning on the full column set satisfies the
-            # distinct aggregate's ClusteredDistribution), so the dedup
-            # runs with no second exchange, the within-partition sort
-            # establishes the key order once, and the keyer trusts the
-            # layout (input_ordered) instead of re-shuffling. Same total
-            # order — range boundaries differ (sampled pre-dedup) but
-            # order does not — so key VALUES are identical. The persist
-            # replaces the keyer's internal one: the offsets job and every
-            # dim consumer read one materialization.
-            from sri_spark.operators.caching import scoped_persist
-
+        if fits_one_task(src):
+            filled = add_surrogate_key(std.dropDuplicates(), "ID_Vehiculo", key_cols)
+        else:
+            # range-partition FIRST (docs/ETL_STAGE_ATTRIB_r14.json):
+            # equal rows co-locate (RangePartitioning on the full column
+            # set satisfies the distinct aggregate's ClusteredDistribution),
+            # so the dedup runs with no second exchange and the
+            # within-partition sort establishes the key order once. The
+            # persist lets the keyer's offsets job and every dim consumer
+            # read one materialization of the ordered layout.
             ordered = scoped_persist(
                 std.repartitionByRange(*key_cols)
                 .dropDuplicates()
                 .sortWithinPartitions(*key_cols)
             )
-            filled = add_surrogate_key_scalable(
-                ordered, "ID_Vehiculo", key_cols, input_ordered=True
-            )
-        else:
-            dedup = std.dropDuplicates()
-            filled = keyer(dedup, "ID_Vehiculo", key_cols)
+            filled = add_surrogate_key_scalable(ordered, "ID_Vehiculo")
     renamed = filled.withColumnsRenamed(VEHICULO_RENAME)
     return renamed.select("ID_Vehiculo", *VEHICULO_RENAME.values())
 

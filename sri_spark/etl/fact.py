@@ -2,9 +2,11 @@
 
 The reference re-reads the CSV, reads all four dims back from BigQuery, and
 runs four sequential pandas left-merges. Here the dims are in-session
-DataFrames (no round-trip — SURVEY §3.1) and every lookup is a broadcast hash
-join: dims are orders of magnitude smaller than the fact, so the fact side
-never shuffles for any of the four lookups.
+DataFrames (no round-trip — SURVEY §3.1). The three bounded dims (tiempo,
+transaccion, ubicacion) are hint-broadcast, so the fact side never shuffles
+for them; dim_vehiculo grows with the data, so its lookup is left to the
+planner and AQE (`_RI_LOOKUPS` holds the one policy, shared with
+`flag_integrity`).
 
 Quirk handling (SURVEY §1.3):
 - Q1 parity: the reference's date-column candidate list never matches the real
@@ -21,9 +23,9 @@ Quirk handling (SURVEY §1.3):
 
 ID_Registro reproduces pandas' post-merge positional order: source file order,
 then each lookup's dim order for fan-out rows — i.e. row_number over
-(__src_id, ID_Vehiculo, ID_Transaccion). At 100 TB this global sort is the
-one non-scalable step; swap in operators.keys.add_surrogate_key_scalable
-(dense per-partition offsets) when exact reference key order isn't required.
+(__src_id, ID_Vehiculo, ID_Transaccion). A fixed-mode source larger than one
+scan task (`operators.keys.fits_one_task`) gets the same keys from the
+sort-free two-phase ranking instead of that single-partition sort.
 """
 
 from __future__ import annotations
@@ -46,7 +48,11 @@ from sri_spark.etl.schema import (
 )
 from sri_spark.etl.source import SRC_ID, pandas_str_double
 from sri_spark.functions.cleaning import clean_text, coerce_date
-from sri_spark.operators.keys import add_surrogate_key, add_surrogate_key_scalable
+from sri_spark.operators.keys import (
+    add_surrogate_key,
+    add_surrogate_key_scalable,
+    fits_one_task,
+)
 
 
 def check_fanout(dim_vehiculo: DataFrame, dim_transaccion: DataFrame, cfg: EtlConfig) -> float:
@@ -76,8 +82,9 @@ def check_fanout(dim_vehiculo: DataFrame, dim_transaccion: DataFrame, cfg: EtlCo
 # the fact's referential-integrity flag: true when all four keys find
 # their dim row (reference :735-748); never written to a sink
 RI = "__ri"
-# (dim, surrogate key, broadcast?) of the flag's lookups: the bounded dims
-# are hint-broadcast; dim_vehiculo grows with the data, so AQE decides
+# (dim, surrogate key, broadcast?) of the star's lookups, used by the fact
+# build and the integrity flag: the bounded dims are hint-broadcast;
+# dim_vehiculo grows with the data, so the planner and AQE decide
 _RI_LOOKUPS = (
     ("dim_tiempo", "ID_Tiempo", True),
     ("dim_vehiculo", "ID_Vehiculo", False),
@@ -117,8 +124,10 @@ def build_fact(
     cfg: EtlConfig,
 ) -> DataFrame:
     fact = src
-    # broadcast hint applied per cfg (see EtlConfig.broadcast_lookups)
-    hint = F.broadcast if cfg.broadcast_lookups else (lambda df: df)
+    bounded = {name: b for name, _key, b in _RI_LOOKUPS}
+
+    def hint(name: str, dim: DataFrame) -> DataFrame:
+        return F.broadcast(dim) if bounded[name] else dim
 
     # ---- date derivation (Q1/Q2) -----------------------------------------
     if cfg.parity:
@@ -128,7 +137,7 @@ def build_fact(
             "__fecha", coerce_date(F.col(f"`{COL_FECHA_PROCESO}`"), "M/d/yyyy")
         ).filter(F.col("__fecha").isNotNull())
 
-    # ---- scalable ID_Registro, assigned BEFORE the lookups (r14) ----------
+    # ---- two-phase ID_Registro for a large source, BEFORE the lookups ----
     # In fixed mode every lookup dim is deduplicated on its join key, so the
     # four left joins are 1:1 — the surviving row set equals the
     # date-filtered source and __src_id stays UNIQUE per fact row. The key
@@ -136,24 +145,18 @@ def build_fact(
     # __src_id alone, and __src_id order IS the source frame's
     # (partition, row) order: monotonically_increasing_id ascends over it by
     # construction, and read_sri_csv's fan-out preserves it (range
-    # repartition by __src_id + within-partition sort). Ranking HERE — on
-    # the filter straight off the persisted source, with
-    # input_ordered=True — costs zero exchanges and zero sorts, where the
-    # post-join assignment paid a range exchange + a full sort + a second
-    # data-sized persist of the joined fact (two of the 100x replay leg's
-    # four ~7 GiB wide shuffles and its 17.5 GiB spill,
-    # docs/ETL_STAGE_ATTRIB_r14.json). Parity mode keeps the post-join
-    # path: its m:m fan-out duplicates __src_id, so the tie-breaking dim
-    # keys only exist after the joins.
-    pre_keyed = cfg.scalable_keys and not cfg.parity
+    # repartition by __src_id + within-partition sort). Ranking HERE, on
+    # the filter straight off the persisted source, costs zero exchanges
+    # and zero sorts (docs/ETL_STAGE_ATTRIB_r14.json). Parity mode keeps
+    # the window keyer after the joins: its m:m fan-out duplicates
+    # __src_id, so the tie-breaking dim keys only exist after the joins.
+    pre_keyed = not cfg.parity and not fits_one_task(src)
     if pre_keyed:
-        fact = add_surrogate_key_scalable(
-            fact, "ID_Registro", [F.col(SRC_ID)], input_ordered=True
-        )
+        fact = add_surrogate_key_scalable(fact, "ID_Registro")
 
-    # ---- tiempo lookup (1:1, broadcast; reference :469-474) ---------------
+    # ---- tiempo lookup (1:1; reference :469-474) ---------------------------
     fact = fact.join(
-        hint(dim_tiempo.select("ID_Tiempo", "FechaCompleta")),
+        hint("dim_tiempo", dim_tiempo.select("ID_Tiempo", "FechaCompleta")),
         fact["__fecha"] == dim_tiempo["FechaCompleta"],
         "left",
     ).drop("FechaCompleta")
@@ -163,7 +166,7 @@ def build_fact(
     if not cfg.parity:
         veh = veh.groupBy("CodigoVehiculo").agg(F.min("ID_Vehiculo").alias("ID_Vehiculo"))
     fact = fact.join(
-        hint(veh),
+        hint("dim_vehiculo", veh),
         fact[f"`{COL_CODIGO}`"] == veh["CodigoVehiculo"],
         "left",
     ).drop("CodigoVehiculo")
@@ -179,7 +182,7 @@ def build_fact(
     if not cfg.parity:
         left_tt, left_ts = clean_text(left_tt), clean_text(left_ts)
     fact = fact.join(
-        hint(tra),
+        hint("dim_transaccion", tra),
         (left_tt == tra["TipoTransaccion"]) & (left_ts == tra["TipoServicio"]),
         "left",
     ).drop("TipoTransaccion", "TipoServicio")
@@ -191,23 +194,13 @@ def build_fact(
         canton_key = F.col(f"`{COL_CANTON}`").cast("long").cast("string")
     ubi = dim_ubicacion.select("ID_Ubicacion", "CodigoCanton")
     fact = fact.join(
-        hint(ubi), canton_key == ubi["CodigoCanton"], "left"
+        hint("dim_ubicacion", ubi), canton_key == ubi["CodigoCanton"], "left"
     ).drop("CodigoCanton")
 
     # ---- keys + measures (reference :534-549) -----------------------------
-    key_order = [F.col(SRC_ID), F.col("ID_Vehiculo"), F.col("ID_Transaccion")]
-    if pre_keyed:
-        pass  # assigned before the lookups — see the r14 block above
-    elif cfg.scalable_keys:
-        # same deterministic total order, assigned via range-partitioned
-        # local positions + offsets — no single-partition sort; identical
-        # key VALUES to the row_number path (dense rank over the same total
-        # order), so it is valid in parity mode too once the fan-out makes
-        # the global sort the bottleneck
-        fact = add_surrogate_key_scalable(fact, "ID_Registro", key_order)
-    else:
-        # exact pandas post-merge positional order — global row_number
-        # (cheapest below ~10M rows)
+    if not pre_keyed:
+        # pandas post-merge positional order — global row_number
+        key_order = [F.col(SRC_ID), F.col("ID_Vehiculo"), F.col("ID_Transaccion")]
         fact = add_surrogate_key(fact, "ID_Registro", key_order)
     fact = fact.withColumn("CantidadRegistros", F.lit(1).cast("long")).withColumn(
         "MontoAvaluo",

@@ -3,7 +3,7 @@
 The reference's six tasks (4 dim ETLs -> barrier -> fact -> validation)
 collapse into one lazy plan: the CSV is scanned once per consumer with column
 pruning, dims never round-trip through an external warehouse, and the fact's
-four lookups broadcast the freshly-built dims.
+lookups join the freshly-built dims in session (the bounded ones broadcast).
 """
 
 from __future__ import annotations
@@ -72,8 +72,6 @@ def write_star(
     tables: dict[str, DataFrame],
     out_dir: str,
     *,
-    partition_fact_by_year: bool = True,
-    clustering_fields: tuple[str, ...] = ("Anio", "Marca"),
     fmt: str = "parquet",
     gate: QualityThresholds | None = None,
 ) -> dict:
@@ -105,21 +103,20 @@ def write_star(
     `project.dataset`; needs the connector jar + GCP credentials, so tests
     exercise it through a registered connector-shaped fake instead).
 
-    `partition_fact_by_year` + `clustering_fields` activate the physical
-    design the reference declared but never consumed
-    (config/variables.yaml:18-19 `clustering_fields: ["Anio", "Marca"]`,
-    `partitioning_field`; the DAG at dags/sri_vehiculos_etl_dag.py never
-    reads either — SURVEY §1.3 Q6). The Spark-lake equivalent of BigQuery's
-    date-partition + clustering:
+    The fact is laid out in the physical design the reference declared but
+    never consumed (config/variables.yaml:18-19 `clustering_fields:
+    ["Anio", "Marca"]`, `partitioning_field`; the DAG at
+    dags/sri_vehiculos_etl_dag.py never reads either — SURVEY §1.3 Q6). The
+    Spark-lake equivalent of BigQuery's date-partition + clustering:
 
     - **Partition** the fact by ``Anio`` (the year of its tiempo FK) —
       directory-level partition pruning, so a year-filtered scan at 100 TB
       touches only that year's files (PartitionFilters in the scan node).
-    - **Cluster** within each partition by the remaining clustering fields
-      (``Marca``, denormalized from dim_vehiculo exactly as BigQuery
-      clustering requires the column in the table): rows are range-routed on
-      (Anio, Marca) and sorted within every output file, so parquet
-      row-group min/max stats make brand-filtered scans skip row groups.
+    - **Cluster** within each partition by ``Marca`` (denormalized from
+      dim_vehiculo exactly as BigQuery clustering requires the column in
+      the table): rows are range-routed on (Anio, Marca) and sorted within
+      every output file, so parquet row-group min/max stats make
+      brand-filtered scans skip row groups.
 
     Scale shape: one range shuffle (`repartitionByRange` samples boundaries,
     so hot years split across many tasks instead of one file per year) + a
@@ -134,12 +131,11 @@ def write_star(
         raise ValueError(f"gate= needs the staged parquet sink; {fmt!r} writes in place")
     observations, writers = {}, {}
     for name, df in tables.items():
-        partition = name == FACT and partition_fact_by_year
         if name == FACT:
-            df = _fact_layout(tables, partition, clustering_fields)
+            df = _fact_layout(tables)
         observations[name], df = observed(df, name, **METRICS[name]())
         writer = df.drop(RI).write.mode("overwrite")
-        writers[name] = writer.partitionBy("Anio") if partition else writer
+        writers[name] = writer.partitionBy("Anio") if name == FACT else writer
 
     def assemble_and_gate() -> None:
         report = assemble(tables, observations)
@@ -159,20 +155,9 @@ def write_star(
     return quality_report(tables)
 
 
-def _fact_layout(
-    tables: dict[str, DataFrame], partition: bool, clustering_fields: tuple[str, ...]
-) -> DataFrame:
-    """The fact as write_star lays it out, carrying the `RI` flag."""
-    if not partition:
-        return flag_integrity(tables)
-    cluster = [c for c in clustering_fields if c != "Anio"]
-    carry = {"dim_tiempo": ["Anio"]}
-    if "Marca" in cluster and "Marca" not in tables[FACT].columns:
-        carry["dim_vehiculo"] = ["Marca"]
+def _fact_layout(tables: dict[str, DataFrame]) -> DataFrame:
+    """The fact as write_star lays it out: `Anio` and `Marca` carried from
+    their dims, range-routed and sorted on both, with the `RI` flag."""
+    carry = {"dim_tiempo": ["Anio"], "dim_vehiculo": ["Marca"]}
     df = flag_integrity(tables, carry).na.fill({"Anio": 0})
-    cluster = [c for c in cluster if c in df.columns]
-    if cluster:
-        df = df.repartitionByRange("Anio", *cluster).sortWithinPartitions(
-            "Anio", *cluster
-        )
-    return df
+    return df.repartitionByRange("Anio", "Marca").sortWithinPartitions("Anio", "Marca")

@@ -51,9 +51,9 @@ def read_sri_csv(spark: SparkSession, path: str) -> DataFrame:
     # balance (ids are dense), but it PRESERVES the invariant that the
     # source frame is partition-ordered by __src_id — either way rows
     # arrive ascending over (partition, row) — which lets the fixed-mode
-    # fact assign its scalable ID_Registro with zero exchanges
-    # (operators/keys.py input_ordered; the ids themselves are stamped
-    # before the exchange, so their VALUES are identical in all layouts).
+    # fact of a large source assign its two-phase ID_Registro with zero
+    # exchanges (operators/keys.py; the ids themselves are stamped before
+    # the exchange, so their VALUES are identical in all layouts).
     from sri_spark.session import default_parallelism
 
     stamped = with_src_id(df)

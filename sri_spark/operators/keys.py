@@ -7,41 +7,37 @@ contract is: **surrogate keys are 1..N in the total order of an explicit,
 caller-supplied ordering key** (for dims: the natural key; for the calendar:
 the date).
 
-Two implementations:
+Two implementations, and one rule that picks between them:
 
 - `add_surrogate_key` — `row_number()` over a global `Window.orderBy(...)`.
   Exact and simple, but a global-sort single partition; right for dimension
-  tables (≤ a few million rows), wrong for a 100 TB fact.
-- `add_surrogate_key_scalable` — sort-free two-phase ranking for huge inputs:
-  partition-local positions + per-partition offsets (a tiny driver-side
-  cumulative sum over partition counts, not a data collect). Keys are dense
-  1..N and deterministic given a deterministic input partitioning+order.
+  tables and for any input one task can hold.
+- `add_surrogate_key_scalable` — sort-free two-phase ranking of an input
+  that is already partition-ordered: partition-local positions plus
+  per-partition offsets (a tiny driver-side cumulative sum over partition
+  counts, not a data collect). Keys are dense 1..N and equal to the
+  window keyer's over the same total order.
+- `fits_one_task` — the choice: the window keyer while the planner's size
+  estimate of the source fits the input Spark gives one scan task, the
+  two-phase keyer beyond it. It reads the estimate of the optimized plan,
+  so it runs no job, and nothing about it is configured.
 
-r14 rewrite of the scalable form, motivated by the 100x ETL replay's
-per-stage attribution (docs/ETL_STAGE_ATTRIB_r14.json): the old
-`row_number() OVER (PARTITION BY spark_partition_id())` forced an Exchange
-hashpartitioning(pid) — a FULL data-sized shuffle of the wide input (one of
-the fact leg's four ~7 GiB exchanges) — purely to compute a row's position
-within the partition it was ALREADY in. `monotonically_increasing_id()`
-encodes exactly that position for free: its layout is
-`(partition_id << 33) | row_index`, so `mid & (2^33 - 1)` IS the 0-based
-partition-local position, evaluated as a projection with no exchange, no
-window, no sort. (Upper bound: 2^33 ≈ 8.6B rows per partition — far above
-any sane task size; the id layout is a documented stable contract of the
-function.)
+"Partition-ordered" means partitions form ascending ranges of the ordering
+key and rows within each partition are ascending. Two provable sources of
+that layout exist in this repo: a frame freshly stamped by
+`source.with_src_id` and ranked by that id (monotonically_increasing_id is
+ascending over (partition, row) BY CONSTRUCTION), and
+`repartitionByRange(k).sortWithinPartitions(k)` done upstream (fused with
+dim_vehiculo's dedup). The keyer does not persist its input: the rank is
+deterministic given the (cached) upstream layout, so the offsets job and
+the final plan each read that cache.
 
-`input_ordered=True` additionally skips the internal
-repartitionByRange+sortWithinPartitions when the CALLER guarantees the
-frame is already partition-ordered by `order_by` — i.e. partitions form
-ascending ranges of the ordering key and rows within each partition are
-ascending. Two provable sources of that layout exist in this repo:
-a frame freshly stamped by `source.with_src_id` and ranked by that id
-(monotonically_increasing_id is ascending over (partition, row) BY
-CONSTRUCTION), and `repartitionByRange(k).sortWithinPartitions(k)` done
-upstream (e.g. fused with dim_vehiculo's dedup). In that mode the input is
-also NOT persisted here: the rank is deterministic given the (cached)
-upstream layout, so the offsets job and the final plan may each read the
-cache instead of writing a second data-sized cache of the wide rows.
+The partition-local position is decoded from
+`monotonically_increasing_id()`, whose layout is
+`(partition_id << 33) | row_index`: `mid & (2^33 - 1)` IS the 0-based
+position, evaluated as a projection with no exchange, no window, no sort.
+Upper bound: 2^33 ≈ 8.6B rows per partition — far above any sane task
+size; the id layout is a documented stable contract of the function.
 """
 
 from __future__ import annotations
@@ -62,47 +58,30 @@ def add_surrogate_key(
     return df.withColumn(key_name, F.row_number().over(w).cast("long"))
 
 
-def add_surrogate_key_scalable(
-    df: DataFrame,
-    key_name: str,
-    order_by: list[Column | str] | None = None,
-    *,
-    input_ordered: bool = False,
-) -> DataFrame:
-    """Dense 1..N key without a global sort.
+def fits_one_task(df: DataFrame) -> bool:
+    """True when the planner's size estimate of `df` is at most
+    `spark.sql.files.maxPartitionBytes`, the input Spark gives one scan
+    task. Reads the optimized plan's statistics: plans, runs no job."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    return int(size) <= conf.filesMaxPartitionBytes()
 
-    Phase 1: range-partition + sort within partitions by `order_by` (a
-    deterministic global order without a single-partition shuffle) —
-    skipped with `input_ordered=True` when the caller already guarantees
-    that layout (see module docstring).
-    Phase 2: partition-local 0-based positions decoded from
+
+def add_surrogate_key_scalable(df: DataFrame, key_name: str) -> DataFrame:
+    """Dense 1..N key of a partition-ordered `df` without a global sort.
+
+    Partition-local 1-based positions decoded from
     `monotonically_increasing_id` (a pure projection — no window, no
-    exchange) + per-partition row-count offsets (one tiny collect of a
-    row per partition, not data).
-
-    Key VALUES are identical to `add_surrogate_key` over the same total
-    order: rank in partition-range order + within-partition sorted order
-    = global rank.
+    exchange) plus per-partition row-count offsets (one tiny collect of a
+    row per partition, not data). Rank in partition order + position
+    within the partition = global rank, so key VALUES are identical to
+    `add_surrogate_key` over the order the layout follows.
     """
-    if order_by and not input_ordered:
-        df = df.repartitionByRange(*order_by).sortWithinPartitions(*order_by)
-
     mid = F.monotonically_increasing_id()
     with_local = df.withColumn("__pid", F.spark_partition_id()).withColumn(
-        # 1-based position of the row within its partition, decoded from
-        # the id layout — replaces a row_number window whose
-        # hashpartitioning(__pid) exchange moved every (wide) row (r14)
         "__local_rn",
         (mid.bitwiseAND(F.lit(_MID_ROW_MASK)) + F.lit(1)).cast("long"),
     )
-    if not input_ordered:
-        # persist so the count-per-partition action and the final plan see
-        # the same partitioning (the range shuffle above is re-sampled per
-        # materialization); input_ordered callers read a deterministic
-        # cached upstream instead, so no second data-sized cache is built
-        from sri_spark.operators.caching import scoped_persist
-
-        with_local = scoped_persist(with_local)
     # one row per partition — tiny collect, not data
     counts = {
         r["__pid"]: r["cnt"]

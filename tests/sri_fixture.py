@@ -168,3 +168,15 @@ def write_sri_csv(
             for args in chunks:
                 f.write(_chunk_csv_text(args))
     os.replace(tmp_path, path)
+
+
+def force_key_path(monkeypatch, fits: bool) -> None:
+    """Make the star build take the window keys (`fits=True`) or the
+    two-phase keys (`fits=False`) whatever the source's size, by patching
+    the one decision function, `operators.keys.fits_one_task`, where the
+    dim and fact builders bind it."""
+    import sri_spark.etl.dims as dims
+    import sri_spark.etl.fact as fact
+
+    for module in (dims, fact):
+        monkeypatch.setattr(module, "fits_one_task", lambda df: fits)

@@ -8,9 +8,14 @@ from sri_spark.operators.keys import add_surrogate_key, add_surrogate_key_scalab
 from sri_spark.sources.testdata import load_table
 
 
+def _range_ordered(df, key: str):
+    """The partition-ordered layout add_surrogate_key_scalable ranks."""
+    return df.repartitionByRange(F.col(key)).sortWithinPartitions(key)
+
+
 def test_scalable_surrogate_key_dense_and_ordered(spark, sf_dir):
     part = load_table(spark, sf_dir, "part")
-    keyed = add_surrogate_key_scalable(part, "sk", [F.col("p_partkey")])
+    keyed = add_surrogate_key_scalable(_range_ordered(part, "p_partkey"), "sk")
     rows = keyed.select("sk", "p_partkey").collect()
     n = part.count()
     sks = sorted(r["sk"] for r in rows)
@@ -28,7 +33,7 @@ def test_scalable_matches_global_row_number(spark, sf_dir):
     }
     b = {
         r["p_partkey"]: r["sk"]
-        for r in add_surrogate_key_scalable(part, "sk", [F.col("p_partkey")]).collect()
+        for r in add_surrogate_key_scalable(_range_ordered(part, "p_partkey"), "sk").collect()
     }
     assert a == b
 

@@ -8,7 +8,7 @@ within files) by Marca. These tests prove the three observable contracts:
 
 1. a year-filtered read of the written fact PRUNES partitions
    (PartitionFilters in the FileSourceScan node, partition dir row counts),
-2. read-back contents are unchanged vs the unpartitioned write
+2. read-back contents equal the in-memory fact the star was written from
    (modulo the two denormalized physical-design columns Anio/Marca),
 3. every output file is internally sorted by Marca, so parquet row-group
    min/max stats support brand skipping.
@@ -37,10 +37,9 @@ def star_out(spark, tmp_path_factory):
     write_sri_csv(str(csv), n=800, seed=11)
     tables = run_pipeline(spark, str(csv), EtlConfig(mode="fixed", run_date=RUN_DATE))
     part_dir = str(root / "partitioned")
-    flat_dir = str(root / "flat")
-    write_star(tables, part_dir)  # defaults: partition Anio, cluster Marca
-    write_star(tables, flat_dir, partition_fact_by_year=False)
-    return spark, part_dir, flat_dir
+    write_star(tables, part_dir)  # partition Anio, cluster Marca
+    fact_rows = tables["fact_registro_vehiculos"].collect()
+    return spark, part_dir, fact_rows
 
 
 def test_partitioned_fact_prunes_on_year(star_out):
@@ -66,14 +65,14 @@ def test_partitioned_fact_prunes_on_year(star_out):
 
 
 def test_partitioned_contents_match_flat(star_out):
-    spark, part_dir, flat_dir = star_out
+    """The partitioned, clustered read-back holds exactly the flat fact
+    built in memory: same columns besides Anio/Marca, same rows."""
+    spark, part_dir, fact_rows = star_out
     part = spark.read.parquet(os.path.join(part_dir, "fact_registro_vehiculos"))
-    flat = spark.read.parquet(os.path.join(flat_dir, "fact_registro_vehiculos"))
-    # same logical fact: identical rows on the shared (non-physical) columns
-    shared = [c for c in flat.columns]
+    shared = list(fact_rows[0].asDict())
     assert set(part.columns) - set(shared) == {"Anio", "Marca"}
     a = sorted(map(tuple, part.select(*shared).collect()))
-    b = sorted(map(tuple, flat.select(*shared).collect()))
+    b = sorted(map(tuple, fact_rows))
     assert a == b
 
 

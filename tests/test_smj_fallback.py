@@ -1,12 +1,18 @@
-"""EtlConfig.broadcast_lookups=False — the scale flag's path, exercised.
+"""The fact build's lookup-hint policy and its two surrogate-key paths.
 
-The fact build broadcasts its dimension lookups by default (right for
-dims up to a few hundred MB). The config documents a fallback for dims
-that outgrow executor memory: broadcast_lookups=False drops the hints and
-lets Catalyst/AQE pick the strategy (sort-merge with skew splitting).
-Round-5 verdict item 8: prove the flag's path is EXERCISED, not just
-documented — the fallback plan really sort-merge-joins when broadcast is
-off the table, and it produces the identical fact table.
+`etl/fact.py::_RI_LOOKUPS` states one policy for the star's lookups: the
+three bounded dims (tiempo, transaccion, ubicacion) are hint-broadcast,
+and dim_vehiculo, whose size grows with the data, is left to the planner
+and AQE. With the autoBroadcast threshold disabled (the situation at
+scale: dim_vehiculo no longer fits in memory) the vehiculo lookup must
+therefore plan as a sort-merge join while the hinted three stay broadcast
+hash joins, and the rows must not change.
+
+The key path follows the source's planned size
+(`operators.keys.fits_one_task`). The large path is forced here by
+patching that one function, not by shrinking `maxPartitionBytes` (which
+would split the scan into thousands of tasks); it must give the same star,
+keys included, without the single-partition window.
 """
 
 from __future__ import annotations
@@ -16,10 +22,13 @@ import datetime as dt
 import pytest
 
 from sri_spark.etl import EtlConfig, run_pipeline
+from sri_spark.etl.schema import COL_CODIGO
+from sri_spark.etl.source import SRC_ID
 
-from tests.sri_fixture import write_sri_csv
+from tests.sri_fixture import force_key_path, write_sri_csv
 
 RUN_DATE = dt.date(2025, 7, 2)
+CFG = EtlConfig(mode="fixed", run_date=RUN_DATE)
 
 
 @pytest.fixture(scope="module")
@@ -29,67 +38,6 @@ def csv_path(tmp_path_factory):
     return str(path)
 
 
-def _fact_rows(tables):
-    fact = tables["fact_registro_vehiculos"]
-    return sorted(
-        tuple(r) for r in fact.select(sorted(fact.columns)).collect()
-    )
-
-
-def test_smj_fallback_plan_and_parity(spark, csv_path):
-    """With broadcast hints off AND autoBroadcast disabled (the situation
-    the flag exists for: no dim fits in memory), the executed fact plan
-    must contain SortMergeJoin and zero broadcast joins — and the rows
-    must match the broadcast path exactly."""
-    baseline = _fact_rows(
-        run_pipeline(spark, csv_path, EtlConfig(mode="fixed", run_date=RUN_DATE))
-    )
-    # hint nodes are erased in plan canonicalization, so the hint-free
-    # rebuild would silently reuse the broadcast-built fact CACHE instead
-    # of planning its own joins — drop it to force a real re-plan
-    spark.catalog.clearCache()
-
-    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        tables = run_pipeline(
-            spark,
-            csv_path,
-            EtlConfig(
-                mode="fixed", run_date=RUN_DATE, broadcast_lookups=False
-            ),
-        )
-        fact = tables["fact_registro_vehiculos"]
-        plan = fact._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan, plan
-        assert "BroadcastHashJoin" not in plan, plan
-        assert _fact_rows(tables) == baseline
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-
-
-def test_broadcast_hint_still_wins_when_enabled(spark, csv_path):
-    """The default path must keep broadcasting even under a disabled
-    autoBroadcast threshold — that is what the explicit hint is FOR
-    (dimension-sized sides should never sort-merge at any threshold)."""
-    spark.catalog.clearCache()  # same canonicalization trap as above
-    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        tables = run_pipeline(
-            spark, csv_path, EtlConfig(mode="fixed", run_date=RUN_DATE)
-        )
-        plan = (
-            tables["fact_registro_vehiculos"]
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "BroadcastHashJoin" in plan, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-
-
 def _table_rows(tables, name):
     df = tables[name]
     rows = [tuple(r) for r in df.select(sorted(df.columns)).collect()]
@@ -97,43 +45,79 @@ def _table_rows(tables, name):
     return sorted(rows, key=lambda t: tuple((v is not None, v) for v in t))
 
 
-def test_scalable_keys_identical_star(spark, csv_path):
-    """EtlConfig.scalable_keys swaps the global-sort surrogate keys — the
-    fact's ID_Registro AND the data-sized dim_vehiculo's ID_Vehiculo — for
-    the sort-free two-phase ranking (operators.keys.add_surrogate_key_scalable).
-    Same total order by contract, so every key VALUE, every dim row, and
-    every joined fact row must be identical to the default window path."""
-    base = run_pipeline(
-        spark, csv_path, EtlConfig(mode="fixed", run_date=RUN_DATE)
-    )
-    baseline = {
-        name: _table_rows(base, name)
-        for name in ("dim_vehiculo", "fact_registro_vehiculos")
-    }
+def _plan_lines(df) -> list[str]:
+    return df._jdf.queryExecution().executedPlan().toString().splitlines()
+
+
+def _joins(df, kind: str) -> list[str]:
+    return [line for line in _plan_lines(df) if f"{kind} [" in line]
+
+
+def _keying_windows(df, first_order_col: str) -> list[str]:
+    """Plan lines of a global row_number window whose order starts with
+    `first_order_col` (the keyer's window for that table)."""
+    spec = f"row_number() windowspecdefinition({first_order_col}#"
+    return [line for line in _plan_lines(df) if "Window [" in line and spec in line]
+
+
+def test_smj_fallback_plan_and_parity(spark, csv_path):
+    """autoBroadcast off: the vehiculo lookup sort-merges, the three
+    bounded lookups stay broadcast, and the fact's rows equal the default
+    build's."""
+    baseline = _table_rows(run_pipeline(spark, csv_path, CFG), "fact_registro_vehiculos")
+    # hint nodes are erased in plan canonicalization, so the rebuild would
+    # silently reuse the default build's fact CACHE instead of planning its
+    # own joins — drop it to force a real re-plan
+    spark.catalog.clearCache()
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        tables = run_pipeline(spark, csv_path, CFG)
+        fact = tables["fact_registro_vehiculos"]
+        smj, bhj = _joins(fact, "SortMergeJoin"), _joins(fact, "BroadcastHashJoin")
+        assert len(smj) == 1 and "CodigoVehiculo" in smj[0], smj
+        assert len(bhj) == 3, bhj
+        assert not any("CodigoVehiculo" in line for line in bhj), bhj
+        assert _table_rows(tables, "fact_registro_vehiculos") == baseline
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+        spark.catalog.clearCache()
+
+
+def test_broadcast_hint_still_wins_when_enabled(spark, csv_path):
+    """autoBroadcast at its default: a vehiculo lookup that fits the
+    threshold is broadcast by the planner without a hint, so all four
+    lookups are broadcast hash joins — the plan every star small enough
+    to broadcast that dim keeps."""
+    spark.catalog.clearCache()  # same canonicalization trap as above
+    fact = run_pipeline(spark, csv_path, CFG)["fact_registro_vehiculos"]
+    try:
+        assert len(_joins(fact, "BroadcastHashJoin")) == 4
+        assert not _joins(fact, "SortMergeJoin")
+    finally:
+        spark.catalog.clearCache()
+
+
+def test_scalable_keys_identical_star(spark, csv_path, monkeypatch):
+    """The two-phase key path (operators.keys.add_surrogate_key_scalable on
+    the fact's ID_Registro and the data-sized dim_vehiculo's ID_Vehiculo)
+    orders by the same total order as the window keyer, so every key
+    value, dim row and fact row equals the default path's, and neither
+    table's plan keeps the single-partition keying window."""
+    base = run_pipeline(spark, csv_path, CFG)
+    names = ("dim_vehiculo", "fact_registro_vehiculos")
+    baseline = {name: _table_rows(base, name) for name in names}
+    # the checks below must see the windows they assert away on the other path
+    assert _keying_windows(base["fact_registro_vehiculos"], SRC_ID)
+    assert _keying_windows(base["dim_vehiculo"], COL_CODIGO)
     spark.catalog.clearCache()  # drop the persisted star before re-planning
-    scal = run_pipeline(
-        spark,
-        csv_path,
-        EtlConfig(mode="fixed", run_date=RUN_DATE, scalable_keys=True),
-    )
-    for name, want in baseline.items():
-        assert _table_rows(scal, name) == want, name
-    spark.catalog.clearCache()
 
-
-def test_scalable_keys_identical_dim_parity_mode(spark, csv_path):
-    """Parity mode orders dim_vehiculo keys by first-occurrence file order
-    (min __src_id) — also a unique total order, so the scalable keyer must
-    reproduce the exact parity key assignment too."""
-    base = run_pipeline(
-        spark, csv_path, EtlConfig(mode="parity", run_date=RUN_DATE)
-    )
-    want = _table_rows(base, "dim_vehiculo")
-    spark.catalog.clearCache()
-    scal = run_pipeline(
-        spark,
-        csv_path,
-        EtlConfig(mode="parity", run_date=RUN_DATE, scalable_keys=True),
-    )
-    assert _table_rows(scal, "dim_vehiculo") == want
-    spark.catalog.clearCache()
+    force_key_path(monkeypatch, fits=False)
+    two_phase = run_pipeline(spark, csv_path, CFG)
+    try:
+        for name, want in baseline.items():
+            assert _table_rows(two_phase, name) == want, name
+        assert not _keying_windows(two_phase["fact_registro_vehiculos"], SRC_ID)
+        assert not _keying_windows(two_phase["dim_vehiculo"], COL_CODIGO)
+    finally:
+        spark.catalog.clearCache()

@@ -77,6 +77,21 @@ def test_dim_tiempo_parity(parity_tables):
     )
 
 
+def test_dim_tiempo_keys_follow_dates(spark):
+    """ID_Tiempo is 1..2,192 in date order, computed from the date alone:
+    the dim's plan has no window and no exchange."""
+    from sri_spark.etl.dims import build_dim_tiempo
+
+    dim = build_dim_tiempo(spark)
+    rows = sorted(dim.select("ID_Tiempo", "FechaCompleta").collect())
+    assert [r["ID_Tiempo"] for r in rows] == list(range(1, 2193))
+    dates = [r["FechaCompleta"] for r in rows]
+    assert dates[0] == dt.date(2020, 1, 1) and dates[-1] == dt.date(2025, 12, 31)
+    assert all(b - a == dt.timedelta(days=1) for a, b in zip(dates, dates[1:]))
+    plan = dim._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan and "Exchange" not in plan, plan
+
+
 def test_dim_vehiculo_parity(parity_tables, pandas_src):
     assert_frames_match(
         parity_tables["dim_vehiculo"],

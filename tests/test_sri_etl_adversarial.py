@@ -7,6 +7,11 @@ exception. The unit fixtures inject single bad rows (one unparseable
 date, one non-numeric AVALÚO — FIXTURES.md §1); these cases make the
 degenerate row the WHOLE input, which is what a truncated upstream
 extract actually looks like in production.
+
+Each case runs on both surrogate-key paths: the window keys these tiny
+sources take, and the two-phase keys a source larger than one scan task
+takes (forced here), whose offsets are then built from zero partition
+counts.
 """
 
 from __future__ import annotations
@@ -23,10 +28,16 @@ from sri_spark.etl.metrics import (
     metricas_por_provincia,
 )
 from sri_spark.etl.quality import QualityThresholds, quality_report
-from tests.sri_fixture import HEADER, generate_sri_rows
+from tests.sri_fixture import HEADER, force_key_path, generate_sri_rows
 
 RUN_DATE = dt.date(2025, 7, 2)
 FECHA_IDX = HEADER.index("FECHA PROCESO (DD/MM/AA)")
+
+
+@pytest.fixture(params=["window", "two_phase"])
+def key_path(request, monkeypatch):
+    force_key_path(monkeypatch, fits=request.param == "window")
+    return request.param
 
 
 def _write_csv(path, rows) -> str:
@@ -37,7 +48,7 @@ def _write_csv(path, rows) -> str:
     return str(path)
 
 
-def test_header_only_source(spark, tmp_path):
+def test_header_only_source(spark, tmp_path, key_path):
     """Zero data rows: every derived table is empty except the generated
     calendar dim; empty-input aggregates (avg/min/max over nothing) must
     yield NULL metrics, not throw; the min-records gate rejects."""
@@ -62,7 +73,7 @@ def test_header_only_source(spark, tmp_path):
         spark.catalog.clearCache()
 
 
-def test_all_dates_malformed_source(spark, tmp_path):
+def test_all_dates_malformed_source(spark, tmp_path, key_path):
     """Fixed mode parses FECHA PROCESO from data and drops null-parses
     (reference P4 semantics). When EVERY date is garbage the fact is
     empty while the source-derived dims are NOT — exactly the asymmetry
