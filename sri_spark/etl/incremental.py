@@ -48,6 +48,7 @@ from sri_spark.etl.fact import build_fact
 from sri_spark.etl.publish import publish, recover
 from sri_spark.etl.quality import FACT, TABLES
 from sri_spark.etl.source import read_sri_csv, with_src_id
+from sri_spark.operators.caching import cache_scope, scoped_persist
 
 # dimension grain = every non-key column (the builders' dropDuplicates set)
 _DIM_BUILDERS = {
@@ -105,7 +106,8 @@ def apply_increment(
     """Apply one increment (a CSV path or SRI-schema DataFrame) to an
     existing star (`run_pipeline`/`read_star` output). Returns the updated
     five tables; dims append-only with stable keys, fact appended with
-    densely continuing ID_Registro."""
+    densely continuing ID_Registro. The source, the extended dims and the
+    fact are scoped-persisted, like `run_pipeline`'s."""
     cfg = cfg or EtlConfig(mode="fixed")
     if cfg.parity:
         raise ValueError(
@@ -113,11 +115,11 @@ def apply_increment(
             "reproduces the reference's full-refresh semantics"
         )
     src = read_sri_csv(spark, source) if isinstance(source, str) else with_src_id(source)
-    src = src.persist()
+    src = scoped_persist(src)
 
     dims: dict[str, DataFrame] = {"dim_tiempo": existing["dim_tiempo"]}
     for name, (builder, id_col) in _DIM_BUILDERS.items():
-        dims[name] = extend_dim(existing[name], builder(src, cfg), id_col).persist()
+        dims[name] = scoped_persist(extend_dim(existing[name], builder(src, cfg), id_col))
 
     incr_fact = build_fact(
         src,
@@ -136,7 +138,7 @@ def apply_increment(
         .withColumn("ID_Registro", F.col("ID_Registro") + F.col("__max"))
         .drop("__max")
     )
-    fact = old_fact.unionByName(shifted).persist()
+    fact = scoped_persist(old_fact.unionByName(shifted))
     # __fact_increment carries ONLY the new rows, so publishers can append
     # them instead of rewriting the whole fact (publish_increment)
     return {**dims, "fact_registro_vehiculos": fact, "__fact_increment": shifted}
@@ -193,23 +195,24 @@ def publish_increment(
     # recover BEFORE reading: the lazy plans below read the on-disk star
     recover(star_dir, TABLES)
     existing = read_star(spark, star_dir)
-    updated = apply_increment(spark, existing, source, cfg)
-    delta = updated.pop("__fact_increment")
-    anio = updated["dim_tiempo"].select("ID_Tiempo", "Anio")
-    delta = delta.join(F.broadcast(anio), "ID_Tiempo", "left").na.fill({"Anio": 0})
-
-    def append_fact(path: str) -> None:
-        delta.write.mode("append").partitionBy("Anio").parquet(path)
-        if _CRASH_AFTER_FACT_APPEND:
-            raise RuntimeError("simulated crash after fact append")
-
     # every lazy plan in `updated`/`delta` reads the CURRENT on-disk dims,
     # and publish appends and stages everything before its first swap; the
-    # in-memory plans are stale once the swaps happen, so hand back FRESH
-    # reads of the published layout
-    publish(
-        star_dir,
-        {n: updated[n].write.mode("overwrite").parquet for n in TABLES if n != FACT},
-        append=(FACT, append_fact),
-    )
+    # in-memory plans are stale once the swaps happen, so their caches are
+    # released here and FRESH reads of the published layout handed back
+    with cache_scope():
+        updated = apply_increment(spark, existing, source, cfg)
+        delta = updated.pop("__fact_increment")
+        anio = updated["dim_tiempo"].select("ID_Tiempo", "Anio")
+        delta = delta.join(F.broadcast(anio), "ID_Tiempo", "left").na.fill({"Anio": 0})
+
+        def append_fact(path: str) -> None:
+            delta.write.mode("append").partitionBy("Anio").parquet(path)
+            if _CRASH_AFTER_FACT_APPEND:
+                raise RuntimeError("simulated crash after fact append")
+
+        publish(
+            star_dir,
+            {n: updated[n].write.mode("overwrite").parquet for n in TABLES if n != FACT},
+            append=(FACT, append_fact),
+        )
     return read_star(spark, star_dir)

@@ -28,6 +28,7 @@ from sri_spark.etl.quality import (
     quality_report,
 )
 from sri_spark.etl.source import read_sri_csv, with_src_id
+from sri_spark.operators.caching import scoped_persist
 from sri_spark.operators.observability import observed
 
 
@@ -37,11 +38,13 @@ def run_pipeline(
     cfg: EtlConfig | None = None,
 ) -> dict[str, DataFrame]:
     """Build the five star tables. `source` is a CSV path or a pre-loaded
-    DataFrame with the SRI schema (tests pass DataFrames)."""
+    DataFrame with the SRI schema (tests pass DataFrames). The source,
+    dims and fact are scoped-persisted: released by the enclosing
+    `cache_scope()`, or by `unpersist_all()` outside one."""
     cfg = cfg or EtlConfig()
     src = read_sri_csv(spark, source) if isinstance(source, str) else with_src_id(source)
     # the source feeds 5 consumers — cache the (narrow) scan once
-    src = src.persist()
+    src = scoped_persist(src)
 
     dims = {
         "dim_tiempo": build_dim_tiempo(spark),
@@ -54,17 +57,19 @@ def run_pipeline(
     # downstream actions don't re-run the CSV scan + joins per consumer
     # (persist BEFORE check_fanout so its actions warm the cache instead of
     # computing the dims a throwaway time)
-    dims = {k: v.persist() for k, v in dims.items()}
+    dims = {k: scoped_persist(v) for k, v in dims.items()}
     if cfg.parity:
         check_fanout(dims["dim_vehiculo"], dims["dim_transaccion"], cfg)
-    fact = build_fact(
-        src,
-        dims["dim_tiempo"],
-        dims["dim_vehiculo"],
-        dims["dim_transaccion"],
-        dims["dim_ubicacion"],
-        cfg,
-    ).persist()
+    fact = scoped_persist(
+        build_fact(
+            src,
+            dims["dim_tiempo"],
+            dims["dim_vehiculo"],
+            dims["dim_transaccion"],
+            dims["dim_ubicacion"],
+            cfg,
+        )
+    )
     return {**dims, "fact_registro_vehiculos": fact}
 
 

@@ -26,33 +26,6 @@ from pyspark.sql import functions as F
 from sri_spark.operators.caching import scoped_persist
 
 
-def exact_median_1row(
-    df: DataFrame, col: str, out: str, *, persist_input: bool = True
-) -> DataFrame:
-    """1-row frame (<out>,) holding the exact median of `df[col]`.
-
-    NULLs are ignored (SQL aggregate semantics); an empty/all-NULL input
-    yields a 1-row frame with a NULL median. The result column is the
-    only output column, so callers can crossJoin it as a scalar (the
-    repo's provable-1-row broadcast pattern).
-
-    This is the one-group case of `exact_quantile_by_group` at p = 0.5;
-    its interpolation lo + 0.5·(hi − lo) matches DuckDB's
-    quantile_cont(0.5). The selection is LAZY (a scoped-persist leaf — it
-    runs inside the first consuming action and is shared by every later
-    one).
-    """
-    med = exact_quantile_by_group(
-        df, [], col, out, p=0.5, persist_input=persist_input
-    )
-    # the grouped selection yields no row for empty/all-NULL input; a
-    # keys=[] aggregate restores the scalar contract (always exactly one
-    # row, NULL when undefined) and makes the result PROVABLY one row, so
-    # callers may crossJoin it without the plan advisor's
-    # cartesian-product gate firing
-    return med.agg(F.first(F.col(out).cast("double")).alias(out))
-
-
 def exact_quantile_by_group(
     df: DataFrame,
     keys: list[str],
@@ -60,7 +33,6 @@ def exact_quantile_by_group(
     out: str,
     *,
     p: float = 0.5,
-    persist_input: bool = False,
 ) -> DataFrame:
     """Per-group EXACT continuous quantile — DuckDB `quantile_cont(col, p)
     GROUP BY keys` semantics — in two codegen passes over the input, with
@@ -80,22 +52,18 @@ def exact_quantile_by_group(
 
     A malfunctioning bracket cannot produce a silently wrong answer: the
     final projection runs through `assert_true(both stats found)`, so a
-    coverage miss fails the job loudly. `persist_input` persists the
-    (group, value)-projected input once for the two passes — leave it
-    False when regenerating the input is cheaper than caching it
-    (Theil–Sen's slope set: two cheap regenerations beat one 2.9M-row
-    cache write).
+    coverage miss fails the job loudly. The input is not persisted:
+    both passes regenerate their (group, value) projection.
 
     Group keys ride inside a packed struct so NULL key values keep SQL
     GROUP BY semantics through the internal joins (struct equality is
-    null-safe per field). `keys=[]` treats the whole input as one group.
-    Result: `keys + [out]`, one row per group with >= 1 non-NULL value; no
-    qualifying groups → empty frame. The frame is returned as a LAZY
-    scoped-persist leaf — group-sized by construction — so callers weave
-    it into bigger plans without re-running the selection (the cache
-    materializes inline in their first action and is shared by later
-    ones), and nested calls (Theil–Sen feeds one median's output into
-    another's input) stay ~10 plan nodes instead of compounding.
+    null-safe per field); `keys` must name at least one column
+    (ValueError otherwise). Result: `keys + [out]`, one row per group with
+    >= 1 non-NULL value; no qualifying groups → empty frame. The frame is
+    returned as a LAZY scoped-persist leaf — group-sized by construction —
+    so callers weave it into bigger plans without re-running the
+    selection (the cache materializes inline in their first action and is
+    shared by later ones).
 
     At 100 TB: both passes are map-side-combined codegen aggregates whose
     shuffles carry ≤ (groups × populated buckets) histogram cells or the
@@ -104,7 +72,7 @@ def exact_quantile_by_group(
     """
     if not 0.0 <= p <= 1.0:
         raise ValueError(f"quantile p must be in [0,1], got {p}")
-    vals = _grouped_values(df, keys, col, None, persist_input)
+    vals = _grouped_values(df, keys, col, None)
 
     # continuous-quantile anchor: h = (n-1)*p (0-based); target 1-based
     # ranks floor(h)+1 and ceil(h)+1, blended by frac = h - floor(h)
@@ -119,7 +87,7 @@ def exact_quantile_by_group(
         (F.col("__start") < hi_rank)
         & ((F.col("__start") + F.col("__m")) >= lo_rank)
     )
-    cells = _band(vals, span, keys, F.count("*"))
+    cells = _band(vals, span, F.count("*"))
 
     # a cell covers 1-based ranks (__cum - __m, __cum]
     def value_at(rank: Column) -> Column:
@@ -158,7 +126,6 @@ def weighted_quantile_by_group(
     out: str,
     *,
     p: float = 0.5,
-    persist_input: bool = True,
 ) -> DataFrame:
     """Per-group EXACT WEIGHTED quantile: the smallest value v whose
     cumulative weight reaches p x (group's total weight) — the
@@ -172,9 +139,10 @@ def weighted_quantile_by_group(
     (`_band`) tie-collapses its rows to (value, weight) cells, so a
     billion-row tie run is one cell. The finale takes the smallest value
     whose cumulative weight (offset by the weight below the bucket)
-    reaches t, behind the same loud `assert_true` guard. No driver round
-    trip, no data-dependent round count: the result is a lazy
-    scoped-persist leaf like the unweighted one.
+    reaches t, behind the same loud `assert_true` guard. The (group,
+    value, weight) projection is persisted once for the two passes. No
+    driver round trip, no data-dependent round count: the result is a
+    lazy scoped-persist leaf like the unweighted one.
 
     Cross-engine determinism: weights are summed as decimal(38,6) —
     EXACT, order-independent — so the boundary comparison
@@ -189,7 +157,7 @@ def weighted_quantile_by_group(
     """
     if not 0.0 <= p <= 1.0:
         raise ValueError(f"quantile p must be in [0,1], got {p}")
-    vals = _grouped_values(df, keys, col, weight_col, persist_input)
+    vals = scoped_persist(_grouped_values(df, keys, col, weight_col))
 
     t = F.col("__total") * F.lit(p).cast("decimal(12,10)")
     # weights are > 0, so exactly one bucket has start < t <= start + mass
@@ -200,7 +168,7 @@ def weighted_quantile_by_group(
         ((F.col("__start") < t) | (F.col("__start") == 0))
         & ((F.col("__start") + F.col("__m")) >= t)
     )
-    cells = _band(vals, span, keys, F.sum("__w"))
+    cells = _band(vals, span, F.sum("__w"))
     picked = cells.groupBy("__g").agg(
         F.min(F.when(F.col("__cum") >= t, F.col("__v"))).alias("__q")
     )
@@ -225,21 +193,21 @@ def _grouped_values(
     keys: list[str],
     col: str,
     weight_col: str | None,
-    persist_input: bool,
 ) -> DataFrame:
     """(__g, __v[, __w]) rows that take part in the selection: non-NULL
     values and, when weighted, non-NULL positive weights as decimal(38,6)
     (exact, order-independent sums)."""
+    if not keys:
+        raise ValueError("quantile keys must name at least one group column")
     keep = F.col(col).isNotNull()
     cols = [
-        (F.struct(*[F.col(k) for k in keys]) if keys else F.lit(0)).alias("__g"),
+        F.struct(*[F.col(k) for k in keys]).alias("__g"),
         F.col(col).cast("double").alias("__v"),
     ]
     if weight_col is not None:
         keep = keep & F.col(weight_col).isNotNull() & (F.col(weight_col) > 0)
         cols.append(F.col(weight_col).cast("decimal(38,6)").alias("__w"))
-    vals = df.filter(keep).select(*cols)
-    return scoped_persist(vals) if persist_input else vals
+    return df.filter(keep).select(*cols)
 
 
 def _bracket(vals: DataFrame, mass: Column) -> DataFrame:
@@ -294,9 +262,7 @@ def _bracket(vals: DataFrame, mass: Column) -> DataFrame:
     )
 
 
-def _band(
-    vals: DataFrame, span: DataFrame, keys: list[str], mass: Column
-) -> DataFrame:
+def _band(vals: DataFrame, span: DataFrame, mass: Column) -> DataFrame:
     """ONE band pass: the rows whose value lies in the span's observed
     [a, b], tie-collapsed to (value, mass) cells, each with __cum — the
     cumulative mass through the cell, counted from the group's smallest
@@ -312,13 +278,7 @@ def _band(
         F.max("__mx").alias("__b"),
         F.min("__start").alias("__below"),
     )
-    if keys:
-        tagged = vals.join(span.groupBy("__g").agg(*bounds), "__g")
-    else:
-        # one group: joining on the constant key would constant-fold into
-        # a CartesianProduct; a keys=[] aggregate is provably one row, so
-        # it crossJoins as a broadcast scalar instead
-        tagged = vals.crossJoin(span.agg(*bounds))
+    tagged = vals.join(span.groupBy("__g").agg(*bounds), "__g")
     through = (
         Window.partitionBy("__g")
         .orderBy("__v")

@@ -7,7 +7,9 @@ warehouse answers these with the same SQL aggregate families
 (REGR_*, conditional AVG/VAR, window cumsums); here each is expressed as
 Spark hash aggregates plus windows over BOUNDED grids (groups, contingency
 cells, calendar days) so every query stays a constant number of shuffles
-with no data-sized window or nested loop.
+with no data-sized window or nested loop. The day-pair statistics
+(Theil–Sen, Mann–Kendall) are O(days²), so they run in one Arrow kernel
+over the calendar-bounded day grid (`_day_pair_stats`).
 
 Cross-engine determinism notes (registry.py conventions):
 - daily revenue is rounded to 2 immediately after its sum, like
@@ -940,7 +942,135 @@ def stats_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Theil–Sen robust trend (median of all pairwise slopes) — round 12
+# day-pair statistics: Theil–Sen and Mann–Kendall share one kernel
+# --------------------------------------------------------------------------
+
+# 27 years of days; the TPC-H order calendar spans 2,405
+_MAX_GRID_DAYS = 10_000
+
+_DAY_PAIR_COLUMNS = (
+    ("n_days", "long"),
+    ("n_pairs", "long"),
+    ("m_slope", "double"),
+    ("m_icpt", "double"),
+    ("s_stat", "long"),
+    ("tie_corr", "long"),
+)
+
+
+def _day_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row of every day-pair statistic of daily order revenue:
+    n_days, n_pairs, the unrounded Theil–Sen median slope and
+    median-residual intercept (m_slope, m_icpt), the Mann–Kendall S
+    (s_stat) and its tie term Σ t(t−1)(2t+5) over revenue tie groups
+    (tie_corr).
+
+    The only data-sized work is the hash aggregate to the DAY GRID
+    (revenue rounded to 2 at the sum, the repo's determinism
+    convention). A keys=[] aggregate folds the grid into one row of
+    x-sorted (x, rev) arrays behind a loud `assert_true` on its size, and
+    one Arrow kernel does the O(days²) pair work in numpy."""
+    orders = load_table(spark, sf_dir, "orders")
+    daily = orders.groupBy(
+        F.datediff(F.col("o_orderdate"), F.lit("1970-01-01")).alias("x")
+    ).agg(F.round(F.sum("o_totalprice"), 2).alias("rev"))
+    grid = daily.agg(
+        F.count("*").alias("n"),
+        F.sort_array(F.collect_list(F.struct("x", "rev"))).alias("days"),
+    )
+    guarded = grid.select(
+        F.when(
+            F.assert_true(
+                F.col("n") <= _MAX_GRID_DAYS,
+                F.format_string(
+                    "day-pair statistics: the day grid has %d days, over the "
+                    f"{_MAX_GRID_DAYS}-day calendar bound",
+                    F.col("n"),
+                ),
+            ).isNull(),
+            F.col("days"),
+        ).alias("days")
+    )
+
+    def day_pair_kernel(batches):
+        """Pair statistics of x-sorted (x, rev) day arrays, one output row
+        per input row. Defined inside the builder, so it ships to the
+        Python workers by value and needs no package import there.
+
+        Hot-path operators stay JVM-side everywhere else (session.py);
+        this kernel is the one exception because its input is bounded by
+        the calendar, not by the data: one row per order day (TPC-H order
+        dates span the same 1992–1998 calendar at every scale factor,
+        2,405 days at sf0.1), guarded to `_MAX_GRID_DAYS`, so its 2.9M
+        pairs fit one worker.
+
+        SQL semantics: a NULL-x day counts in n_days only; a NULL-revenue
+        day counts in n_days and n_pairs, drops out of the medians and S,
+        and all NULL-revenue days form one tie group (as GROUP BY rev
+        does). The slopes are built row by row into one preallocated
+        float64 array, so the peak stays near one float64 per pair. Each
+        median is two in-place `partition` order statistics blended
+        lo + (h − ⌊h⌋)(hi − lo), h = (n − 1)/2 — DuckDB quantile_cont's
+        formula, as in operators/median.py. S and the tie term are
+        integer counts."""
+        import numpy as np
+        import pyarrow as pa
+
+        def median(v):
+            if v.size == 0:
+                return None
+            h = (v.size - 1) * 0.5
+            lo, hi = int(np.floor(h)), int(np.ceil(h))
+            v.partition((lo, hi))
+            return float(v[lo] + (h - lo) * (v[hi] - v[lo]))
+
+        def row(xs, revs):
+            x_ok = xs.is_valid().to_numpy(zero_copy_only=False)
+            both = x_ok & revs.is_valid().to_numpy(zero_copy_only=False)
+            x = xs.fill_null(0).to_numpy()[both].astype(np.float64)
+            rev = revs.fill_null(0.0).to_numpy()[both]
+            slopes = np.empty(x.size * (x.size - 1) // 2)
+            s = at = 0
+            for i in range(x.size - 1):
+                d = rev[i + 1:] - rev[i]
+                s += np.count_nonzero(d > 0) - np.count_nonzero(d < 0)
+                np.divide(d, x[i + 1:] - x[i], out=slopes[at:at + d.size])
+                at += d.size
+            m_slope = median(slopes)
+            m_icpt = None if m_slope is None else median(rev - m_slope * x)
+            _, t = np.unique(revs.drop_null().to_numpy(), return_counts=True)
+            t = np.append(t, revs.null_count).astype(np.int64)
+            t = t[t > 1]
+            m = int(x_ok.sum())
+            return {
+                "n_days": len(xs),
+                "n_pairs": m * (m - 1) // 2,
+                "m_slope": m_slope,
+                "m_icpt": m_icpt,
+                "s_stat": int(s),
+                "tie_corr": int((t * (t - 1) * (2 * t + 5)).sum()),
+            }
+
+        types = {"long": pa.int64(), "double": pa.float64()}
+        schema = pa.schema([(c, types[t]) for c, t in _DAY_PAIR_COLUMNS])
+        for batch in batches:
+            yield pa.RecordBatch.from_pylist(
+                [
+                    row(xs.values, revs.values)
+                    for xs, revs in zip(batch.column("x"), batch.column("rev"))
+                ],
+                schema=schema,
+            )
+
+    return guarded.select(
+        F.col("days.x").alias("x"), F.col("days.rev").alias("rev")
+    ).mapInArrow(
+        day_pair_kernel, ", ".join(f"{c} {t}" for c, t in _DAY_PAIR_COLUMNS)
+    )
+
+
+# --------------------------------------------------------------------------
+# Theil–Sen robust trend (median of all pairwise slopes)
 # --------------------------------------------------------------------------
 
 _THEIL_SEN_ORACLE = """
@@ -974,107 +1104,19 @@ def stats_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     the estimator behind robust drift monitors. The DuckDB oracle runs
     the classic formulation (inequality self-join + quantile_cont).
 
-    Shape (scale-safe by the calendar bound): the only data-sized work
-    is the hash aggregate to the DAY GRID (revenue rounded to 2 at the
-    sum, the repo's determinism convention). The O(n²) pair set is
-    day-grid² (~2.4M rows for 6 years of days — CONSTANT in data volume,
-    like orders_backlog_sweepline's argument), and it is generated
-    WITHOUT a non-equi join: each day explodes sequence(x+1, max_x) and
-    equi-joins the partner day, so the plan is Generate + hash join —
-    no BroadcastNestedLoopJoin for the advisor gate to flag, and the
-    explode parallelizes across the grid instead of nesting loops.
-    max_x rides the plan as a classifier-provable 1-row aggregate
-    crossJoin (the KS/Spearman scalar-broadcast pattern), as does the
-    median slope when the intercept residuals are formed.
-
-    Cross-engine determinism AND memory safety: medians come from
-    operators/median.py::exact_median_1row — a codegen histogram bracket
-    plus a tie-collapsed band selection — whose result is bit-identical
-    to DuckDB's quantile_cont(0.5) interpolation. Spark's exact `percentile` aggregate is deliberately
-    NOT used (its per-task value→count hash map OOM'd the plain 1 GiB
-    driver-contract session on 2.4M mostly-distinct slopes), and neither
-    is a global row_number window (one sort task holding every row — the
-    same concentration anti-pattern, which also failed under the full
-    sweep's accumulated memory pressure). Slopes divide by
-    (x_j - x_i) >= 1 by construction; NULL revenues (degenerate
-    fixtures) are ignored by the median operator; an empty orders table
-    yields NULL outputs in both engines."""
-    from sri_spark.operators.caching import scoped_persist
-
-    orders = load_table(spark, sf_dir, "orders")
-    # the day grid is calendar-bounded (≤ a few thousand rows): persist it
-    # once — slopes, the intercept residuals, and n_days all re-read it —
-    # and cap it at 32 partitions so the explode below neither fans 2.4k
-    # rows across a wide session's full shuffle width (the driver session
-    # runs 200) nor starves a 32-core host with a handful of fat tasks
-    # (round-12 verdict item 3: this query also re-ran the orders scan
-    # and the O(grid²) slope build 4-5x through its aggregate legs).
-    daily = (
-        orders.groupBy(
-            F.datediff(F.col("o_orderdate"), F.lit("1970-01-01")).alias("x")
-        )
-        .agg(F.round(F.sum("o_totalprice"), 2).alias("rev"))
-        .coalesce(32)
-        .localCheckpoint()
-    )  # r14: a lazy scoped_persist was A/B'd here (fusing the grid build
-    # into the main action) and measured no better (4.34 vs 3.91 median,
-    # overlapping noise) — the eager checkpoint keeps the many-consumer
-    # grid a materialized leaf, so it stays
-    max_x = daily.agg(F.max("x").alias("__mx"))
-    right = daily.select(F.col("x").alias("xj"), F.col("rev").alias("revj"))
-    slopes = (
-        daily.crossJoin(max_x)
-        .select(
-            "x",
-            "rev",
-            F.explode(
-                F.when(
-                    F.col("x") < F.col("__mx"),
-                    F.sequence(F.col("x") + 1, F.col("__mx")),
-                ).otherwise(F.array().cast("array<int>"))
-            ).alias("xj"),
-        )
-        .join(right, "xj")
-        .select(
-            ((F.col("revj") - F.col("rev")) / (F.col("xj") - F.col("x"))).alias(
-                "slope"
-            )
-        )
-    )
-    # the pair set (~2.9M rows at sf0.1, constant in data volume) is
-    # consumed only by the median operator's two selection legs, both
-    # inside ONE job — regenerating the explode+join per leg from the
-    # checkpointed day grid measured cheaper than materializing 2.9M
-    # rows first, so it is deliberately NOT persisted
-
-    from sri_spark.operators.median import exact_median_1row
-
-    m = exact_median_1row(slopes, "slope", "m_slope", persist_input=False)
-    icpt = exact_median_1row(
-        daily.crossJoin(m).select(
-            (F.col("rev") - F.col("m_slope") * F.col("x")).alias("resid")
-        ),
-        "resid",
-        "m_icpt",
-    )
-    # every (i < j) day pair exists exactly once by construction, so
-    # n_pairs = C(n_days, 2) — no need to re-scan the pair set for it
-    n_days = daily.agg(F.count("*").cast("long").alias("n_days")).withColumn(
+    Both medians come from `_day_pair_stats`' kernel: the pair set is
+    day-grid² (2.9M slopes for 2,405 days, constant in data volume), so
+    numpy selects them on one worker with DuckDB's quantile_cont
+    interpolation; the kernel's float ops are the oracle's double
+    expressions, so the unrounded medians agree. Slopes divide by
+    (x_j − x_i) ≥ 1; NULL-revenue days count in n_days and n_pairs but
+    yield no slope and no residual; an empty or one-day grid yields
+    n_pairs 0 and NULL outputs in both engines."""
+    return _day_pair_stats(spark, sf_dir).select(
+        "n_days",
         "n_pairs",
-        (F.col("n_days") * (F.col("n_days") - F.lit(1)) / F.lit(2)).cast(
-            "long"
-        ),
-    )
-    return (
-        n_days
-        .crossJoin(m.select("m_slope"))
-        .crossJoin(icpt.select("m_icpt"))
-        .select(
-            "n_days",
-            "n_pairs",
-            F.round("m_slope", 6).alias("ts_slope"),
-            F.round("m_icpt", 4).alias("ts_intercept"),
-        )
+        F.round("m_slope", 6).alias("ts_slope"),
+        F.round("m_icpt", 4).alias("ts_intercept"),
     )
 
 
@@ -1123,73 +1165,25 @@ def stats_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     Mann–Kendall says whether a monotone trend exists at all). Emits the
     S statistic (concordant minus discordant day pairs), Kendall's tau-a,
     and the tie-corrected normal-approximation z with the textbook
-    continuity correction (S - sign(S)).
+    continuity correction (S − sign(S)).
 
-    Shape: identical to the Theil–Sen machinery — one data-sized hash
-    aggregate to the DAY GRID, then the O(grid²) pair set via
-    explode(sequence)+equi-join (calendar-bounded, no nested loop); the
-    tie correction is a second aggregate over the grid. Everything
-    downstream of the day rollup is integer arithmetic (signs, counts,
-    tie multiplicities), so S, n and the tie term are EXACT in both
-    engines; the only float ops are the final tau/z divisions, identical
-    double expressions both sides. Degenerate inputs: an empty grid
-    yields NULL tau/z (n <= 1 and var_s = 0 guards); all-tied revenue
-    zeroes S and var_s, yielding tau 0 and NULL z, never a divide error."""
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.datediff(F.col("o_orderdate"), F.lit("1970-01-01")).alias("x")
-    ).agg(F.round(F.sum("o_totalprice"), 2).alias("rev"))
-    max_x = daily.agg(F.max("x").alias("__mx"))
-    right = daily.select(F.col("x").alias("xj"), F.col("rev").alias("revj"))
-    pairs = (
-        daily.crossJoin(max_x)
-        .select(
-            "x",
-            "rev",
-            F.explode(
-                F.when(
-                    F.col("x") < F.col("__mx"),
-                    F.sequence(F.col("x") + 1, F.col("__mx")),
-                ).otherwise(F.array().cast("array<int>"))
-            ).alias("xj"),
-        )
-        .join(right, "xj")
-        .select(F.signum(F.col("revj") - F.col("rev")).alias("sgn"))
-    )
-    s = pairs.agg(
-        F.count("*").cast("long").alias("n_pairs"),
-        F.coalesce(F.sum("sgn"), F.lit(0.0)).alias("s_stat"),
-    )
-    n = daily.agg(F.count("*").cast("double").alias("n"))
-    ties = (
-        daily.groupBy("rev")
-        .agg(F.count("*").cast("double").alias("t"))
-        .filter(F.col("t") > 1)
-        .agg(
-            F.coalesce(
-                F.sum(
-                    F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5)
-                ),
-                F.lit(0.0),
-            ).alias("tie_corr")
-        )
-    )
-    nn = F.col("n")
+    S and the tie term Σ t(t−1)(2t+5) come from `_day_pair_stats`'
+    kernel as integer counts, so they are EXACT in both engines; the only
+    float ops are the final tau/z divisions below, the oracle's double
+    expressions. Degenerate inputs: an empty grid yields NULL tau/z
+    (n <= 1 and var_s = 0 guards); all-tied revenue zeroes S and var_s,
+    yielding tau 0 and NULL z, never a divide error."""
+    nn = F.col("n_days").cast("double")
+    ss = F.col("s_stat").cast("double")
     var_s = (nn * (nn - 1) * (2 * nn + 5) - F.col("tie_corr")) / 18.0
-    ss = F.col("s_stat")
-    return (
-        s.crossJoin(n)
-        .crossJoin(ties)
-        .select(
-            nn.cast("long").alias("n_days"),
-            "n_pairs",
-            ss.cast("long").alias("s_stat"),
-            F.when(
-                nn > 1, F.round(ss / (nn * (nn - 1) / 2.0), 6)
-            ).alias("kendall_tau"),
-            F.when(
-                var_s > 0,
-                F.round((ss - F.signum(ss)) / F.sqrt(var_s), 6),
-            ).alias("z_score"),
-        )
+    return _day_pair_stats(spark, sf_dir).select(
+        "n_days",
+        "n_pairs",
+        "s_stat",
+        F.when(nn > 1, F.round(ss / (nn * (nn - 1) / 2.0), 6)).alias(
+            "kendall_tau"
+        ),
+        F.when(
+            var_s > 0, F.round((ss - F.signum(ss)) / F.sqrt(var_s), 6)
+        ).alias("z_score"),
     )

@@ -1,23 +1,28 @@
-"""operators/median.py::exact_median_1row vs numpy — the distributed
-exact median must reproduce quantile_cont(0.5) (linear interpolation =
-average of the two central order statistics) on every shape that has
-bitten a median implementation somewhere: even/odd counts, heavy ties,
-constant columns, single values, NULLs, and empty input."""
+"""operators/median.py vs numpy — the distributed exact median must
+reproduce quantile_cont(0.5) (linear interpolation = average of the two
+central order statistics) on every shape that has bitten a median
+implementation somewhere: even/odd counts, heavy ties, constant columns,
+single values, NULLs, and empty input."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
-from sri_spark.operators.median import exact_median_1row
+from sri_spark.operators.median import exact_quantile_by_group
 
 
 def _med(spark, values):
+    """The median of `values` as one constant-key group; None when no
+    non-NULL value leaves the group without a row."""
     df = spark.createDataFrame([(float(v),) if v is not None else (None,)
                                 for v in values] or [(None,)], "v double")
     if not values:
         df = df.limit(0)
-    return exact_median_1row(df, "v", "med").first()["med"]
+    df = df.withColumn("k", F.lit(0))
+    row = exact_quantile_by_group(df, ["k"], "v", "med", p=0.5).first()
+    return None if row is None else row["med"]
 
 
 def test_median_matches_numpy_on_random_data(spark):
@@ -66,11 +71,9 @@ def test_median_values_straddling_zero(spark):
 # grouped form (round-12 verdict item 8): exact_quantile_by_group
 # ---------------------------------------------------------------------------
 
-def _gq(spark, rows, p, **kw):
-    from sri_spark.operators.median import exact_quantile_by_group
-
+def _gq(spark, rows, p):
     df = spark.createDataFrame(rows, "k string, v double")
-    res = exact_quantile_by_group(df, ["k"], "v", "q", p=p, **kw)
+    res = exact_quantile_by_group(df, ["k"], "v", "q", p=p)
     return {r["k"]: r["q"] for r in res.collect()}
 
 
@@ -119,18 +122,16 @@ def test_grouped_quantile_extremes_and_empty(spark):
     rows = [("a", float(v)) for v in range(101)]
     assert _gq(spark, rows, 0.0)["a"] == 0.0
     assert _gq(spark, rows, 1.0)["a"] == 100.0
-    from sri_spark.operators.median import exact_quantile_by_group
-
     df = spark.createDataFrame([], "k string, v double")
     assert exact_quantile_by_group(df, ["k"], "v", "q").count() == 0
 
 
 def test_grouped_quantile_rejects_bad_p(spark):
-    from sri_spark.operators.median import exact_quantile_by_group
-
     df = spark.createDataFrame([("a", 1.0)], "k string, v double")
     with pytest.raises(ValueError, match="quantile p"):
         exact_quantile_by_group(df, ["k"], "v", "q", p=1.5)
+    with pytest.raises(ValueError, match="quantile keys"):
+        exact_quantile_by_group(df, [], "v", "q")
 
 
 # ---------------------------------------------------------------------------

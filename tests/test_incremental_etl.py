@@ -6,7 +6,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from sri_spark.etl import EtlConfig, run_pipeline
-from sri_spark.etl.incremental import apply_increment, read_star
+from sri_spark.etl.incremental import apply_increment, publish_increment, read_star
+from sri_spark.etl.pipeline import write_star
+from sri_spark.operators.caching import unpersist_all
 from tests.sri_fixture import write_sri_csv
 
 
@@ -287,3 +289,33 @@ def test_publish_increment_appends_fact_partitions(spark, split_csvs, tmp_path):
     assert disk["fact_registro_vehiculos"].count() == published[
         "fact_registro_vehiculos"
     ].count()
+
+
+def _persisted_rdds(spark) -> int:
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+def test_publish_increment_releases_its_caches(spark, split_csvs, tmp_path):
+    """publish_increment hands back fresh reads of the published star, so
+    the source, dims and fact it cached to build the increment are
+    released before it returns: publishes must not accumulate caches."""
+    _, base, incr = split_csvs
+    cfg = EtlConfig(mode="fixed")
+    out = str(tmp_path / "star_cache")
+    write_star(run_pipeline(spark, base, cfg), out)
+    unpersist_all()
+    before = _persisted_rdds(spark)
+    publish_increment(spark, out, incr, cfg)
+    assert _persisted_rdds(spark) == before
+
+
+def test_unpersist_all_releases_pipeline_caches(spark, split_csvs, tmp_path):
+    """run_pipeline caches the source, the dims and the fact for their
+    several consumers; unpersist_all() releases every one of them."""
+    _, base, _ = split_csvs
+    unpersist_all()
+    before = _persisted_rdds(spark)
+    write_star(run_pipeline(spark, base, EtlConfig(mode="fixed")), str(tmp_path / "star"))
+    assert _persisted_rdds(spark) > before
+    unpersist_all()
+    assert _persisted_rdds(spark) == before

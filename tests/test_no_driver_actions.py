@@ -24,9 +24,6 @@ an action IS the algorithm (not a metadata shortcut):
   localCheckpoint (which also cuts the lineage) and its convergence
   signature (count + bit_xor) rides that job via observe() — the loop
   cannot be expressed lazily (data-dependent round count);
-- the Theil–Sen day grid: an eager localCheckpoint of a calendar-bounded
-  grid that every leg of the query re-reads (a lazy persist was measured
-  no faster);
 - KMeans/PQ index training: spark.ml fit + sample-collected codebooks
   (bounded by k and sample size, not corpus);
 - query-vector fetch: a .first() on a 1-row filtered frame (the serving
@@ -61,7 +58,6 @@ ITERATIVE_OK = {
     "similarity_ivf_pq_pipeline": "KMeans fit + sample-trained PQ codebooks + query fetch",
     "similarity_ivf_topk": "KMeans coarse-quantizer training",
     "similarity_pq_topk": "sample-trained PQ codebooks + query fetch",
-    "stats_theil_sen_trend": "day-grid eager localCheckpoint: a calendar-bounded grid (a few thousand rows) re-read by the slope build, the residuals and n_days; r14 A/B'd a lazy scoped_persist there and measured no better (4.34 vs 3.91 s median)",
 }
 
 

@@ -17,15 +17,19 @@ from pyspark.sql import Row
 
 from sri_spark.plans.stats_regression_queries import (
     _IRLS_ROUNDS,
+    _MAX_GRID_DAYS,
     _PSI_BINS,
+    _day_pair_stats,
     stats_anova_oneway,
     stats_autocorr_daily,
     stats_cramers_v,
     stats_cusum_drift,
     stats_logistic_irls,
+    stats_mann_kendall_trend,
     stats_mutual_info,
     stats_ols_regression,
     stats_psi_drift,
+    stats_theil_sen_trend,
 )
 
 def _rng(seed):
@@ -494,3 +498,132 @@ def test_cusum_stable_series_stat_is_small(spark, statdir):
     # Kolmogorov 5% critical value ~1.36; i.i.d. noise should sit well under
     # (seeded input, deterministic assertion)
     assert row["cusum_max"] < 1.36
+
+
+# --- Theil–Sen and Mann–Kendall (the shared day-pair kernel) ----------------
+
+_EPOCH_DAY_2023 = (dt.date(2023, 1, 1) - dt.date(1970, 1, 1)).days
+
+
+def _write_days(spark, out, offsets, revs):
+    """One order per day: day 2023-01-01 + offsets[i] carries revs[i]
+    (None: a NULL price, so a NULL-revenue day; an offset of None: a NULL
+    order date)."""
+    start = dt.datetime(2023, 1, 1)
+    rows = [
+        (None if d is None else start + dt.timedelta(days=int(d)),
+         None if r is None else float(r))
+        for d, r in zip(offsets, revs)
+    ]
+    _write(spark, out, "orders", rows, "o_orderdate timestamp, o_totalprice double")
+
+
+def _quantile_cont_median(v):
+    v = sorted(v)
+    if not v:
+        return None
+    h = (len(v) - 1) * 0.5
+    lo, hi = v[math.floor(h)], v[math.ceil(h)]
+    return lo + (h - math.floor(h)) * (hi - lo)
+
+
+def _pairs_direct(offsets, revs):
+    """The O(n²) loop over day pairs i < j (both revenues present): the
+    median slope and median residual as quantile_cont takes them, and S."""
+    x = [_EPOCH_DAY_2023 + d for d in offsets]
+    slopes, s = [], 0
+    for i in range(len(x)):
+        for j in range(i + 1, len(x)):
+            if revs[i] is None or revs[j] is None:
+                continue
+            slopes.append((revs[j] - revs[i]) / (x[j] - x[i]))
+            s += int(np.sign(revs[j] - revs[i]))
+    m_slope = _quantile_cont_median(slopes)
+    resid = [r - m_slope * xi for xi, r in zip(x, revs) if r is not None]
+    return m_slope, _quantile_cont_median(resid), s
+
+
+def _tie_term(revs):
+    _, t = np.unique([("" if r is None else repr(r)) for r in revs],
+                     return_counts=True)
+    return int(sum(c * (c - 1) * (2 * c + 5) for c in t.tolist() if c > 1))
+
+
+def test_theil_sen_recovers_planted_line(spark, statdir):
+    out = f"{statdir}/ts_line"
+    offsets = np.cumsum(_rng(74327).integers(1, 9, size=60)).tolist()
+    revs = [100.0 + 3.5 * d for d in offsets]
+    _write_days(spark, out, offsets, revs)
+    ts = stats_theil_sen_trend(spark, out).collect()[0]
+    assert (ts["n_days"], ts["n_pairs"]) == (60, 60 * 59 // 2)
+    assert ts["ts_slope"] == 3.5
+    assert ts["ts_intercept"] == 100.0 - 3.5 * _EPOCH_DAY_2023
+    mk = stats_mann_kendall_trend(spark, out).collect()[0]
+    assert mk["s_stat"] == 60 * 59 // 2 and mk["kendall_tau"] == 1.0
+
+
+def test_day_pairs_match_quadratic_loop(spark, statdir):
+    """Noisy revenue on irregular days, with tie runs: the kernel's
+    unrounded medians, S and tie term equal the O(n²) loop's exactly, and
+    the queries' rounded outputs follow from them."""
+    out = f"{statdir}/ts_noisy"
+    rng = _rng(74328)
+    offsets = np.cumsum(rng.integers(1, 5, size=150)).tolist()
+    revs = np.round(rng.normal(1000, 80, size=150) + 2.0 * np.array(offsets), 2)
+    revs[::10] = 1234.5  # a 15-day tie group
+    revs = revs.tolist()
+    _write_days(spark, out, offsets, revs)
+    m_slope, m_icpt, s = _pairs_direct(offsets, revs)
+    got = _day_pair_stats(spark, out).collect()[0]
+    assert (got["n_days"], got["n_pairs"]) == (150, 150 * 149 // 2)
+    assert (got["m_slope"], got["m_icpt"]) == (m_slope, m_icpt)
+    assert got["s_stat"] == s
+    assert got["tie_corr"] == _tie_term(revs) == 15 * 14 * 35
+
+    n = 150.0
+    var_s = (n * (n - 1) * (2 * n + 5) - _tie_term(revs)) / 18.0
+    mk = stats_mann_kendall_trend(spark, out).collect()[0]
+    assert mk["kendall_tau"] == pytest.approx(s / (n * (n - 1) / 2), abs=1e-6)
+    assert mk["z_score"] == pytest.approx((s - np.sign(s)) / math.sqrt(var_s), abs=1e-6)
+    ts = stats_theil_sen_trend(spark, out).collect()[0]
+    assert ts["ts_slope"] == pytest.approx(m_slope, abs=1e-6)
+    assert ts["ts_intercept"] == pytest.approx(m_icpt, abs=1e-4)
+
+
+def test_null_revenue_days_count_but_drop_out(spark, statdir):
+    """NULL-revenue days count in n_days and n_pairs (their pairs exist,
+    with NULL slopes), yield no slope, residual or sign, and together form
+    ONE tie group, as GROUP BY rev makes them. A NULL-date day counts in
+    n_days only: it pairs with no day."""
+    out = f"{statdir}/ts_nulls"
+    offsets = list(range(0, 40, 2)) + [None]
+    revs = [500.0 + 7.25 * d for d in range(0, 40, 2)] + [42.0]
+    for i in (3, 8, 15):
+        revs[i] = None
+    _write_days(spark, out, offsets, revs)
+    m_slope, m_icpt, s = _pairs_direct(offsets[:-1], revs[:-1])
+    got = _day_pair_stats(spark, out).collect()[0]
+    assert (got["n_days"], got["n_pairs"]) == (21, 20 * 19 // 2)
+    assert (got["m_slope"], got["m_icpt"]) == (m_slope, m_icpt) == (
+        7.25, 500.0 - 7.25 * _EPOCH_DAY_2023
+    )
+    assert got["s_stat"] == s == 17 * 16 // 2
+    assert got["tie_corr"] == 3 * 2 * 11
+
+
+@pytest.mark.parametrize("days", [0, 1], ids=["empty", "one-day"])
+def test_day_pairs_degenerate_grids(spark, statdir, days):
+    out = f"{statdir}/ts_deg{days}"
+    _write_days(spark, out, list(range(days)), [10.0] * days)
+    ts = stats_theil_sen_trend(spark, out).collect()
+    mk = stats_mann_kendall_trend(spark, out).collect()
+    assert [tuple(r) for r in ts] == [(days, 0, None, None)]
+    assert [tuple(r) for r in mk] == [(days, 0, 0, None, None)]
+
+
+def test_day_grid_over_the_bound_fails_loudly(spark, statdir):
+    out = f"{statdir}/ts_wide"
+    n = _MAX_GRID_DAYS + 1
+    _write_days(spark, out, list(range(-n // 2, n - n // 2)), [1.0] * n)
+    with pytest.raises(Exception, match=f"{n} days, over the {_MAX_GRID_DAYS}-day"):
+        stats_theil_sen_trend(spark, out).collect()
