@@ -203,7 +203,7 @@ def sri_etl_replay_10x(spark) -> dict:
 # default: the r11 knob forensics (docs/ETL_100X_knobs_r11.json) measured
 # that point LAYOUT-bound — 128 reducers cut wall 646->416 s (-35%) and disk
 # spill 35.7->10.6 GiB (-70%) at byte-identical shuffle volume (~87 GiB,
-# +1.2%) — and 128 is inside the tuning.py prescription for the build's
+# +1.2%) — and 128 is inside the sizing prescription for the build's
 # widest shuffles (~8-20 GiB / 128 MiB-per-task => 64-160 tasks). This is
 # the config a cluster would run, so it is the config the growth curve
 # should measure.

@@ -4,8 +4,7 @@
 
 (defaults to /root/testdata/sf0.001). Walks the same ground a reference
 user covers — build the SRI star, roll up metrics — then the surfaces the
-reference never had: the query catalog, corpus dedup, ANN search, and a
-Z-ordered write.
+reference never had: the query catalog, corpus dedup and ANN search.
 """
 
 from __future__ import annotations
@@ -50,21 +49,6 @@ def main() -> None:
     # 4. ANN: brute-force truth vs the LSH-bucketed scale path
     print("cosine top-5 of vec 0 (brute force):")
     qs["similarity_cosine_topk"](spark, sf_dir).show(5)
-
-    # 5. Z-ordered write: files that prune rectangle predicates
-    from pyspark.sql import functions as F
-
-    from sri_spark.operators.layout import zorder_layout
-    from sri_spark.sources.testdata import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", F.pmod("user_id", F.lit(32)).alias("x"),
-        F.pmod("event_id", F.lit(32)).alias("y"),
-    )
-    with tempfile.TemporaryDirectory() as tmp:
-        out = os.path.join(tmp, "events_z")
-        zorder_layout(ev, "x", "y", n_files=8, bits=5).write.parquet(out)
-        print(f"z-ordered write: {len(os.listdir(out))} entries at {out}")
 
     spark.stop()
 

@@ -19,8 +19,6 @@ Layout
                    (pluggable codecs: PIL / stdlib-WAV auto-detect, byte-stats fallback).
 - ``streaming``  : Structured Streaming jobs over the `events` fixture,
                    incl. the exactly-once foreachBatch MERGE sink.
-- ``tuning``     : cluster-sizing arithmetic (shuffle partitions, split sizes)
-                   for lake-scale deployments.
 - ``etl.interactive`` : notebook-style task-by-task runner (per-task timing,
                    validation, table verification, example query).
 """

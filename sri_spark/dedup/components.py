@@ -1,20 +1,15 @@
-"""Connected components over near-duplicate pair edges — turns pairwise
-near-dup output (MinHash/Jaccard/SimHash) into duplicate CLUSTERS, the form
-a curation pipeline actually consumes (keep min-id doc per cluster).
+"""Connected components over pair edges — turns pairwise near-dup output
+(MinHash/Jaccard/SimHash, embedding LSH) into duplicate CLUSTERS, the form
+a curation pipeline actually consumes (keep one doc per cluster), and
+serves as the catalog's general graph-components primitive.
 
-Iterative min-label propagation: every node starts labeled with itself;
-each round takes the min label over itself and its neighbors; fixpoint =
-components (label == min node id reachable). Convergence in O(graph
-diameter) rounds — near-dup graphs are overwhelmingly tiny cliques/chains,
-so 3-5 rounds in practice.
-
-Scale shape: each round is one hash-shuffle join on node id plus a
-groupBy-min — no driver-side graph, no collect; state is (node, label),
-persisted per round and unpersisted after the next materializes. The
-convergence check is a count of changed labels (an aggregate, not a
-collect of data rows). For adversarial high-diameter graphs at 100 TB,
-swap in the large-star/small-star variant (Kiveris et al., "Connected
-Components in MapReduce"); the operator contract stays the same.
+One engine: alternating large-star/small-star rounds (Kiveris et al.,
+"Connected Components in MapReduce and Beyond", SoCC'14). A round is two
+grouped min-aggregations plus joins on node id — hash shuffles only, no
+driver-side graph, no collect of data rows. Every round is materialized by
+an eager localCheckpoint that also cuts the lineage, so the plan stays the
+same size however many rounds run, and the fixpoint check rides that
+checkpoint's job as an `observe()` metric.
 """
 
 from __future__ import annotations
@@ -22,7 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sri_spark.operators.caching import track
+# rounds before the engine gives up and raises; a length-L chain converges
+# in ~log L rounds, so 25 leaves wide slack for any real pair graph
+_MAX_ROUNDS = 25
 
 
 def connected_components(
@@ -30,72 +27,14 @@ def connected_components(
     *,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_iter: int = 20,
 ) -> DataFrame:
-    """(node, component) for every node appearing in `edges`; component =
-    min node id in the connected component. Edges are treated as
-    undirected; self-loops and duplicates are harmless."""
-    sym = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .union(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-        .distinct()
-        .persist()
-    )
-    labels = (
-        sym.select(F.col("s").alias("node")).distinct().withColumn("label", F.col("node"))
-    ).persist()
-    labels.count()  # materialize before the loop
+    """(node, component) for every node on a non-self-loop edge of
+    `edges`; component = min node id in the connected component. Edges are
+    undirected, duplicates are harmless and self-loops are dropped.
 
-    for _ in range(max_iter):
-        neighbor_min = (
-            sym.join(labels, sym["d"] == labels["node"])
-            .groupBy("s")
-            .agg(F.min("label").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels["node"] == neighbor_min["s"], "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias(
-                    "label"
-                ),
-            )
-            .persist()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-
-    sym.unpersist()
-    # the final labels round stays persisted (the returned plan reads it);
-    # register it so harnesses can release it between queries
-    track(labels)
-    return labels.select(F.col("node"), F.col("label").alias("component"))
-
-
-def connected_components_star(
-    edges: DataFrame,
-    *,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """(node, component) via alternating large-star/small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — converges in O(log^2 n) rounds even on adversarial
-    high-diameter graphs (a length-L chain needs ~log L rounds, where plain
-    min-label propagation needs L).
-
-    Each round is two grouped min-aggregations + joins on node id — the same
-    shuffle shape as `connected_components`, just restructuring edges
-    instead of labels:
+    Alternating large-star/small-star rounds converge in O(log^2 n) rounds
+    even on adversarial high-diameter graphs (a length-L chain needs
+    ~log L rounds, where min-label propagation needs L):
 
     - large-star: every node links its LARGER neighbours to the minimum of
       its closed neighbourhood (keeps the graph connected, strictly reduces
@@ -104,10 +43,10 @@ def connected_components_star(
       minimum, collapsing chains toward component minima.
 
     Fixpoint = all edges (v, root); detected by an aggregate signature
-    (count + xor-style hash sum), not an edge-set collect — and since r14
-    the signature is an `observe()` metric collected DURING each round's
+    (count + xor-fold of edge hashes), not an edge-set collect. The
+    signature is an `observe()` metric collected DURING each round's
     checkpoint materialization, so a round costs exactly one job. Raises
-    RuntimeError after `max_iter` rounds without convergence — explicit
+    RuntimeError after `_MAX_ROUNDS` rounds without convergence — explicit
     failure beats silently-wrong clusters."""
     def _both_dirs(df: DataFrame) -> DataFrame:
         # (u,v) + (v,u) in ONE narrow pass — a union would plant two
@@ -176,8 +115,7 @@ def connected_components_star(
     # exponentially with rounds. localCheckpoint (eager) materializes the
     # round AND cuts the lineage; at cluster scale prefer reliable
     # checkpoint(dir) so executor loss can't drop a round.
-    converged = False
-    for _ in range(max_iter):
+    for _ in range(_MAX_ROUNDS):
         # large-star: (v, m(u)) for v > u
         lmins = _closed_min(e)
         large = _sym(
@@ -200,17 +138,15 @@ def connected_components_star(
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
         )
         small_self = smins.select(F.col("u"), F.col("m").alias("v"))
-        new_e, new_sig = _checkpoint_with_signature(
+        e, new_sig = _checkpoint_with_signature(
             _sym(small_nbrs.union(small_self))
         )
-        e = new_e
         if new_sig == sig:
-            converged = True
             break
         sig = new_sig
-    if not converged:
+    else:
         raise RuntimeError(
-            f"connected_components_star: no fixpoint after {max_iter} rounds"
+            f"connected_components: no fixpoint after {_MAX_ROUNDS} rounds"
         )
 
     # at the fixpoint every edge points node -> component root; roots map to

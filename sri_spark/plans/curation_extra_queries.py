@@ -81,15 +81,12 @@ def keep_best_members(
     callers that already scored the corpus (the pipeline's enrichment
     pass) avoid a second full-text quality_score scan; omitted, it is
     computed here, which is what the catalog query does."""
-    from sri_spark.dedup.components import connected_components_star
+    from sri_spark.dedup.components import connected_components
     from sri_spark.dedup.minhash import minhash_lsh_pairs
     from sri_spark.plans.dedup_queries import JACCARD_THRESHOLD
 
     pairs = minhash_lsh_pairs(docs, threshold=JACCARD_THRESHOLD)
-    # large-star/small-star CC: measured 3x faster than min-label
-    # propagation on this graph at sf0.1, and the O(log^2 n) round bound
-    # is the one that holds on adversarial diameters at 100 TB
-    comp = connected_components_star(pairs).select(
+    comp = connected_components(pairs).select(
         F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
     )
     if quality is not None:
@@ -127,7 +124,7 @@ def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     one.
 
     Shape: the same bucketed LSH + star-CC pipeline as
-    dedup_clusters_star (no all-pairs anywhere), one quality-score pass
+    dedup_duplicate_clusters (no all-pairs anywhere), one quality-score pass
     over the clustered docs only, and a per-cluster window (frames
     bounded by cluster size). Oracle: the recursive-CTE closure with the
     same rank rule."""

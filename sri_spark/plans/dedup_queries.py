@@ -293,27 +293,10 @@ def _clusters_oracle(extra: str | None = None, final: str | None = None) -> str:
     """
 
 
-@register("dedup_clusters_star", _clusters_oracle())
-def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same duplicate-cluster contract as `dedup_duplicate_clusters`, computed
-    with the large-star/small-star algorithm (dedup/components.py,
-    connected_components_star) — O(log^2 n) rounds on adversarial
-    high-diameter graphs where plain min-label propagation needs O(diameter).
-    Both implementations must agree with the recursive-CTE oracle."""
-    from sri_spark.dedup.components import connected_components_star
-
-    pairs = minhash_lsh_pairs(
-        load_table(spark, sf_dir, "documents"), threshold=JACCARD_THRESHOLD
-    )
-    return connected_components_star(pairs).select(
-        F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
-    )
-
-
 @register("dedup_duplicate_clusters", _clusters_oracle())
 def dedup_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate CLUSTERS: MinHash-LSH pairs (jaccard >= 0.5) closed
-    under transitivity via iterative min-label propagation
+    under transitivity by the large-star/small-star components engine
     (dedup/components.py) — (doc_id, cluster_id = min doc in component),
     the keep-one-per-cluster form curation consumes. The oracle computes the
     same closure with a recursive CTE."""
@@ -433,12 +416,12 @@ def dedup_corpus_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     components); the final left join assigns cluster ids corpus-wide and
     the size window partitions by cluster — per-cluster sorts, no global
     ordering anywhere."""
-    from sri_spark.dedup.components import connected_components_star
+    from sri_spark.dedup.components import connected_components
     from sri_spark.dedup.minhash import minhash_lsh_pairs
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(docs, threshold=JACCARD_THRESHOLD)
-    clusters = connected_components_star(pairs).select(
+    clusters = connected_components(pairs).select(
         F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
     )
     assigned = (
@@ -688,12 +671,12 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape every dedup run reports: a heavy tail here means boilerplate
     families, a spike at 2 means mirrored pages. Two aggregates on top of
     the end-to-end cluster assignment."""
-    from sri_spark.dedup.components import connected_components_star
+    from sri_spark.dedup.components import connected_components
     from sri_spark.dedup.minhash import minhash_lsh_pairs
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(docs, threshold=JACCARD_THRESHOLD)
-    clusters = connected_components_star(pairs).select(
+    clusters = connected_components(pairs).select(
         F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
     )
     assigned = (

@@ -2,7 +2,7 @@
 (nodes = customers + suppliers, an undirected edge per distinct pair that
 traded through an order). The oracle unrolls the same power iterations as
 CTE rounds, so an iterative algorithm gets a full value-level SQL check —
-same approach as dedup_clusters_star's recursive-CTE oracle.
+same approach as dedup_duplicate_clusters' recursive-CTE oracle.
 """
 
 from __future__ import annotations
@@ -232,10 +232,10 @@ def graph_components_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-label per node (closure is O(n * edges) — fine for a
     dimension-sized graph, exactly what the star-contraction algorithm
     avoids at corpus scale). Emits (component = min nation id, size)."""
-    from sri_spark.dedup.components import connected_components_star
+    from sri_spark.dedup.components import connected_components
 
     e = _top_trade_edges(spark, sf_dir)
-    comp = connected_components_star(e, src="a", dst="b")
+    comp = connected_components(e, src="a", dst="b")
     return (
         comp.groupBy(F.col("component").cast("long").alias("component"))
         .agg(F.count("*").cast("long").alias("n_nodes"))

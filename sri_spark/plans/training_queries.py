@@ -182,9 +182,11 @@ def _semantic_clusters_oracle() -> str:
 def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic duplicate clusters: embedding near-dup pairs
     (random-hyperplane LSH buckets + exact cosine >= {NEAR_THRESHOLD}) closed
-    under transitivity — (vec_id, cluster_id = min member). Composes the
+    under transitivity by the large-star/small-star components engine
+    (dedup/components.py) — (vec_id, cluster_id = min member). Composes the
     similarity operator with the dedup clustering operator; curation keeps
-    one representative per cluster."""
+    one representative per cluster. The pairs satisfy vec_a < vec_b, so the
+    engine's self-loop filter drops none of them."""
     from sri_spark.dedup.components import connected_components
     from sri_spark.similarity.lsh import rp_lsh_near_pairs
 

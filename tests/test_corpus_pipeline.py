@@ -32,7 +32,7 @@ def catalog_frames(spark):
     q = all_queries()
     return {
         "select_training": q["corpus_select_training"](spark, SF).toPandas(),
-        "clusters": q["dedup_clusters_star"](spark, SF).toPandas(),
+        "clusters": q["dedup_duplicate_clusters"](spark, SF).toPandas(),
         "quality": q["text_quality_score"](spark, SF).toPandas(),
         "decontaminate": q["corpus_decontaminate"](spark, SF).toPandas(),
         "pack": q["corpus_pack_sequences"](spark, SF).toPandas(),
@@ -50,7 +50,7 @@ def _expected_counts(cat):
     n0 = len(cat["docs"])
     s3 = set(cat["select_training"]["doc_id"])
 
-    # near-dup keep-best: corpus-wide clusters (dedup_clusters_star) ranked
+    # near-dup keep-best: corpus-wide clusters (dedup_duplicate_clusters) ranked
     # by text_quality_score's composite — drop non-keeper members
     qual = dict(zip(cat["quality"]["doc_id"], cat["quality"]["quality"]))
     drop = set()

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import pytest
 
-# r14: slow tier — the 284-query sweep is a round-close invariant, not
+# r14: slow tier — the catalog-wide sweep is a round-close invariant, not
 # an iteration gate (pytest.ini); a NEW query must still run it once
 pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F

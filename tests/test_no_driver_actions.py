@@ -20,7 +20,8 @@ plan has a shuffle: AQE executes its stages to fix the final plan).
 The allowlist is the set of genuinely iterative / trained builders, where
 an action IS the algorithm (not a metadata shortcut):
 
-- connected-components fixpoints: each round is materialized by an eager
+- the large-star/small-star connected-components fixpoint
+  (dedup/components.py): each round is materialized by an eager
   localCheckpoint (which also cuts the lineage) and its convergence
   signature (count + bit_xor) rides that job via observe() — the loop
   cannot be expressed lazily (data-dependent round count);
@@ -46,13 +47,12 @@ SF_DIR = "/root/testdata/sf0.001"
 # builder -> why an action during construction is the algorithm, not a leak
 ITERATIVE_OK = {
     "corpus_pack_sequences": "two-phase packing: phase-1 per-partition offsets (one row per partition)",
-    "dedup_cluster_keep_best": "connected-components fixpoint: one eager localCheckpoint per round, convergence signature via observe()",
-    "dedup_cluster_size_histogram": "connected-components fixpoint: one eager localCheckpoint per round, convergence signature via observe()",
-    "dedup_clusters_star": "large-star/small-star fixpoint: one eager localCheckpoint per round, signature via observe()",
-    "dedup_corpus_end_to_end": "composed pipeline includes the components fixpoint (per-round eager localCheckpoint)",
-    "dedup_duplicate_clusters": "min-label propagation fixpoint convergence checks",
-    "dedup_semantic_clusters": "components fixpoint over embedding near-pairs",
-    "graph_components_trade": "components fixpoint (dimension-sized trade graph; per-round eager localCheckpoint)",
+    "dedup_cluster_keep_best": "large-star/small-star components over MinHash-LSH pairs: one eager localCheckpoint per round, fixpoint signature via observe()",
+    "dedup_cluster_size_histogram": "large-star/small-star components over MinHash-LSH pairs: one eager localCheckpoint per round, fixpoint signature via observe()",
+    "dedup_corpus_end_to_end": "composed pipeline: its large-star/small-star components run one eager localCheckpoint per round",
+    "dedup_duplicate_clusters": "large-star/small-star components over MinHash-LSH pairs: one eager localCheckpoint per round, fixpoint signature via observe()",
+    "dedup_semantic_clusters": "large-star/small-star components over embedding LSH near-pairs: one eager localCheckpoint per round, fixpoint signature via observe()",
+    "graph_components_trade": "large-star/small-star components of the dimension-sized trade graph: one eager localCheckpoint per round",
     "similarity_ann_margin_multiprobe_topk": "1-row query projections/bucket fetch: probe enumeration is index metadata, like IVF centroids",
     "similarity_ann_multiprobe_topk": "1-row query-vector fetch for broadcast",
     "similarity_ivf_pq_pipeline": "KMeans fit + sample-trained PQ codebooks + query fetch",

@@ -80,34 +80,6 @@ def test_multimodal_decode_and_frames(spark, sf_dir):
         assert r["n"] == expected
 
 
-def test_stateful_running_totals(spark, sf_dir, tmp_path):
-    import shutil
-
-    events_dir = tmp_path / "events_state"
-    events_dir.mkdir()
-    shutil.copy(f"{sf_dir}/events.parquet", events_dir / "part-000.parquet")
-
-    from sri_spark.streaming.stateful import run_stateful_stream
-
-    out = run_stateful_stream(spark, str(events_dir), str(tmp_path / "ckpt_state"))
-    # last emitted row per user = final totals (update mode)
-    got = {}
-    for r in out.collect():
-        got[r["user_id"]] = (r["n_events"], r["total_value"])
-
-    batch = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("t"))
-        .collect()
-    )
-    expected = {r["user_id"]: (r["n"], r["t"]) for r in batch}
-    assert set(got) == set(expected)
-    for uid, (n, t) in expected.items():
-        assert got[uid][0] == n
-        assert abs(got[uid][1] - t) < 0.05  # float sum accumulation tolerance
-
-
 def test_streaming_dedup_within_watermark(spark, sf_dir, tmp_path):
     import shutil
 
@@ -232,44 +204,3 @@ def test_session_window_stream_equals_batch(spark, sf_dir, tmp_path):
     key = lambda r: (r["user_id"], r["session_start"], r["n_events"], r["total_value"])
     assert sorted(map(key, streamed)) == sorted(map(key, batch))
     assert len(streamed) > 0
-
-
-def _ewma_reference(rows, alpha):
-    """Pure-Python recursive EWMA per user over (ts, event_id)-ordered rows."""
-    out = {}
-    prev: dict[int, float] = {}
-    for r in sorted(rows, key=lambda r: (r["ts"], r["event_id"])):
-        u, v = r["user_id"], float(r["value"])
-        prev[u] = v if u not in prev else alpha * v + (1 - alpha) * prev[u]
-        out[(u, r["event_id"])] = prev[u]
-    return out
-
-
-def test_stateful_ewma_exact_recurrence(spark, sf_dir, tmp_path):
-    """Recursive EWMA must equal the Python fold over the whole series,
-    including across micro-batch boundaries (two time-ordered files)."""
-    from sri_spark.sources.testdata import normalize_event_ts
-    from sri_spark.streaming.stateful import EWMA_ALPHA, run_ewma_stream
-
-    src = normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
-    cutoff = src.select(F.percentile_approx("ts", 0.5)).first()[0]
-    events_dir = tmp_path / "events_ewma"
-    events_dir.mkdir()
-    for name, pred in [
-        ("0-early", F.col("ts") <= cutoff),  # file order = time order:
-        ("1-late", F.col("ts") > cutoff),  # state must chain across batches
-    ]:
-        out = tmp_path / f"ewma_{name}"
-        src.filter(pred).coalesce(1).write.parquet(str(out))
-        shutil.copy(next(out.glob("part-*.parquet")), events_dir / f"{name}.parquet")
-
-    got = {
-        (r["user_id"], r["event_id"]): r["ewma"]
-        for r in run_ewma_stream(
-            spark, str(events_dir), str(tmp_path / "ckpt_ewma")
-        ).collect()
-    }
-    want = _ewma_reference(src.collect(), EWMA_ALPHA)
-    assert set(got) == set(want)
-    for k, v in want.items():
-        assert abs(got[k] - v) < 1e-6, k
