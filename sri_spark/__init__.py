@@ -14,13 +14,8 @@ Layout
                    in `parity` and `fixed` semantic modes.
 - ``dedup``      : exact / n-gram-Jaccard / MinHash-LSH / SimHash deduplication.
 - ``text``       : language-ID, quality scoring, token counting, fingerprinting.
-- ``similarity`` : embedding cosine top-k (brute force + LSH-bucketed ANN).
-- ``multimodal`` : binary-column plumbing for image/audio payloads
-                   (pluggable codecs: PIL / stdlib-WAV auto-detect, byte-stats fallback).
-- ``streaming``  : Structured Streaming jobs over the `events` fixture,
-                   incl. the exactly-once foreachBatch MERGE sink.
-- ``etl.interactive`` : notebook-style task-by-task runner (per-task timing,
-                   validation, table verification, example query).
+- ``similarity`` : embedding cosine top-k (brute force, LSH, IVF and PQ ANN), PCA.
+- ``graph``      : PageRank, HITS and k-core peeling.
 """
 
 __version__ = "0.1.0"

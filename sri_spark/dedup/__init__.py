@@ -1,8 +1,7 @@
 from sri_spark.dedup.exact import exact_dedup_groups, normalize_text
 from sri_spark.dedup.shingles import shingle_hashes_df, shingles_df
 from sri_spark.dedup.jaccard import ngram_jaccard_pairs
-from sri_spark.dedup.minhash import MINHASH_COEFFS, minhash_lsh_pairs, minhash_signatures
-from sri_spark.dedup.simhash import simhash_col, simhash_dup_groups
+from sri_spark.dedup.minhash import MINHASH_COEFFS, minhash_lsh_pairs
 
 __all__ = [
     "exact_dedup_groups",
@@ -11,8 +10,5 @@ __all__ = [
     "shingle_hashes_df",
     "ngram_jaccard_pairs",
     "MINHASH_COEFFS",
-    "minhash_signatures",
     "minhash_lsh_pairs",
-    "simhash_col",
-    "simhash_dup_groups",
 ]

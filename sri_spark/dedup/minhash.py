@@ -36,14 +36,6 @@ LSH_BANDS = 4
 LSH_ROWS = 4  # LSH_BANDS * LSH_ROWS == len(MINHASH_COEFFS)
 
 
-def minhash_signatures(
-    df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
-    """One row per doc: m0..m15 minhash components."""
-    sh = shingle_hashes_df(df, text_col, id_col, n)
-    return minhash_signatures_from_shingles(sh, id_col=id_col)
-
-
 def minhash_signatures_from_shingles(
     sh: DataFrame, *, id_col: str = "doc_id", with_size: bool = False
 ) -> DataFrame:

@@ -2,8 +2,8 @@
 
 Each token contributes its count-weighted ±1 vote to 32 bit positions of its
 md5-derived 32-bit hash; the simhash sets bit i iff the weighted vote is
-positive. Near-duplicates land at small Hamming distance; identical simhash
-is the cheap blocking key used here.
+positive. Near-duplicates land at small Hamming distance; `simhash_near_pairs`
+blocks them on identical byte-bands of the simhash.
 
 Expression shape: one explode to (doc, token, count), then a single
 hash-aggregate with 32 conditional sums — all codegen, no UDFs."""
@@ -45,12 +45,6 @@ def simhash_df(
             F.lit(0).cast("long")
         )
     return weights.select(F.col(id_col), sim.alias("simhash"))
-
-
-def simhash_col(text: Column) -> Column:  # pragma: no cover - thin wrapper
-    raise NotImplementedError(
-        "simhash needs token-count aggregation; use simhash_df on a DataFrame"
-    )
 
 
 HAMMING_BANDS = 4  # 4 bands x 8 bits over the 32-bit simhash
@@ -115,15 +109,3 @@ def simhash_near_pairs(
         .select("doc_a", "doc_b", "hamming")
     )
 
-
-def simhash_dup_groups(
-    df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Duplicate groups blocked on identical simhash: (simhash, keep_id,
-    n_docs) for groups with >1 member."""
-    sim = simhash_df(df, text_col=text_col, id_col=id_col)
-    return (
-        sim.groupBy("simhash")
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("n_docs"))
-        .filter(F.col("n_docs") > 1)
-    )

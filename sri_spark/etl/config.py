@@ -29,13 +29,6 @@ from dataclasses import dataclass
 class EtlConfig:
     mode: str = "fixed"  # "parity" | "fixed"
     run_date: dt.date = dt.date(2025, 7, 2)  # the reference's recorded run day
-    # guard against Q4-style fan-out explosions in parity mode: abort when the
-    # worst-case lookup multiplier exceeds this (SURVEY §7.4). Parity mode is
-    # a small-fixture equivalence tool: at production scale even a guarded
-    # fan-out multiplies the fact by the average dim multiplicity AND funnels
-    # it through the reference's positional-order global sort — use fixed
-    # mode (1:1 lookups) for real workloads, as the survey prescribes
-    max_fanout_factor: float = 100.0
     # reference semantics fill unmatched lookup FKs with 1 before loading,
     # which makes null-FK validation vacuous (the reference's own check never
     # fires). False keeps misses as nulls, so the null-FK counts observed in

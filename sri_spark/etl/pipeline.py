@@ -1,9 +1,10 @@
 """One-application star pipeline (SURVEY §3.1 'Spark shape').
 
 The reference's six tasks (4 dim ETLs -> barrier -> fact -> validation)
-collapse into one lazy plan: the CSV is scanned once per consumer with column
-pruning, dims never round-trip through an external warehouse, and the fact's
-lookups join the freshly-built dims in session (the bounded ones broadcast).
+collapse into one lazy plan: `run_pipeline` scans the CSV once and persists
+the scan for its five consumers (the four dims and the fact), dims never
+round-trip through an external warehouse, and the fact's lookups join the
+freshly-built dims in session (the bounded ones broadcast).
 """
 
 from __future__ import annotations
@@ -59,7 +60,7 @@ def run_pipeline(
     # computing the dims a throwaway time)
     dims = {k: scoped_persist(v) for k, v in dims.items()}
     if cfg.parity:
-        check_fanout(dims["dim_vehiculo"], dims["dim_transaccion"], cfg)
+        check_fanout(dims["dim_vehiculo"], dims["dim_transaccion"])
     fact = scoped_persist(
         build_fact(
             src,

@@ -25,7 +25,6 @@ from __future__ import annotations
 import argparse
 import datetime as dt
 import json
-import logging
 import os
 import time
 
@@ -37,12 +36,6 @@ def main(argv: list[str] | None = None) -> None:
     parser.add_argument("--mode", default="fixed", choices=["parity", "fixed"])
     parser.add_argument("--run-date", default="2025-07-02")
     parser.add_argument("--no-enforce", action="store_true", help="skip quality gate")
-    parser.add_argument(
-        "--interactive",
-        action="store_true",
-        help="notebook-style task-by-task run: per-task timing/rows, table "
-        "verification, example query (etl/interactive.py)",
-    )
     args = parser.parse_args(argv)
 
     from sri_spark.etl import EtlConfig, run_pipeline
@@ -56,25 +49,9 @@ def main(argv: list[str] | None = None) -> None:
     from sri_spark.operators.observability import stage_metrics
     from sri_spark.session import get_spark
 
-    logging.basicConfig(level=logging.INFO, format="%(asctime)s %(message)s")
-    log = logging.getLogger("sri_spark.etl")
-
     t0 = time.perf_counter()
     spark = get_spark("sri-star-etl")
     cfg = EtlConfig(mode=args.mode, run_date=dt.date.fromisoformat(args.run_date))
-
-    if args.interactive:
-        from sri_spark.etl.interactive import run_interactive
-
-        report = run_interactive(
-            spark, args.source, out_dir=args.out, cfg=cfg, log=log.info
-        )
-        log.info(
-            "interactive run %s in %.1fs",
-            "completed" if report["ok"] else "FAILED",
-            time.perf_counter() - t0,
-        )
-        return
 
     gate = None if args.no_enforce else QualityThresholds()
     run: dict = {"mode": args.mode, "source": args.source, "out": args.out,

@@ -5,7 +5,7 @@ from sri_spark.functions.dates import (
     nombre_dia_es,
     nombre_mes_es,
 )
-from sri_spark.functions.cleaning import clean_text, coerce_double, fill_defaults
+from sri_spark.functions.cleaning import clean_text, coerce_double
 
 __all__ = [
     "MESES_ES",
@@ -15,5 +15,4 @@ __all__ = [
     "nombre_dia_es",
     "clean_text",
     "coerce_double",
-    "fill_defaults",
 ]

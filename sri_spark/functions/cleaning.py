@@ -11,7 +11,7 @@ All native Column expressions — Spark's cast-from-string already has
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -39,8 +39,3 @@ def coerce_date(col: Column, fmt: str = "M/d/yyyy") -> Column:
     mismatch regardless of ANSI mode — same coerce semantics.
     """
     return F.to_date(F.try_to_timestamp(col, F.lit(fmt)))
-
-
-def fill_defaults(df: DataFrame, defaults: dict[str, object]) -> DataFrame:
-    """Constant null-fill per column (E5)."""
-    return df.na.fill(defaults)

@@ -58,20 +58,6 @@ def scoped_persist(
     return df
 
 
-def track(df: DataFrame) -> DataFrame:
-    """Register an already-persisted DataFrame for release (same scoping
-    rules as scoped_persist) — for callers that manage persist() themselves,
-    e.g. iterative algorithms that unpersist per round but return a final
-    persisted result."""
-    scope = _active_scope()
-    if scope is not None:
-        scope.append(df)
-    else:
-        with _LOCK:
-            _PERSISTED.append(df)
-    return df
-
-
 @contextmanager
 def cache_scope(blocking: bool = False):
     """Release every DataFrame scoped-persisted inside the block on exit.

@@ -14,9 +14,6 @@ Batch usage:
     df.write.parquet(...)          # the action
     metrics = obs.get              # {'rows': ..., 'null_dates': ...}
 
-Streaming: the same `observe` call surfaces per-micro-batch metrics in
-`StreamingQueryProgress.observedMetrics` — one definition, both runtimes.
-
 `codegen_compiles` reads the JVM's generated-code compile counters, so a
 caller can diff them around a run and see whether it recompiled classes
 the session had already compiled (see session.py's codegen cache cap).

@@ -322,9 +322,8 @@ def embeddings_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The deterministic uniform start vector pins both convergence path and
     sign. Every shuffle key is bounded by labels x dims(²); the vectors
-    stream through one explode. `similarity/pca.py::top_component_grouped`
-    is the production Arrow grouped-map twin (exact eigh per label, no
-    dim² row blowup); pytest asserts the two agree."""
+    stream through one explode. tests/test_pca.py replays the recurrence
+    in numpy and shows it converges to the exact top eigenvector."""
     from sri_spark.operators.caching import scoped_persist
     from sri_spark.similarity.pca import (
         covariance_long,

@@ -1,6 +1,6 @@
-"""Event-stream analytics catalog queries (batch analogs of the streaming
-jobs in sri_spark.streaming, so they are DuckDB-checkable; the streaming
-module runs the same logic incrementally with watermarks)."""
+"""Event analytics catalog queries over the `events` fixture: windows,
+sessions, funnels, joins and monitoring rollups, each paired with DuckDB
+oracle SQL."""
 
 from __future__ import annotations
 
@@ -25,9 +25,8 @@ SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes
     """,
 )
 def events_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour window per event type — the batch twin of the
-    streaming windowed aggregation (watermarked version: streaming.jobs).
-    F.window() keeps the operator shape identical between batch and stream."""
+    """Tumbling 1-hour window per event type: one F.window() hash
+    aggregate."""
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -255,22 +254,36 @@ def events_json_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_enrich_static(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the stream-static dimension join
-    (streaming.jobs.enrich_events_with_dim, equality covered by
-    tests/test_streaming_multimodal.py): enrich events with the customer
-    segment (broadcast dim), then roll up per segment."""
-    from sri_spark.streaming.jobs import enrich_events_with_dim
-
+    """Enrich events with the customer segment (broadcast dim), then roll
+    up per segment."""
     ev = load_table(spark, sf_dir, "events")
     cust = load_table(spark, sf_dir, "customer")
     return (
-        enrich_events_with_dim(ev, cust)
+        _enrich_events_with_dim(ev, cust)
         .groupBy("segmento")
         .agg(
             F.count("*").alias("n_events"),
             F.countDistinct("user_id").alias("usuarios"),
             F.round(F.sum("value"), 2).alias("total_value"),
         )
+    )
+
+
+def _enrich_events_with_dim(events: DataFrame, dim: DataFrame) -> DataFrame:
+    """Left-join each event to a dimension keyed by user_id (here the
+    customer segment). The dimension is broadcast: it is dimension-sized,
+    while the events grow with the data."""
+    d = dim.select(
+        F.col("c_custkey").alias("__dim_key"),
+        F.col("c_mktsegment").alias("segmento"),
+    )
+    joined = events.join(F.broadcast(d), events["user_id"] == d["__dim_key"], "left")
+    return joined.select(
+        "event_id",
+        "user_id",
+        "event_type",
+        "value",
+        F.coalesce(F.col("segmento"), F.lit("SIN_SEGMENTO")).alias("segmento"),
     )
 
 
@@ -291,18 +304,41 @@ def events_enrich_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Every (click, view-from-the-preceding-hour) pair per user — the batch
-    twin of streaming.jobs.click_view_interval_join (identical operator
-    definition; the streaming run adds watermarks and state expiry, equality
-    covered by tests/test_streaming_multimodal.py)."""
-    from sri_spark.streaming.jobs import (
-        click_view_interval_join,
-        prepare_click_view_streams,
-    )
+    """Every (click, view-from-the-preceding-hour) pair per user: a
+    time-interval join, planned as a sort-merge join on user_id with the
+    time bound as a range residual."""
+    clicks, views = _click_view_sides(load_table(spark, sf_dir, "events"))
+    return _click_view_interval_join(clicks, views)
 
-    ev = load_table(spark, sf_dir, "events")
-    clicks, views = prepare_click_view_streams(ev)
-    return click_view_interval_join(clicks, views)
+
+def _click_view_sides(events: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Split an events frame into the interval join's two sides."""
+    clicks = events.filter(F.col("event_type") == "click").select(
+        F.col("event_id").alias("click_id"),
+        F.col("ts").alias("click_ts"),
+        "user_id",
+    )
+    views = events.filter(F.col("event_type") == "view").select(
+        F.col("event_id").alias("view_id"),
+        F.col("ts").alias("view_ts"),
+        F.col("user_id").alias("v_user_id"),
+    )
+    return clicks, views
+
+
+def _click_view_interval_join(clicks: DataFrame, views: DataFrame) -> DataFrame:
+    """Pair every click with the same user's views from the preceding hour."""
+    cond = (
+        (clicks["user_id"] == views["v_user_id"])
+        & (views["view_ts"] <= clicks["click_ts"])
+        & (views["view_ts"] >= clicks["click_ts"] - F.expr("INTERVAL 1 HOUR"))
+    )
+    return clicks.join(views, cond).select(
+        "click_id",
+        "view_id",
+        "user_id",
+        (F.unix_micros("click_ts") - F.unix_micros("view_ts")).alias("lag_us"),
+    )
 
 
 FUNNEL_STEPS = ["signup", "view", "click", "purchase"]
@@ -689,9 +725,7 @@ GROUP BY 1
 def events_error_rate_sli(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly error-rate SLI with an error-budget flag — the monitoring
     rollup every event pipeline publishes. One windowed hash aggregate
-    (conditional sums ride the same pass as the counts); the streaming
-    twin is the same expression under a watermark (streaming.jobs
-    windowed shape)."""
+    (conditional sums ride the same pass as the counts)."""
     ev = load_table(spark, sf_dir, "events")
     is_err = F.when(F.col("event_type") == "error", 1).otherwise(0)
     return (

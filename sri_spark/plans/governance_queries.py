@@ -292,7 +292,7 @@ def events_watermark_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts-sorted). Lateness = how far behind the already-seen high-water mark
     each event's timestamp arrives. pct_late/max are exactly the numbers
     `withWatermark` needs: a watermark below max drops data, one far above
-    it wastes state. Feeds sri_spark/streaming's watermark defaults.
+    it wastes state.
 
     Shape: a running-max window PARTITIONED BY arrival minute (never a
     global sort — each minute is an independent partition) + one per-type

@@ -1,14 +1,11 @@
 """Multimodal catalog query: binary asset-column inventory with an oracle.
 
-The multimodal family (sri_spark/multimodal/binary.py: decode / resize /
-frame-sample plumbing over opaque binary columns) is pytest-covered
-because the fixture tables carry no binary columns and the decode step is
-environment-dependent. This query closes the oracle gap for the
-RELATIONAL half of that surface: it materializes a deterministic binary
-asset per document (a tagged UTF-8 payload — the plumbing cares about
-bytes, not pixels), and runs the inventory pass every asset pipeline
-starts with — sizes, content-hash identity, per-source rollup — entirely
-on the BinaryType column.
+The fixture tables carry no binary columns, so the `multimodal_*` queries
+derive them in SQL: this one materializes a deterministic binary asset
+per document (a tagged UTF-8 payload — the pass cares about bytes, not
+pixels), and runs the inventory pass every asset pipeline starts with —
+sizes, content-hash identity, per-source rollup — entirely on the
+BinaryType column.
 
 Cross-engine note: Spark's md5() accepts BINARY while DuckDB's accepts
 only VARCHAR; both hash the same UTF-8 bytes here, so content ids agree

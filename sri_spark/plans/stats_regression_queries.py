@@ -799,7 +799,7 @@ def stats_logistic_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _irls_design(load_table(spark, sf_dir, "lineitem"))
     # beta^(0) = 0 as a keys=[] aggregate (not a bare Range+Project): the
     # catalog BNLJ gate only admits crossJoins whose broadcast side is a
-    # provable 1-row global aggregate (plans/advisor.py:143)
+    # provable 1-row global aggregate (tests/advisor.py::unbounded_nested_loops)
     beta = spark.range(1).agg(
         F.max(F.lit(0.0)).alias("b0"),
         F.max(F.lit(0.0)).alias("b1"),

@@ -267,10 +267,7 @@ def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping token-window chunking (64-token chunks, 16-token
     overlap) — the RAG/pretraining chunker. Pure array expressions:
     sequence() generates the chunk grid per row, slice() cuts each window,
-    one explode emits chunks — everything fuses into the scan, no UDF.
-    sri_spark.text.chunker has the Python-UDTF twin of this operator for
-    the cases that genuinely need per-row Python; the pytest proves both
-    produce identical chunks."""
+    one explode emits chunks — everything fuses into the scan, no UDF."""
     docs = load_table(spark, sf_dir, "documents")
     # token array as a column first — no CSE inside lambdas, so slice() on
     # tokens_col(text) would re-tokenize the doc once per chunk

@@ -26,12 +26,6 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
 
 
-def cosine_sim(a: Column, b: Column, *, decimals: int = 6) -> Column:
-    """Rounded cosine similarity of two array<numeric> columns."""
-    da, db = _as_double(a), _as_double(b)
-    return F.round(_dot(da, db) / (_norm(da) * _norm(db)), decimals)
-
-
 def cosine_topk(
     df: DataFrame,
     query_id: int,

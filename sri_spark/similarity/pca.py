@@ -1,40 +1,23 @@
-"""Per-label top principal component of the embedding table — iterative
-linear algebra done two ways:
+"""Per-label top principal component of the embedding table by
+relational power iteration (`top_component_relational`).
 
-1. **Relational power iteration** (`top_component_relational`): the label
-   covariance matrices live as long-format rows (label, i, j, cov) and each
-   power round is one join + hash aggregate (matrix-vector product) plus a
-   label-sized normalization — the same fixed-iteration unrolling the repo
-   uses for PageRank, so a DuckDB oracle can replay the identical
-   recurrence and value-check it.
-2. **Arrow grouped-map** (`top_component_grouped`): `applyInPandas` per
-   label with a numpy eigendecomposition. This is the mandated custom-
-   operator shape for per-group numerical kernels Spark can't express —
-   each label's vectors arrive as ONE Arrow batch, the kernel is vectorized
-   C, and only (label, component) rows come back.
+The label covariance matrices are built as long-format rows (label, i, j,
+cov) by `covariance_long`; each power round is then a matrix-vector
+product and a normalization over a label-sized frame — the same
+fixed-iteration unrolling the repo uses for PageRank, so a DuckDB oracle
+can replay the identical recurrence and value-check it.
 
-Scale notes: the relational covariance build explodes dim² rows per vector
-(fine for feature-grade dims, exact, oracle-checkable); the grouped path
-computes each label's Gram matrix inside the Arrow batch, so the shuffle
-carries vectors once with no blowup — at 100 TB with many labels the
-grouped path is the production one, and the relational path is its
-cross-engine correctness witness. Per-label state is O(dims²), constant in
-row count; a label too big for one task would shard into partial Grams via
-mapInPandas + a (label, i, j) aggregate — same algebra, one more shuffle.
+Scale notes: the covariance build explodes dims(dims+1)/2 rows per vector
+(fine for feature-grade dims, exact, oracle-checkable), and map-side
+combine collapses them before the exchange. Per-label state is O(dims²),
+constant in row count; a dims too large for one row would shard into
+partial matvecs — same algebra, one more shuffle.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 POWER_ITERS = 4
 
@@ -134,7 +117,7 @@ def top_component_relational(
     arbitrary partial order, and both land inside the oracle's 6-decimal
     envelope). At 100 TB labels shard across tasks; a dims too large for
     one row (dims² doubles ≫ task memory) would shard into partial
-    matvecs — the same escalation note as the grouped Arrow path."""
+    matvecs."""
     # row-major dense matrix per label: array_sort on (i, j, cov) structs
     # orders lexicographically by the unique (i, j) key, so cell k holds
     # cov[i=k div dims, j=k mod dims]; struct-wrapping keeps NULL cov
@@ -216,48 +199,3 @@ def top_component_relational(
         "label", F.posexplode("__v").alias("i", "loading")
     )
 
-
-_GROUPED_SCHEMA = StructType(
-    [
-        StructField("label", StringType()),
-        StructField("n_vecs", LongType()),
-        StructField("explained_ratio", DoubleType()),
-        StructField("component", ArrayType(DoubleType())),
-    ]
-)
-
-
-def top_component_grouped(
-    emb: DataFrame, *, vec_col: str = "embedding", label_col: str = "label"
-) -> DataFrame:
-    """applyInPandas twin: per-label exact top eigenvector + explained
-    variance ratio via numpy, one Arrow batch per label. Sign-normalized
-    (largest-|x| entry positive) so results are comparable across
-    backends regardless of eigensolver sign convention."""
-    import numpy as np
-    import pandas as pd
-
-    def _top(pdf: pd.DataFrame) -> pd.DataFrame:
-        mat = np.stack(pdf["__v"].to_numpy())
-        mat = mat - mat.mean(axis=0, keepdims=True)
-        cov = (mat.T @ mat) / mat.shape[0]
-        vals, vecs = np.linalg.eigh(cov)
-        comp = vecs[:, -1]
-        pivot = np.argmax(np.abs(comp))
-        if comp[pivot] < 0:
-            comp = -comp
-        ratio = float(vals[-1] / vals.sum()) if vals.sum() > 0 else 0.0
-        return pd.DataFrame(
-            {
-                "label": [pdf["__label"].iloc[0]],
-                "n_vecs": [len(pdf)],
-                "explained_ratio": [ratio],
-                "component": [comp.tolist()],
-            }
-        )
-
-    prepped = emb.select(
-        F.col(label_col).cast("string").alias("__label"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v"),
-    )
-    return prepped.groupBy("__label").applyInPandas(_top, _GROUPED_SCHEMA)

@@ -1,10 +1,10 @@
 """Physical-plan advisor: the repo's 100 TB plan rules, executable.
 
-`tests/test_plan_shapes.py` hard-asserts these rules for known catalog
-queries; this module generalizes them into a reusable check a user can run
-on ANY DataFrame before submitting it to a large cluster:
+The test suite's plan gate. `tests/test_plan_shapes.py` hard-asserts
+these rules for known catalog queries; `tests/test_plan_advisor.py` runs
+them over the whole catalog, and they work on any DataFrame:
 
-    from sri_spark.plans.advisor import advise
+    from tests.advisor import advise
     for f in advise(df):
         print(f["severity"], f["rule"], "—", f["detail"])
 

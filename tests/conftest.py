@@ -41,7 +41,7 @@ def catalog_builds(spark, sf_dir) -> dict[str, dict]:
     as they would when the query runs."""
     from sri_spark.operators.caching import unpersist_all
     from sri_spark.plans import all_queries
-    from sri_spark.plans.advisor import record_driver_actions
+    from tests.advisor import record_driver_actions
 
     builds: dict[str, dict] = {}
     for name, fn in sorted(all_queries().items()):

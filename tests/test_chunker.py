@@ -1,4 +1,4 @@
-"""Native chunker == UDTF chunker; chunk geometry invariants."""
+"""Chunk geometry invariants of the `text_chunk_windows` catalog query."""
 
 from __future__ import annotations
 
@@ -7,15 +7,6 @@ from sri_spark.plans.text_queries import (
     CHUNK_STRIDE,
     text_chunk_windows,
 )
-from sri_spark.sources.testdata import load_table
-from sri_spark.text.chunker import chunk_documents_udtf
-
-
-def test_udtf_twin_matches_native(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    native = sorted(tuple(r) for r in text_chunk_windows(spark, sf_dir).collect())
-    via_udtf = sorted(tuple(r) for r in chunk_documents_udtf(docs).collect())
-    assert native == via_udtf and len(native) > 0
 
 
 def test_chunk_geometry(spark, sf_dir):

@@ -15,7 +15,7 @@ from __future__ import annotations
 import re
 
 from sri_spark.plans import all_queries
-from sri_spark.plans.advisor import unbounded_nested_loops
+from tests.advisor import unbounded_nested_loops
 
 
 def _plan(spark, sf_dir, name: str) -> str:

@@ -81,28 +81,6 @@ def test_lsh_near_pairs_empty_embeddings(spark):
     assert rp_lsh_near_pairs(emb).count() == 0
 
 
-def test_cli_interactive_flag(spark, tmp_path):
-    """--interactive routes to the notebook-style runner end to end."""
-    from sri_spark.etl.run import main
-
-    from tests.sri_fixture import write_sri_csv
-
-    csv = tmp_path / "sri.csv"
-    write_sri_csv(str(csv), n=1500, seed=9)
-    main(
-        [
-            "--source",
-            str(csv),
-            "--out",
-            str(tmp_path / "star"),
-            "--interactive",
-        ]
-    )
-    import os
-
-    assert os.path.isdir(tmp_path / "star" / "fact_registro_vehiculos")
-
-
 def test_containment_on_empty_and_degenerate(empty_docs, degenerate_docs):
     from sri_spark.dedup.jaccard import containment_pairs_from_shingles
     from sri_spark.dedup.shingles import shingle_hashes_df

@@ -99,7 +99,7 @@ def test_allowlist_entries_still_exist(catalog_builds):
 def test_recorder_counts_checkpoints(spark):
     from pyspark.sql import functions as F
 
-    from sri_spark.plans.advisor import record_driver_actions
+    from tests.advisor import record_driver_actions
 
     grouped = spark.range(30).groupBy((F.col("id") % 3).alias("k")).count()
     with record_driver_actions() as calls:

@@ -68,42 +68,6 @@ def test_observed_requires_metrics(spark, sf_dir):
         observed(orders, "empty")
 
 
-def test_observe_metrics_in_streaming_progress(spark, sf_dir, tmp_path):
-    """The same observe() call surfaces per-micro-batch metrics in
-    StreamingQueryProgress.observedMetrics — the streaming half of the
-    observability contract."""
-    import shutil
-
-    from sri_spark.streaming.jobs import read_events_stream
-
-    events_dir = tmp_path / "events_obs"
-    events_dir.mkdir()
-    shutil.copy(f"{sf_dir}/events.parquet", events_dir / "part-000.parquet")
-
-    stream = read_events_stream(spark, str(events_dir)).observe(
-        "ingest",
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.when(F.col("value") > 0, 1).otherwise(0)).alias("n_positive"),
-    )
-    q = (
-        stream.writeStream.format("noop")
-        .option("checkpointLocation", str(tmp_path / "ckpt_obs"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    observed = [
-        p["observedMetrics"]["ingest"]
-        for p in (q.recentProgress or [])
-        if p.get("observedMetrics", {}).get("ingest")
-    ]
-    assert observed, "no observed metrics in streaming progress"
-    total_rows = sum(m["rows"] for m in observed)
-    from sri_spark.sources.testdata import load_table
-
-    assert total_rows == load_table(spark, sf_dir, "events").count()
-
-
 def test_codegen_compiles_counts_new_code_once(spark):
     """A plan with code the JVM has not generated before compiles at least
     one class; rerunning it hits the codegen cache and compiles none."""

@@ -1,7 +1,7 @@
 """PCA operator contracts: the relational power iteration replays the
 exact fixed recurrence (checked against a numpy replication, not against
-"the true eigenvector" — convergence is the oracle's business), and the
-Arrow grouped-map twin matches a driver-side eigendecomposition."""
+"the true eigenvector"), and that recurrence converges to the exact top
+eigenvector."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ import pytest
 from sri_spark.similarity.pca import (
     POWER_ITERS,
     covariance_long,
-    top_component_grouped,
     top_component_relational,
 )
 
@@ -22,7 +21,7 @@ def emb(spark, sf_dir):
 
 
 def _vectors_by_label(emb):
-    """Keys stringified to match top_component_grouped's label cast."""
+    """Vectors per label, keys stringified."""
     rows = emb.select("label", "embedding").collect()
     out: dict[str, list] = {}
     for r in rows:
@@ -50,30 +49,9 @@ def test_relational_power_iteration_matches_numpy_replication(spark, emb):
         assert np.allclose(mine, v, atol=1e-9), label
 
 
-def test_grouped_map_matches_driver_side_eigh(spark, emb):
-    got = {
-        r["label"]: (r["n_vecs"], r["explained_ratio"], np.array(r["component"]))
-        for r in top_component_grouped(emb).collect()
-    }
-    ref = _vectors_by_label(emb)
-    assert set(got) == set(ref)
-    for label, mat in ref.items():
-        centered = mat - mat.mean(axis=0, keepdims=True)
-        cov = (centered.T @ centered) / mat.shape[0]
-        vals, vecs = np.linalg.eigh(cov)
-        comp = vecs[:, -1]
-        if comp[np.argmax(np.abs(comp))] < 0:
-            comp = -comp
-        n, ratio, gotc = got[label]
-        assert n == mat.shape[0]
-        assert np.isclose(ratio, vals[-1] / vals.sum(), atol=1e-9)
-        assert np.allclose(gotc, comp, atol=1e-6), label
-        assert np.isclose(np.linalg.norm(gotc), 1.0, atol=1e-9)
-
-
 def test_power_recurrence_converges_to_eigh(spark, emb):
-    """The recurrence both paths share converges to the exact top
-    eigenvector: replicated in numpy (test 1 proved the Spark plan equals
+    """The catalog's recurrence converges to the exact top eigenvector:
+    replicated in numpy (test 1 proved the Spark plan equals
     this replication bit-for-bit, so no cluster run is needed) and pushed
     far past the catalog's 4 feature-grade rounds. The synthetic
     fixture's eigen gap is small — hence hundreds of rounds here, and why

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sri_spark.plans import all_queries
-from sri_spark.plans.advisor import advise, unbounded_nested_loops
+from tests.advisor import advise, unbounded_nested_loops
 
 
 def _rules(findings):
@@ -97,7 +97,7 @@ def test_entire_catalog_has_no_fatal_plans(catalog_builds):
     1-row nested-loop broadcasts and bounded single-partition windows are
     allowed; their queries document why.) Plans come from the shared
     catalog_builds fixture — built once for all three catalog sweeps."""
-    from sri_spark.plans.advisor import advise_plan
+    from tests.advisor import advise_plan
 
     fatal = {}
     for name, rec in catalog_builds.items():
@@ -279,7 +279,7 @@ def test_parser_matches_exact_operator_token_not_prefix():
     # Fail-closed: flag it.
     assert len(unbounded_nested_loops(_PREFIX_SHARING_OP_IN_CHAIN)) == 1
     # the genuine chain ops still pass by exact token
-    from sri_spark.plans.advisor import _op_token
+    from tests.advisor import _op_token
 
     assert _op_token("Sort [x#1L ASC NULLS FIRST], true, 0") == "Sort"
     assert _op_token("SortMergeJoin [a#1L], [b#2L], Inner") == "SortMergeJoin"

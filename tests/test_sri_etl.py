@@ -158,7 +158,8 @@ def test_fixed_mode_invariants(spark, sri_csv):
     assert metricas_por_marca(t).count() > 0
 
 
-def test_parity_fanout_guard(spark, sri_csv):
-    cfg = EtlConfig(mode="parity", run_date=RUN_DATE, max_fanout_factor=1.0)
+def test_parity_fanout_guard(spark, sri_csv, monkeypatch):
+    monkeypatch.setattr("sri_spark.etl.fact.MAX_FANOUT_FACTOR", 1.0)
+    cfg = EtlConfig(mode="parity", run_date=RUN_DATE)
     with pytest.raises(RuntimeError, match="fan-out"):
         run_pipeline(spark, sri_csv, cfg)
