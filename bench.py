@@ -274,13 +274,12 @@ def sri_etl_replay_100x(spark) -> dict:
 
 
 def ann_recall(spark) -> dict:
-    """Round-3 verdict item 7: recall@10 of both ANN paths vs the
+    """Round-3 verdict item 7: recall@10 of the IVF index vs the
     brute-force cosine truth, averaged over a fixed 5-query panel, with
-    wall time per path — so the recall/latency tradeoff is tracked in the
+    wall time for each — so the recall/latency tradeoff is tracked in the
     bench artifact every round, not just asserted once in pytest."""
     from sri_spark.similarity.cosine import cosine_topk
     from sri_spark.similarity.ivf import build_ivf_index, ivf_probe
-    from sri_spark.similarity.lsh import N_PLANES, rp_ann_topk
     from sri_spark.sources.testdata import load_table
 
     emb = load_table(spark, SF_DIR, "embeddings").persist()
@@ -293,62 +292,6 @@ def ann_recall(spark) -> dict:
     for qid in qids:
         truth[qid] = {r["vec_id"] for r in cosine_topk(emb, qid, k=K).collect()}
     brute_sec = time.perf_counter() - t0
-
-    # multi-probe LSH recall/scan-fraction CURVE (hamming = probe radius,
-    # the recall knob documented in similarity/lsh.py). The fixture's true
-    # top-10 cosines are only ~0.3-0.4 (near-random neighbors), so recall
-    # at small scan fractions is intrinsically bounded — the curve, not a
-    # single point, is the honest tradeoff record.
-    import math
-
-    lsh_curve = {}
-    for hamming in (1, 2, 3):
-        t0 = time.perf_counter()
-        hits = sum(
-            len(
-                {
-                    r["vec_id"]
-                    for r in rp_ann_topk(emb, qid, k=K, hamming=hamming).collect()
-                }
-                & truth[qid]
-            )
-            for qid in qids
-        )
-        n_buckets = sum(math.comb(N_PLANES, d) for d in range(hamming + 1))
-        lsh_curve[f"hamming_{hamming}"] = {
-            "recall": round(hits / (K * len(qids)), 4),
-            "sec": round(time.perf_counter() - t0, 4),
-            "scan_fraction": round(n_buckets / 2**N_PLANES, 4),
-        }
-
-    # round-11 verdict item 3: the margin-ranked multiprobe path
-    # (similarity/lsh.py rp_ann_multiprobe_topk) on the SAME recall
-    # harness, at probe budgets equal to the hamming balls' bucket counts
-    # (9/37/93 of 256) — so each multiprobe point reads directly against
-    # the hamming point at the identical scan fraction. Advisory like the
-    # rest of the organic curve (the fixture's neighbors are near-random).
-    from sri_spark.similarity.lsh import rp_ann_multiprobe_topk
-
-    multiprobe_curve = {}
-    for n_probe in (9, 37, 93):
-        t0 = time.perf_counter()
-        hits = sum(
-            len(
-                {
-                    r["vec_id"]
-                    for r in rp_ann_multiprobe_topk(
-                        emb, qid, k=K, n_probe=n_probe
-                    ).collect()
-                }
-                & truth[qid]
-            )
-            for qid in qids
-        )
-        multiprobe_curve[f"probe_{n_probe}"] = {
-            "recall": round(hits / (K * len(qids)), 4),
-            "sec": round(time.perf_counter() - t0, 4),
-            "scan_fraction": round(n_probe / 2**N_PLANES, 4),
-        }
 
     # IVF in the amortized serving shape: ONE index build, many probes —
     # build cost reported separately from per-query probe cost
@@ -375,41 +318,9 @@ def ann_recall(spark) -> dict:
     )
     ivf_probe_sec = time.perf_counter() - t0
 
-    # IVF+PQ composed pipeline (similarity_ivf_pq_pipeline's shape): the
-    # same prebuilt coarse index gates which codes ADC even scores; PQ
-    # codebooks train once corpus-wide
-    from pyspark.sql import functions as F
-
-    from sri_spark.similarity.ivf import rank_probe_cells
-    from sri_spark.similarity.pq import build_pq_codebooks, pq_encode, pq_topk
-
-    t0 = time.perf_counter()
-    books = build_pq_codebooks(emb)  # train ONCE, serve every query
-    # encode ONCE at build time too: the M x K_SUB argmin expression is the
-    # expensive, query-independent half of PQ — production indexes store
-    # codes, and a serving loop that re-encodes per query measures the
-    # wrong thing (observed 5x per-query inflation)
-    codes = pq_encode(indexed, books).persist()
-    codes.count()
-    ivfpq_build_sec = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    ivfpq_hits = 0
-    for qid in qids:
-        cells = rank_probe_cells(indexed, centroids, qid, n_probe=4)
-        subset = codes.filter(F.col("__cell").isin(cells)).drop("__cell")
-        got = {
-            r["vec_id"]
-            for r in pq_topk(
-                emb, qid, k=K, books=books, encoded_df=subset
-            ).collect()
-        }
-        ivfpq_hits += len(got & truth[qid])
-    ivfpq_sec = time.perf_counter() - t0
-    codes.unpersist()
-
-    # round-12 verdict item 2: the BINDING organic contract. The curve
-    # above stays advisory (the fixture's neighbors are near-random, so
-    # fixed operating points track the fixture); what IS defensible on
+    # round-12 verdict item 2: the BINDING organic contract. The fixed
+    # point above stays advisory (the fixture's neighbors are near-random,
+    # so fixed operating points track the fixture); what IS defensible on
     # any corpus is the serving discipline — tune n_probe on a held-out
     # TUNING panel at build time, then bind the EVALUATION panel's
     # recall at that operating point. tests/test_ann_organic.py runs the
@@ -472,8 +383,6 @@ def ann_recall(spark) -> dict:
         # (ann_recall.planted, tests/test_ann_planted.py, >= PLANTED_RECALL_MIN).
         "advisory": True,
         "brute_sec": round(brute_sec, 4),
-        "lsh": lsh_curve,
-        "lsh_multiprobe": multiprobe_curve,
         "ivf": {
             "recall": round(ivf_hits / denom, 4),
             "build_sec": round(ivf_build_sec, 4),
@@ -481,15 +390,8 @@ def ann_recall(spark) -> dict:
             "n_lists": 16,
             "n_probe": 4,
         },
-        "ivf_pq": {
-            "recall": round(ivfpq_hits / denom, 4),
-            "build_sec": round(ivfpq_build_sec, 4),
-            "probe_sec": round(ivfpq_sec, 4),
-            "n_lists": 16,
-            "n_probe": 4,
-        },
         # r13: the tuned-operating-point contract — binding, unlike the
-        # fixed-point curve above (see ORGANIC_* constants)
+        # fixed point above (see ORGANIC_* constants)
         "organic_contract": organic_contract,
     }
 
@@ -962,9 +864,10 @@ def _dedup_lsh_candidates(docs) -> int:
 
 
 # the binding planted ANN recall contract: tests/test_ann_planted.py
-# fails CI when either path's planted recall drops below this; the
-# organic ann_recall CURVE stays advisory (round-5 item 7) but the tuned
-# organic operating point binds too since r13 — see the constants below
+# fails CI when IVF's planted recall drops below this at either noise
+# level; the organic ann_recall fixed point stays advisory (round-5 item
+# 7) but the tuned organic operating point binds too since r13 — see the
+# constants below
 PLANTED_RECALL_MIN = 0.9
 
 # r13 (round-12 verdict item 2): the ORGANIC binding contract. n_probe is
@@ -1007,132 +910,62 @@ def ann_planted(spark) -> dict:
     """Round-4 verdict item 8: recall on a PLANTED-neighbor fixture. The
     organic embeddings fixture has near-random neighbors (true top-10
     cosines ~0.3-0.4), so its recall numbers can't catch a regression.
-    Here 20 seeded unit-norm cluster centers each get 50 points at noise
-    sigma=0.01 — every query's true top-10 are its cluster siblings by
-    construction — and both ANN paths must score recall@10 >= 0.9
-    (tests/test_ann_planted.py asserts the same bound)."""
+    Here 20 seeded unit-norm cluster centers each get 50 points — every
+    query's true top-10 are its cluster siblings by construction — and the
+    IVF index must score recall@10 >= 0.9 at n_probe=4 at two noise
+    levels (tests/test_ann_planted.py asserts the same bound):
+
+    - sigma=0.01, tight clusters;
+    - sigma=0.08, deviations comparable to a random hyperplane's margins.
+      Fixed sign-hyperplane probing reached only 0.38-0.62 recall here;
+      IVF's cells are fit to the data, so the clusters stay clusters."""
     from sri_spark.similarity.cosine import cosine_topk
     from sri_spark.similarity.ivf import build_ivf_index, ivf_probe
-    from sri_spark.similarity.lsh import rp_ann_multiprobe_topk, rp_ann_topk
 
-    emb, n_clusters, per_cluster = _planted_emb(spark, sigma=0.01, seed=20250814)
     K = 10
-    qids = [c * per_cluster for c in range(0, n_clusters, 4)]  # 5 queries
-    truth = {
-        q: {r["vec_id"] for r in cosine_topk(emb, q, k=K).collect()}
-        for q in qids
-    }
 
-    t0 = time.perf_counter()
-    lsh_hits = sum(
-        len(
-            {r["vec_id"] for r in rp_ann_topk(emb, q, k=K, hamming=3).collect()}
-            & truth[q]
-        )
-        for q in qids
-    )
-    lsh_sec = time.perf_counter() - t0
-
-    # margin-ranked multiprobe at a 16-bucket budget (6.25% scan vs the
-    # hamming-3 ball's 36%): planted siblings differ from the query only
-    # by sigma=0.01 noise, so any bucket disagreement is a low-margin
-    # straddle — exactly what the margin ranking probes first. Binding at
-    # the same contract as the other two paths.
-    t0 = time.perf_counter()
-    margin_hits = sum(
-        len(
-            {
-                r["vec_id"]
-                for r in rp_ann_multiprobe_topk(emb, q, k=K, n_probe=16).collect()
-            }
-            & truth[q]
-        )
-        for q in qids
-    )
-    margin_sec = time.perf_counter() - t0
-
-    model, indexed = build_ivf_index(emb, n_lists=16)
-    indexed = indexed.persist()
-    centroids = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    t0 = time.perf_counter()
-    ivf_hits = sum(
-        len(
-            {
-                r["vec_id"]
-                for r in ivf_probe(indexed, centroids, q, k=K, n_probe=4).collect()
-            }
-            & truth[q]
-        )
-        for q in qids
-    )
-    ivf_sec = time.perf_counter() - t0
-    indexed.unpersist()
-    emb.unpersist()
-    denom = K * len(qids)
-
-    # round-12 (r11 verdict item 7): a second, HIGH-NOISE geometry
-    # (sigma=0.08 — deviations comparable to the planes' own margins)
-    # that binds the margin ranking's operating ENVELOPE instead of
-    # demonstrating the tight-cluster case once. Measured regime, pinned
-    # by tests/test_ann_planted.py:
-    #   - hamming-1 visibly fails (0.46): siblings flip >1 plane;
-    #   - margin-16 extracts more recall than the radius-1 ball (0.62 at
-    #     2x its budget) but NO LONGER holds the 0.9 contract — once
-    #     flips decorrelate from plane margins the ranking's information
-    #     is spent, and at the EQUAL 9-bucket budget margin probing drops
-    #     below hamming-1 (0.38 vs 0.46);
-    #   - the data-adaptive IVF path is the rescue in this regime
-    #     (recall 1.0 at n_probe=4): the clusters are still clusters,
-    #     they just stop aligning with fixed hyperplanes.
-    emb2, _, _ = _planted_emb(spark, sigma=0.08, seed=20250815)
-    truth2 = {
-        q: {r["vec_id"] for r in cosine_topk(emb2, q, k=K).collect()}
-        for q in qids
-    }
-    model2, indexed2 = build_ivf_index(emb2, n_lists=16)
-    indexed2 = indexed2.persist()
-    centroids2 = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model2.clusterCenters())
-    ]
-    high_noise: dict = {"sigma": 0.08, "binding": True}
-    for label, probe in (
-        ("lsh_hamming1", lambda q: rp_ann_topk(emb2, q, k=K, hamming=1)),
-        ("lsh_margin_probe9", lambda q: rp_ann_multiprobe_topk(emb2, q, k=K, n_probe=9)),
-        ("lsh_margin_probe16", lambda q: rp_ann_multiprobe_topk(emb2, q, k=K, n_probe=16)),
-        ("ivf_probe4", lambda q: ivf_probe(indexed2, centroids2, q, k=K, n_probe=4)),
-    ):
+    def ivf_point(sigma: float, seed: int):
+        emb, n_clusters, per_cluster = _planted_emb(spark, sigma=sigma, seed=seed)
+        qids = [c * per_cluster for c in range(0, n_clusters, 4)]  # 5 queries
+        truth = {
+            q: {r["vec_id"] for r in cosine_topk(emb, q, k=K).collect()}
+            for q in qids
+        }
+        model, indexed = build_ivf_index(emb, n_lists=16)
+        indexed = indexed.persist()
+        centroids = [
+            (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
+        ]
         t0 = time.perf_counter()
         hits = sum(
-            len({r["vec_id"] for r in probe(q).collect()} & truth2[q])
+            len(
+                {
+                    r["vec_id"]
+                    for r in ivf_probe(indexed, centroids, q, k=K, n_probe=4).collect()
+                }
+                & truth[q]
+            )
             for q in qids
         )
-        high_noise[label] = {
-            "recall": round(hits / denom, 4),
-            "sec": round(time.perf_counter() - t0, 4),
-        }
-    indexed2.unpersist()
-    emb2.unpersist()
+        sec = time.perf_counter() - t0
+        indexed.unpersist()
+        emb.unpersist()
+        point = {"recall": round(hits / (K * len(qids)), 4), "sec": round(sec, 4)}
+        return point, n_clusters, per_cluster
 
+    tight, n_clusters, per_cluster = ivf_point(0.01, 20250814)
+    high_noise, _, _ = ivf_point(0.08, 20250815)
     return {
         "n_clusters": n_clusters,
         "per_cluster": per_cluster,
         "binding": True,
         "recall_min_contract": PLANTED_RECALL_MIN,
-        "lsh_hamming3": {
-            "recall": round(lsh_hits / denom, 4),
-            "sec": round(lsh_sec, 4),
+        "ivf_probe4": tight,
+        "high_noise_sigma008": {
+            "sigma": 0.08,
+            "binding": True,
+            "ivf_probe4": high_noise,
         },
-        "lsh_margin_probe16": {
-            "recall": round(margin_hits / denom, 4),
-            "sec": round(margin_sec, 4),
-        },
-        "ivf_probe4": {
-            "recall": round(ivf_hits / denom, 4),
-            "sec": round(ivf_sec, 4),
-        },
-        "high_noise_sigma008": high_noise,
     }
 
 
@@ -1336,16 +1169,14 @@ def graph_replay_10x(spark) -> dict:
 
 def ann_replay_10x(spark) -> dict:
     """Round-5 verdict item 3 for the ANN probe path: per-query latency of
-    both serving paths on the embeddings table and on a 10x replica
-    (vec_id-shifted copies — identical directions land in identical
-    buckets, so bucket occupancy and the exact-rerank candidate set grow
-    exactly 10x: the worst case for probe cost). LSH probes here include
-    corpus signing (the catalog query's own shape, no prebuilt index);
-    IVF reports index build and probe separately, as in serving."""
+    the IVF index on the embeddings table and on 10x and 100x replicas
+    (vec_id-shifted copies — every vector's neighbourhood is copied
+    verbatim, so the exact-rerank candidate set grows with the corpus: the
+    worst case for probe cost). Index build and probe are reported
+    separately, as in serving."""
     from pyspark.sql import functions as F
 
     from sri_spark.similarity.ivf import build_ivf_index, ivf_probe
-    from sri_spark.similarity.lsh import rp_ann_topk
     from sri_spark.sources.testdata import load_table
 
     base = load_table(spark, SF_DIR, "embeddings")
@@ -1365,7 +1196,7 @@ def ann_replay_10x(spark) -> dict:
         )
 
     # round 9: hundred_x point (200k vectors) — probe latency across two
-    # decades pins the bucketed-scan claim; per-point times are medians of
+    # decades pins the cell-probe claim; per-point times are medians of
     # three full 5-query panels (verdict item 1)
     out = {
         "rows_1x": n1,
@@ -1378,11 +1209,6 @@ def ann_replay_10x(spark) -> dict:
         emb = corpus(n_copies).persist()
         emb.count()
         first = label == "one_x"
-        lsh_sec, _ = _median_point(
-            lambda: [rp_ann_topk(emb, q, k=K, hamming=3).collect() for q in qids],
-            warmup=first,
-        )
-
         indexed_holder: list = []
 
         def _build():
@@ -1409,17 +1235,14 @@ def ann_replay_10x(spark) -> dict:
         indexed.unpersist()
         emb.unpersist()
         out[label] = {
-            "lsh_probe_sec_per_query": round(lsh_sec / len(qids), 4),
             "ivf_build_sec": ivf_build_sec,
             "ivf_probe_sec_per_query": round(ivf_probe_sec / len(qids), 4),
         }
-    for key in ("lsh_probe_sec_per_query", "ivf_probe_sec_per_query"):
-        out[key.replace("_sec_per_query", "_time_growth")] = round(
-            out["ten_x"][key] / out["one_x"][key], 4
-        )
-        out[key.replace("_sec_per_query", "_growth_10x_to_100x")] = round(
-            out["hundred_x"][key] / out["ten_x"][key], 4
-        )
+    key = "ivf_probe_sec_per_query"
+    out["ivf_probe_time_growth"] = round(out["ten_x"][key] / out["one_x"][key], 4)
+    out["ivf_probe_growth_10x_to_100x"] = round(
+        out["hundred_x"][key] / out["ten_x"][key], 4
+    )
     return out
 
 
@@ -1554,7 +1377,6 @@ def replay_plan_probes(spark) -> dict:
     from sri_spark.plans.events_queries import sessionize
     from sri_spark.plans.graph_queries import PR_ITERS
     from sri_spark.similarity.ivf import build_ivf_index, ivf_probe
-    from sri_spark.similarity.lsh import rp_ann_topk
     from sri_spark.sources.testdata import load_table
     from tests.sri_fixture import write_sri_csv
 
@@ -1630,7 +1452,6 @@ def replay_plan_probes(spark) -> dict:
             "action": "collect",
             "measure_marker": (".collect()",),
             "frames": [
-                ("lsh_topk", rp_ann_topk(emb, qid, k=10, hamming=3)),
                 ("ivf_probe", ivf_probe(indexed, centroids, qid, k=10, n_probe=2)),
             ],
         },

@@ -26,7 +26,6 @@ QUERIES = [
     "orders_basket_pairs",
     "text_gopher_gate",
     "events_watermark_lateness",
-    "similarity_ann_multiprobe_topk",
     "dedup_span_exact",
     "join_bloom_prefilter",
     "layout_zorder_pruning",

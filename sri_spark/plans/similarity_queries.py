@@ -7,13 +7,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sri_spark.plans.registry import register
-from sri_spark.similarity.cosine import _as_double, _dot, _norm, cosine_topk
-from sri_spark.similarity.lsh import (
-    N_PLANES,
-    RP_PLANES,
-    rp_bucket_col,
-    rp_lsh_near_pairs,
-)
+from sri_spark.similarity.cosine import cosine_topk
+from sri_spark.similarity.lsh import N_PLANES, RP_PLANES, rp_lsh_near_pairs
 from sri_spark.sources.testdata import load_table
 
 # calibrated to the synthetic fixture's cosine distribution (random 64-dim
@@ -100,7 +95,6 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (k, n_resultados, recall_ok) where recall_ok asserts recall@10 >= 0.5 —
     the documented bound for probing half the cells (pytest checks the same
     bound; tests/test_similarity_ivf.py)."""
-    from sri_spark.similarity.cosine import cosine_topk
     from sri_spark.similarity.ivf import ivf_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -120,220 +114,3 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("k", "n_resultados", "recall_ok")
     )
 
-
-@register(
-    "similarity_pq_topk",
-    """
-    SELECT CAST(10 AS BIGINT) AS k,
-           CAST(10 AS BIGINT) AS n_resultados,
-           TRUE AS recall_ok
-    """,
-)
-def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN top-k (similarity.pq): sample-trained
-    per-subspace codebooks, ADC scoring over the M-byte codes, exact
-    re-rank of the rerank_mult*k best candidates. Per-row values aren't
-    SQL-reproducible (codebooks come from iterative k-means), so the
-    cross-engine contract mirrors similarity_ivf_topk: run PQ AND the
-    brute-force truth, emit (k, n_resultados, recall_ok) with recall@10
-    >= 0.5 — conservative for the synthetic fixture (measured 0.7-0.8 on
-    the structureless random vectors that are PQ's worst case; clustered
-    real embeddings quantize far better). pytest covers determinism and
-    the encode contract (tests/test_similarity_pq.py)."""
-    from sri_spark.similarity.cosine import cosine_topk
-    from sri_spark.similarity.pq import pq_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    pq = pq_topk(emb, query_id=0, k=10).select("vec_id")
-    brute = cosine_topk(emb, query_id=0, k=10).select(
-        "vec_id", F.lit(1).alias("__hit")
-    )
-    return (
-        pq.join(brute, "vec_id", "left")
-        .agg(
-            F.count("*").alias("n_resultados"),
-            (F.sum(F.coalesce(F.col("__hit"), F.lit(0))) >= F.lit(5)).alias(
-                "recall_ok"
-            ),
-        )
-        .withColumn("k", F.lit(10).cast("long"))
-        .select("k", "n_resultados", "recall_ok")
-    )
-
-
-def _ann_topk_oracle() -> str:
-    return f"""
-    WITH be AS (
-      SELECT vec_id, embedding, {_bucket_sql('embedding')} AS bucket FROM embeddings
-    ),
-    q AS (SELECT embedding AS qe, bucket AS qb FROM be WHERE vec_id = 0)
-    SELECT e.vec_id, {_cos_sql('e.embedding', 'q.qe')} AS cosine
-    FROM be e, q
-    WHERE e.bucket = q.qb AND e.vec_id != 0
-    ORDER BY cosine DESC, e.vec_id
-    LIMIT 10
-    """
-
-
-@register("similarity_ann_lsh_topk", _ann_topk_oracle())
-def similarity_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN top-k: probe only the query's LSH bucket (≈ |N|/2^H candidates),
-    exact cosine re-rank inside it. May return < k rows for sparse buckets —
-    the standard ANN recall tradeoff, deterministic here."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    be = emb.select(
-        "vec_id",
-        _as_double(F.col("embedding")).alias("__e"),
-        rp_bucket_col(F.col("embedding")).alias("__bucket"),
-    )
-    q = be.filter(F.col("vec_id") == 0).select(
-        F.col("__e").alias("__q"), F.col("__bucket").alias("__qb")
-    )
-    return (
-        be.join(F.broadcast(q), be["__bucket"] == F.col("__qb"))
-        .filter(F.col("vec_id") != 0)
-        .select(
-            "vec_id",
-            F.round(
-                _dot(F.col("__e"), F.col("__q")) / (_norm(F.col("__e")) * _norm(F.col("__q"))),
-                6,
-            ).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(10)
-    )
-
-
-def _ann_multiprobe_oracle() -> str:
-    return f"""
-    WITH be AS (
-      SELECT vec_id, embedding, {_bucket_sql('embedding')} AS bucket FROM embeddings
-    ),
-    q AS (SELECT embedding AS qe, bucket AS qb FROM be WHERE vec_id = 0)
-    SELECT e.vec_id, {_cos_sql('e.embedding', 'q.qe')} AS cosine
-    FROM be e, q
-    WHERE bit_count(xor(e.bucket, q.qb)) <= 1 AND e.vec_id != 0
-    ORDER BY cosine DESC, e.vec_id
-    LIMIT 10
-    """
-
-
-@register("similarity_ann_multiprobe_topk", _ann_multiprobe_oracle())
-def similarity_ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-probe ANN top-k (similarity/lsh.py rp_ann_topk, hamming=1):
-    probe the query's bucket plus its 8 Hamming-1 neighbours, exact-cosine
-    re-rank the union. The oracle checks the SAME probe set via
-    bit_count(xor(bucket, qb)) <= 1 — so the recall-recovering probe
-    expansion (measured 0.06 -> 0.14 recall@10 at sf0.1 over single-probe)
-    is value-verified cross-engine, not just pytest-asserted. Scanned
-    fraction (1+H)/2^H ≈ 3.5%; the Spark side enumerates probe buckets
-    driver-side and prunes with an IN-list on the bucket column."""
-    from sri_spark.similarity.lsh import rp_ann_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return rp_ann_topk(emb, 0, k=10, hamming=1)
-
-
-def _margin_multiprobe_oracle(n_probe: int) -> str:
-    projections = []
-    for j in range(N_PLANES):
-        plane = "[" + ", ".join(repr(v) for v in RP_PLANES[j]) + "]::DOUBLE[]"
-        projections.append(f"round({_DOT.format(a='qe', b=plane)}, 6) AS p{j}")
-    # identical term order to margin_probe_sequence's Python sum (j
-    # ascending), so the float scores — and therefore the probe set under
-    # the (score, mask) tie-break — agree bit-for-bit across engines
-    score = " + ".join(
-        f"((m.range >> {j}) & 1) * abs(proj.p{j})" for j in range(N_PLANES)
-    )
-    return f"""
-    WITH be AS (
-      SELECT vec_id, embedding, {_bucket_sql('embedding')} AS bucket FROM embeddings
-    ),
-    q AS (SELECT embedding AS qe, bucket AS qb FROM be WHERE vec_id = 0),
-    proj AS (SELECT {", ".join(projections)} FROM q),
-    probes AS (
-      SELECT xor(q.qb, m.range) AS bucket
-      FROM range({1 << N_PLANES}) m, proj, q
-      ORDER BY {score}, m.range
-      LIMIT {n_probe}
-    )
-    SELECT e.vec_id, {_cos_sql('e.embedding', 'q.qe')} AS cosine
-    FROM be e, q
-    WHERE e.bucket IN (SELECT bucket FROM probes) AND e.vec_id != 0
-    ORDER BY cosine DESC, e.vec_id
-    LIMIT 10
-    """
-
-
-@register(
-    "similarity_ann_margin_multiprobe_topk", _margin_multiprobe_oracle(16)
-)
-def similarity_ann_margin_multiprobe_topk(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Query-directed multi-probe ANN top-k (similarity/lsh.py
-    rp_ann_multiprobe_topk, Lv et al. VLDB'07): probe the 16 buckets
-    cheapest to reach from the query's bucket — smallest summed
-    |projection margin| over flipped sign bits — then exact-cosine
-    re-rank. The oracle derives the SAME probe set relationally (score
-    all 2^H masks over the query's 8 rounded projections, ORDER BY
-    score, mask LIMIT 16), so the probe-budget path is value-verified
-    cross-engine like the hamming variant above. Versus hamming-1's
-    fixed 9-bucket ball at 3.5% scan, this spends a 16-bucket budget
-    (6.25%) on the most likely straddles — the knob the bench's
-    ann_recall.lsh_multiprobe curve sweeps, and the path that meets the
-    planted ≥0.9 recall contract from 1/6 the hamming-3 scan fraction."""
-    from sri_spark.similarity.lsh import rp_ann_multiprobe_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return rp_ann_multiprobe_topk(emb, 0, k=10, n_probe=16)
-
-
-@register(
-    "similarity_ivf_pq_pipeline",
-    """
-    SELECT CAST(10 AS BIGINT) AS k,
-           CAST(10 AS BIGINT) AS n_resultados,
-           TRUE AS recall_ok
-    """,
-)
-def similarity_ivf_pq_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production ANN index composition (FAISS-style IVFPQ): a coarse
-    quantizer (IVF, 8 seeded-KMeans cells) picks the 4 cells nearest the
-    query, then PQ/ADC ranks ONLY the probed cells' codes, then exact
-    cosine re-ranks the ADC survivors. Scan cost per query = centroid
-    table (metadata) + code bytes of n_probe/n_lists of the corpus + exact
-    math on rerank_mult*k rows — the shape that serves billion-vector
-    corpora from 1/64th of the I/O.
-
-    Same cross-engine contract as similarity_ivf_topk / similarity_pq_topk
-    (cell boundaries and codebooks are engine-specific, so per-row values
-    aren't SQL-reproducible): run the pipeline AND the brute-force truth,
-    emit (k, n_resultados, recall_ok) with recall@10 >= 0.5 (measured 0.6
-    at sf0.01, 0.5 at sf0.1 on the structureless random fixture —
-    clustered real embeddings fare better)."""
-    from sri_spark.similarity.ivf import build_ivf_index, rank_probe_cells
-    from sri_spark.similarity.pq import pq_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    model, indexed = build_ivf_index(emb, n_lists=8, seed=42)
-    cents = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    cells = rank_probe_cells(indexed, cents, 0, n_probe=4)
-    subset = indexed.filter(F.col("__cell").isin(cells)).drop("__cell")
-    ivfpq = pq_topk(emb, 0, k=10, scan_df=subset).select("vec_id")
-    brute = cosine_topk(emb, query_id=0, k=10).select(
-        "vec_id", F.lit(1).alias("__hit")
-    )
-    return (
-        ivfpq.join(brute, "vec_id", "left")
-        .agg(
-            F.count("*").alias("n_resultados"),
-            (F.sum(F.coalesce(F.col("__hit"), F.lit(0))) >= F.lit(5)).alias(
-                "recall_ok"
-            ),
-        )
-        .withColumn("k", F.lit(10).cast("long"))
-        .select("k", "n_resultados", "recall_ok")
-    )

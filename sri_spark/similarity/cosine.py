@@ -2,8 +2,9 @@
 
 All vector math is `zip_with` + `aggregate` over array<double> — JVM-side,
 no UDFs, no data leaves the executors. Brute force scans every row per query
-(the correct baseline and fine for one-off queries); the LSH module is the
-sub-linear scale path.
+(the correct baseline and fine for one-off queries, and the truth ANN recall
+is measured against); the IVF index (`similarity.ivf`) is the sub-linear
+scale path.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
-"""IVF (inverted-file) approximate nearest neighbours (mandate item:
-"an IVF or LSH-bucketed variant as the scale path" — this is the IVF one;
-similarity.lsh is the LSH one).
+"""IVF (inverted-file) approximate nearest neighbours — the one ANN index,
+the sub-linear scale path over brute force (similarity.cosine).
 
 Index: seeded KMeans (spark.ml, k-means|| init) partitions vectors into
 `n_lists` cells; each vector stores its cell id. Query: rank cells by
@@ -114,7 +113,7 @@ def ivf_topk(
     )
 
 
-def rank_probe_cells(
+def _rank_probe_cells(
     indexed: DataFrame,
     centroids: list[tuple[int, list[float]]],
     query_id: int,
@@ -125,8 +124,7 @@ def rank_probe_cells(
 ) -> list[int]:
     """The `n_probe` cell ids whose centroids are closest (cosine) to the
     query vector. Driver-side by design: n_lists rows — an index-metadata
-    decision, not a data operation. Shared by ivf_probe and the IVF+PQ
-    pipeline so both probe the identical cell set."""
+    decision, not a data operation."""
     q_vec = indexed.filter(F.col(id_col) == query_id).select(
         _as_double(F.col(vec_col)).alias("__q")
     )
@@ -166,7 +164,7 @@ def ivf_probe(
     q_vec = indexed.filter(F.col(id_col) == query_id).select(
         _as_double(F.col(vec_col)).alias("__q")
     )
-    probe_cells = rank_probe_cells(
+    probe_cells = _rank_probe_cells(
         indexed,
         centroids,
         query_id,

@@ -1,11 +1,13 @@
-"""Random-hyperplane (sign) LSH for approximate nearest neighbours — the
-scale path over brute force (mandate item).
+"""Random-hyperplane (sign) LSH near-pair join: every pair of embeddings
+whose cosine clears a threshold, without the all-pairs comparison.
 
 H fixed pseudo-random hyperplanes (deterministic LCG-derived literals, no RNG
-at import) map each embedding to an H-bit bucket; candidates share a bucket,
-then exact cosine re-ranks. Bucket computation is narrow; the candidate join
-shuffles on the (tiny) bucket key. Expected cost drops from |N| per query to
-|N| / 2^H with the classic LSH recall tradeoff.
+at import) map each embedding to an H-bit bucket; candidate pairs share a
+bucket, then exact cosine filters them. Bucket computation is narrow; the
+candidate self-join shuffles on the (tiny) bucket key, so the quadratic
+comparison shrinks to within-bucket pairs. Top-k neighbour search is not
+done here: brute force is `similarity.cosine`, the ANN index is
+`similarity.ivf`.
 
 Sign decisions are taken on the 6-decimal-rounded projection so the DuckDB
 oracle (same literals, same rounding) buckets identically.
@@ -108,142 +110,3 @@ def rp_lsh_near_pairs(
         )
         .filter(F.col("cosine") >= threshold)
     )
-
-
-def rp_ann_topk(
-    df: DataFrame,
-    query_id: int,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 10,
-    hamming: int = 1,
-) -> DataFrame:
-    """Multi-probe ANN top-k: probe the query's bucket PLUS every bucket
-    within `hamming` sign-bit flips, exact-cosine re-rank the union.
-
-    Single-bucket LSH recall collapses when true neighbours straddle a
-    hyperplane (measured recall@10 ≈ 0.06 on the 64-dim fixture); probing
-    the C(H,1)=8 distance-1 buckets too raises the scanned fraction from
-    1/2^H to (1+H)/2^H — still sub-linear — while recovering most
-    straddlers. `hamming` is the recall/latency knob; 0 reproduces the
-    single-probe catalog query (plans/similarity_queries.py
-    similarity_ann_lsh_topk, which stays single-bucket for oracle
-    determinism).
-
-    The query's own bucket is fetched with a 1-row collect (index
-    metadata, exactly like IVF's centroid ranking); candidate buckets are
-    enumerated driver-side and pushed down as an IN-list, so the scan
-    prunes on the bucket column rather than evaluating a Hamming
-    distance per row."""
-    from itertools import combinations
-
-    emb = df.select(
-        F.col(id_col),
-        _as_double(F.col(vec_col)).alias("__e"),
-        rp_bucket_col(F.col(vec_col)).alias("__bucket"),
-    )
-    q_row = emb.filter(F.col(id_col) == query_id).select("__e", "__bucket").first()
-    if q_row is None:
-        raise ValueError(f"query id {query_id} not found in {id_col}")
-    q_bucket = q_row["__bucket"]
-    probes = [q_bucket]
-    for d in range(1, hamming + 1):
-        for bits in combinations(range(N_PLANES), d):
-            flip = 0
-            for b in bits:
-                flip |= 1 << b
-            probes.append(q_bucket ^ flip)
-    q = emb.filter(F.col(id_col) == query_id).select(F.col("__e").alias("__q"))
-    return _rerank_probed(emb, q, probes, query_id, id_col, k)
-
-
-def _rerank_probed(emb, q, probes, query_id, id_col, k):
-    """Exact-cosine re-rank of the rows in `probes` buckets (shared tail of
-    both probe strategies): IN-list bucket prune, broadcast 1-row query,
-    deterministic (cosine desc, id asc) top-k."""
-    return (
-        emb.filter(F.col("__bucket").isin(probes))
-        .filter(F.col(id_col) != query_id)
-        .join(F.broadcast(q))
-        .select(
-            id_col,
-            F.round(
-                _dot(F.col("__e"), F.col("__q"))
-                / (_norm(F.col("__e")) * _norm(F.col("__q"))),
-                6,
-            ).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def margin_probe_sequence(
-    projections: list[float], bucket: int, n_probe: int
-) -> list[int]:
-    """Query-directed probe sequence (Lv et al., 'Multi-Probe LSH',
-    VLDB 2007): rank ALL 2^H candidate buckets by the cost of reaching
-    them — the sum of |projection margin| over the sign bits that must
-    flip — and take the `n_probe` cheapest. A bit whose hyperplane the
-    query sits ON (margin ≈ 0) is almost free to flip (a true neighbour
-    straddles it with ~50% probability); a far-margin bit is expensive.
-
-    Versus the Hamming-ball sequence (rp_ann_topk), which spends its
-    probe budget uniformly over flip COUNT, this spends it on flip
-    LIKELIHOOD — so at the SAME scanned-bucket budget it probes the
-    buckets most likely to hold straddled neighbours first. Driver-side
-    metadata math over 2^H=256 masks; ties broken by mask for
-    determinism."""
-    scored = sorted(
-        (
-            sum(abs(projections[j]) for j in range(N_PLANES) if mask >> j & 1),
-            mask,
-        )
-        for mask in range(1 << N_PLANES)
-    )
-    return [bucket ^ mask for _, mask in scored[:n_probe]]
-
-
-def rp_ann_multiprobe_topk(
-    df: DataFrame,
-    query_id: int,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 10,
-    n_probe: int = 16,
-) -> DataFrame:
-    """Margin-ranked multi-probe ANN top-k: probe the `n_probe` buckets
-    cheapest to reach from the query's bucket (margin_probe_sequence),
-    exact-cosine re-rank the union. `n_probe` is the direct scan-budget
-    knob — scanned fraction ≈ n_probe/2^H — unlike rp_ann_topk's
-    `hamming`, whose ball sizes jump 9 → 37 → 93 buckets with nothing in
-    between. The query's projections are part of the same 1-row metadata
-    fetch as its bucket; probe enumeration is driver-side and pushed down
-    as an IN-list, exactly like rp_ann_topk."""
-    emb = df.select(
-        F.col(id_col),
-        _as_double(F.col(vec_col)).alias("__e"),
-        rp_bucket_col(F.col(vec_col)).alias("__bucket"),
-    )
-    q_row = (
-        df.filter(F.col(id_col) == query_id)
-        .select(
-            _as_double(F.col(vec_col)).alias("__e"),
-            rp_bucket_col(F.col(vec_col)).alias("__bucket"),
-            *[
-                F.round(_dot(_as_double(F.col(vec_col)), _plane_col(j)), 6).alias(
-                    f"__p{j}"
-                )
-                for j in range(N_PLANES)
-            ],
-        )
-        .first()
-    )
-    if q_row is None:
-        raise ValueError(f"query id {query_id} not found in {id_col}")
-    projections = [q_row[f"__p{j}"] for j in range(N_PLANES)]
-    probes = margin_probe_sequence(projections, q_row["__bucket"], n_probe)
-    q = emb.filter(F.col(id_col) == query_id).select(F.col("__e").alias("__q"))
-    return _rerank_probed(emb, q, probes, query_id, id_col, k)

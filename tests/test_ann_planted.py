@@ -4,11 +4,11 @@ The organic embeddings fixture has near-random neighbors (true top-10
 cosines ~0.3-0.4), so its recall curve cannot catch a real ANN
 regression — a broken index and a working one score similarly there.
 This fixture plants the truth: 20 seeded unit-norm cluster centers, 50
-points each at noise sigma=0.01, so every query's true top-10 are its
-cluster siblings by construction. Both ANN paths must recover >= 90% of
-them at their documented operating points (multi-probe radius 3 for
-sign-LSH, n_probe=4/16 for IVF). bench.py records the same numbers per
-round in the ann_recall.planted block.
+points each, so every query's true top-10 are its cluster siblings by
+construction. The IVF index must recover >= 90% of them at its
+documented operating point (n_probe=4 of 16 cells) at two noise levels.
+bench.py records the same numbers per round in the ann_recall.planted
+block.
 """
 
 from __future__ import annotations
@@ -23,66 +23,19 @@ def planted(spark):
     return ann_planted(spark)
 
 
-def test_lsh_multiprobe_recall_on_planted_clusters(planted):
-    assert planted["lsh_hamming3"]["recall"] >= PLANTED_RECALL_MIN, planted
-
-
 def test_ivf_probe_recall_on_planted_clusters(planted):
     assert planted["ivf_probe4"]["recall"] >= PLANTED_RECALL_MIN, planted
 
 
-def test_margin_multiprobe_recall_on_planted_clusters(planted):
-    """Round-11 verdict item 3: the margin-ranked multiprobe path
-    (rp_ann_multiprobe_topk) must hit the same planted contract from a
-    16-bucket budget (6.25% scan) that the hamming-3 ball needs 93
-    buckets (36%) for — planted siblings only land in a different bucket
-    via a low-margin straddle, which the margin ranking probes first."""
-    assert planted["lsh_margin_probe16"]["recall"] >= PLANTED_RECALL_MIN, planted
-
-
-def test_high_noise_geometry_binds_the_margin_envelope(planted):
+def test_ivf_probe_recall_holds_at_high_noise(planted):
     """Round-12 (r11 verdict item 7): the second planted geometry
-    (sigma=0.08, noise comparable to the planes' own margins) binds the
-    margin ranking's operating ENVELOPE, not just its tight-cluster win:
-
-    - hamming-1 visibly fails: siblings flip more than one plane;
-    - margin-16 beats the radius-1 ball by >= 0.1 recall at 2x its
-      budget, but no longer holds the 0.9 contract — and at the EQUAL
-      9-bucket budget margin probing is no better than hamming-1, because
-      high noise decorrelates flips from plane margins (the signal the
-      ranking spends);
-    - the data-adaptive IVF path still holds the full contract here:
-      the clusters persist, they just stop aligning with fixed planes.
-
-    If margin-9 ever starts holding the contract at this noise, the
-    method changed — re-derive the envelope before relaxing this."""
+    (sigma=0.08, noise comparable to a random hyperplane's margins) is
+    where fixed sign-hyperplane probing fell to 0.38-0.62 recall. IVF's
+    cells are fit to the data, so the clusters persist and the index
+    must still hold the full contract here."""
     hn = planted["high_noise_sigma008"]
-    h1 = hn["lsh_hamming1"]["recall"]
-    assert h1 <= 0.6, hn
-    assert hn["lsh_margin_probe16"]["recall"] >= h1 + 0.1, hn
-    assert hn["lsh_margin_probe9"]["recall"] < PLANTED_RECALL_MIN, hn
-    assert hn["lsh_margin_probe16"]["recall"] < PLANTED_RECALL_MIN, hn
+    assert hn["binding"] is True, hn
     assert hn["ivf_probe4"]["recall"] >= PLANTED_RECALL_MIN, hn
-
-
-def test_margin_probe_sequence_properties():
-    """Driver-side probe enumeration: the query's own bucket is always
-    probed first (zero flips cost zero margin), the sequence is distinct
-    and deterministic, and a full 2^H budget enumerates every bucket —
-    i.e. n_probe=256 degrades gracefully to brute force."""
-    from sri_spark.similarity.lsh import N_PLANES, margin_probe_sequence
-
-    proj = [0.31, -0.02, 0.45, 0.01, -0.27, 0.09, -0.4, 0.15]
-    seq = margin_probe_sequence(proj, bucket=0b10110010, n_probe=16)
-    assert seq[0] == 0b10110010
-    assert len(seq) == 16 and len(set(seq)) == 16
-    assert seq == margin_probe_sequence(proj, bucket=0b10110010, n_probe=16)
-    # cheapest single flips come before expensive ones: bits 3 (|0.01|)
-    # and 1 (|0.02|) must appear in the first few probes
-    assert 0b10110010 ^ (1 << 3) in seq[:3]
-    assert 0b10110010 ^ (1 << 1) in seq[:3]
-    full = margin_probe_sequence(proj, bucket=0, n_probe=1 << N_PLANES)
-    assert sorted(full) == list(range(1 << N_PLANES))
 
 
 def test_planted_is_the_binding_gate_and_organic_is_advisory():

@@ -372,11 +372,11 @@ def test_committed_bench_artifact_schema():
     assert art["ann_recall"]["advisory"] is True
     assert art["ann_recall"]["planted"]["binding"] is True
     assert art["queries"], "per-query dict must be non-empty"
-    # r11+: artifacts declare their own floor eligibility, and the margin
-    # multiprobe curve rides in both recall blocks
+    # r11+: artifacts declare their own floor eligibility, and the IVF
+    # index rides in both recall blocks
     assert "floor_eligible" in art
-    assert "lsh_multiprobe" in art["ann_recall"]
-    assert "lsh_margin_probe16" in art["ann_recall"]["planted"]
+    assert "ivf" in art["ann_recall"]
+    assert "ivf_probe4" in art["ann_recall"]["planted"]
     # artifacts that record their session config also record what every
     # timed execution's stages did: the shuffle gate's input
     if "session_config" in art:

@@ -97,16 +97,6 @@ def test_pagerank_on_empty_edges(spark):
     assert pagerank(e, iterations=3).count() == 0
 
 
-def test_pq_codebooks_reject_empty_input(spark):
-    import pytest as _pytest
-
-    from sri_spark.similarity.pq import build_pq_codebooks
-
-    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    with _pytest.raises(ValueError, match="empty"):
-        build_pq_codebooks(empty)
-
-
 def test_export_shards_empty_frame(spark, tmp_path):
     from sri_spark.sources.export import write_training_shards
 

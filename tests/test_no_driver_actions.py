@@ -53,11 +53,7 @@ ITERATIVE_OK = {
     "dedup_duplicate_clusters": "large-star/small-star components over MinHash-LSH pairs: one eager localCheckpoint per round, fixpoint signature via observe()",
     "dedup_semantic_clusters": "large-star/small-star components over embedding LSH near-pairs: one eager localCheckpoint per round, fixpoint signature via observe()",
     "graph_components_trade": "large-star/small-star components of the dimension-sized trade graph: one eager localCheckpoint per round",
-    "similarity_ann_margin_multiprobe_topk": "1-row query projections/bucket fetch: probe enumeration is index metadata, like IVF centroids",
-    "similarity_ann_multiprobe_topk": "1-row query-vector fetch for broadcast",
-    "similarity_ivf_pq_pipeline": "KMeans fit + sample-trained PQ codebooks + query fetch",
-    "similarity_ivf_topk": "KMeans coarse-quantizer training",
-    "similarity_pq_topk": "sample-trained PQ codebooks + query fetch",
+    "similarity_ivf_topk": "IVF index build and probe: the KMeans coarse-quantizer fit, its bounded distinct-count probe that clamps k, and the n_lists-row cell-ranking collect",
 }
 
 

@@ -182,7 +182,6 @@ def test_q6_predicates_reach_the_scan(spark, sf_dir):
 NO_CARTESIAN_R4 = [
     "text_ngram_novelty",       # distinct-shingle LEFT join on the shingle key
     "corpus_version_diff",      # fingerprint full-outer join on the hash
-    "similarity_ann_multiprobe_topk",  # IN-list bucket prune + broadcast query row
 ]
 
 
@@ -225,9 +224,6 @@ ROUND4_NO_CARTESIAN = [
     "join_bloom_prefilter",
     "graph_triangle_count",
     "join_fuzzy_blocked",
-    # similarity_ivf_pq_pipeline is excluded: its only nested-loop join is
-    # the deliberate single-row broadcast of the query vector (a 1×N join
-    # carries no scale hazard; same shape as cosine_topk)
 ]
 
 
@@ -472,12 +468,8 @@ BOUNDED_BY_CONSTRUCTION_BNLJ = {
     "expr_fuzzy_brand_pairs",
     "retrieval_hybrid_rrf",
     "retrieval_phrase_top_docs",
-    "similarity_ann_margin_multiprobe_topk",
-    "similarity_ann_multiprobe_topk",
     "similarity_cosine_topk",
-    "similarity_ivf_pq_pipeline",
     "similarity_ivf_topk",
-    "similarity_pq_topk",
     "text_source_jsd",
     # TPC-H scalar-subquery broadcasts (threshold / max-revenue), already
     # exempted by name in test_tpch_shapes_no_cartesian

@@ -65,10 +65,9 @@ def test_ann_replay_buckets_grow_tenfold(spark):
     from sri_spark.sources.testdata import load_table
 
     # the replay copies embeddings verbatim with shifted vec_ids, so every
-    # LSH bucket's occupancy grows exactly 10x — assert via the id space
+    # vector's neighbourhood grows exactly 10x — assert via the id space
     base = load_table(spark, SF, "embeddings")
     n = base.count()
     out = bench.ann_replay_10x(spark)
     assert out["rows_1x"] == n and out["rows_10x"] == 10 * n
-    for path in ("lsh_probe_time_growth", "ivf_probe_time_growth"):
-        assert out[path] > 0  # structure present; wall time is bench's job
+    assert out["ivf_probe_time_growth"] > 0  # wall time is bench's job

@@ -157,13 +157,6 @@ def test_perplexity_filter_buckets(spark, sf_dir):
         assert n > 0
 
 
-def test_ivf_pq_pipeline_recall(spark, sf_dir):
-    from sri_spark.plans.similarity_queries import similarity_ivf_pq_pipeline
-
-    r = similarity_ivf_pq_pipeline(spark, sf_dir).collect()[0]
-    assert r.k == 10 and r.n_resultados == 10
-
-
 # --- randomized-construction invariants (hypothesis) -------------------------
 
 from hypothesis import HealthCheck, given, settings
