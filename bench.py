@@ -144,7 +144,7 @@ def sri_etl_replay(spark) -> dict:
     # Row counts come from the quality report the writes observed: no
     # re-read of the written star, no recompute of a dim
     elapsed, report = _median_point(
-        run, cleanup=spark.catalog.clearCache, warmup=True
+        run, "star_build", cleanup=spark.catalog.clearCache, warmup=True
     )
     return {
         "sec": elapsed,
@@ -187,7 +187,9 @@ def sri_etl_replay_10x(spark) -> dict:
 
     # median-of-3, no separate warm-up: the 1x replay just ran the same
     # pipeline code (verdict item 1)
-    elapsed, report = _median_point(run, cleanup=spark.catalog.clearCache)
+    elapsed, report = _median_point(
+        run, "star_build", cleanup=spark.catalog.clearCache
+    )
     spark.catalog.clearCache()
     shutil.rmtree(out_dir, ignore_errors=True)  # ~0.5 GB — don't accrete
     return {
@@ -259,7 +261,7 @@ def sri_etl_replay_100x(spark) -> dict:
         return write_star(tables, out_dir)
 
     try:
-        elapsed, report = _LEDGER.timed(run, _LEDGER.next_point())
+        elapsed, report = _LEDGER.timed(run, "star_build")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     spark.catalog.clearCache()
@@ -296,11 +298,8 @@ def ann_recall(spark) -> dict:
     # IVF in the amortized serving shape: ONE index build, many probes —
     # build cost reported separately from per-query probe cost
     t0 = time.perf_counter()
-    model, indexed = build_ivf_index(emb, n_lists=16)
+    centroids, indexed = build_ivf_index(emb, n_lists=16)
     indexed = indexed.persist()
-    centroids = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
     indexed.count()  # materialize the build
     ivf_build_sec = time.perf_counter() - t0
     t0 = time.perf_counter()
@@ -463,7 +462,10 @@ def _noop_counted(df) -> int:
 
 class _Ledger:
     """What each timed execution compiled and what its stages did, keyed
-    "<block>.<point>", one entry per repeat:
+    "<block>.<point>", one entry per repeat. A point is named by what it
+    times (a replay family's scale, a build or a probe), never by its
+    position in the block, so adding or removing a leg leaves every other
+    point's key, and with it shuffle_gate's pairing, unchanged:
     - `compiles`: generated-code compilations
       (operators/observability.py::codegen_compiles). A repeat of code
       that already ran should read 0, because session.py sizes the codegen
@@ -482,7 +484,6 @@ class _Ledger:
         self.probe = None  # zero-arg callable -> JVM compile count
         self.reader = None  # label -> context manager yielding stage metrics
         self.block = ""
-        self.points = 0
         self.compiles: dict[str, list[int]] = {}
         self.stage_metrics: dict[str, list[dict]] = {}
 
@@ -496,11 +497,7 @@ class _Ledger:
         self.reader = lambda label: stage_metrics(spark, label)
 
     def start_block(self, name: str) -> None:
-        self.block, self.points = name, 0
-
-    def next_point(self) -> str:
-        self.points += 1
-        return f"point{self.points}"
+        self.block = name
 
     def timed(self, fn, label):
         """(seconds, result) of one execution of `fn`, booked under
@@ -524,7 +521,7 @@ class _Ledger:
 _LEDGER = _Ledger()
 
 
-def _median_point(run, *, cleanup=None, warmup: bool = False):
+def _median_point(run, label, *, cleanup=None, warmup: bool = False):
     """Round-9 verdict item 1: replay points were timed ONCE, and round 8's
     two same-HEAD runs measured dedup's 1x point 4.6x apart (2.22 s vs
     10.16 s — first-touch codegen/JIT noise), swinging the published growth
@@ -534,7 +531,8 @@ def _median_point(run, *, cleanup=None, warmup: bool = False):
     needed on the FIRST point of a replay family — the smaller points of
     the same operator warm the code path for the bigger ones. `cleanup`
     releases scoped persists between runs so every timed run re-does the
-    full work. Returns (median_sec, last_run_result)."""
+    full work. `label` names the point in the ledger (_Ledger.timed).
+    Returns (median_sec, last_run_result)."""
     repeats = REPLAY_REPEATS
     if warmup and repeats > 1:
         run()
@@ -542,7 +540,6 @@ def _median_point(run, *, cleanup=None, warmup: bool = False):
             cleanup()
     times = []
     result = None
-    label = _LEDGER.next_point()
     for _ in range(repeats):
         sec, result = _LEDGER.timed(run, label)
         times.append(sec)
@@ -931,11 +928,8 @@ def ann_planted(spark) -> dict:
             q: {r["vec_id"] for r in cosine_topk(emb, q, k=K).collect()}
             for q in qids
         }
-        model, indexed = build_ivf_index(emb, n_lists=16)
+        centroids, indexed = build_ivf_index(emb, n_lists=16)
         indexed = indexed.persist()
-        centroids = [
-            (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-        ]
         t0 = time.perf_counter()
         hits = sum(
             len(
@@ -1167,15 +1161,25 @@ def graph_replay_10x(spark) -> dict:
     }
 
 
+# every component of a 10x/100x replica moves by a seeded uniform draw in
+# ±this before the copy is renormalized: about 0.9 cosine to its source on
+# the 64-dim fixture, so copies are near but not equal to their source
+ANN_REPLICA_JITTER = 0.1
+
+
 def ann_replay_10x(spark) -> dict:
-    """Round-5 verdict item 3 for the ANN probe path: per-query latency of
-    the IVF index on the embeddings table and on 10x and 100x replicas
-    (vec_id-shifted copies — every vector's neighbourhood is copied
-    verbatim, so the exact-rerank candidate set grows with the corpus: the
-    worst case for probe cost). Index build and probe are reported
-    separately, as in serving."""
+    """Round-5 verdict item 3 for the ANN probe path: per-query latency
+    and recall@10 of the IVF index on the embeddings table and on 10x and
+    100x replicas. Copy i > 0 shifts vec_id by i × 10M and jitters every
+    component by a seeded uniform draw in ±ANN_REPLICA_JITTER (hashed from
+    the new id and the component index), renormalized to unit length, so
+    no copy equals its source and a query's true top-10 is not a set of
+    cosine-1.0 duplicates. Index build and probe are reported separately,
+    as in serving; recall is against brute force on the same corpus, and
+    at 100x the quantizer trains on 4,096 of 200,000 vectors."""
     from pyspark.sql import functions as F
 
+    from sri_spark.similarity.cosine import _as_double, _norm, cosine_topk
     from sri_spark.similarity.ivf import build_ivf_index, ivf_probe
     from sri_spark.sources.testdata import load_table
 
@@ -1185,13 +1189,23 @@ def ann_replay_10x(spark) -> dict:
     qids = [ids[(i * len(ids)) // 5] for i in range(5)]
     K = 10
 
-    def corpus(n_copies):
-        return _replicated_union(
-            base,
-            n_copies,
-            lambda df, i: df.select(
-                (F.col("vec_id") + F.lit(i * 10_000_000)).alias("vec_id"),
-                "embedding",
+    def copy(df, i):
+        vid = F.col("vec_id") + F.lit(i * 10_000_000)
+        vec = _as_double(F.col("embedding"))
+        if i > 0:
+            vec = F.transform(
+                vec,
+                lambda x, j: x
+                + F.lit(ANN_REPLICA_JITTER)
+                * (F.xxhash64(vid, j).bitwiseAND(0xFFFFFF) / float(1 << 24) * 2 - 1),
+            )
+        out = df.select(vid.alias("vec_id"), vec.alias("embedding"))
+        if i == 0:
+            return out
+        return out.select(
+            "vec_id",
+            F.transform("embedding", lambda x: x / _norm(F.col("embedding"))).alias(
+                "embedding"
             ),
         )
 
@@ -1204,39 +1218,47 @@ def ann_replay_10x(spark) -> dict:
         "rows_100x": n1 * 100,
         "k": K,
         "n_queries": len(qids),
+        "jitter": ANN_REPLICA_JITTER,
     }
     for label, n_copies in (("one_x", 1), ("ten_x", 10), ("hundred_x", 100)):
-        emb = corpus(n_copies).persist()
+        emb = _replicated_union(base, n_copies, copy).persist()
         emb.count()
+        truth = {
+            q: {r["vec_id"] for r in cosine_topk(emb, q, k=K).collect()} for q in qids
+        }
         first = label == "one_x"
         indexed_holder: list = []
 
         def _build():
             if indexed_holder:  # release the previous repeat's index
                 indexed_holder.pop().unpersist()
-            model, idx = build_ivf_index(emb, n_lists=16)
+            centroids, idx = build_ivf_index(emb, n_lists=16)
             idx = idx.persist()
             idx.count()
             indexed_holder.append(idx)
-            return [
-                (i, [float(x) for x in c])
-                for i, c in enumerate(model.clusterCenters())
-            ]
+            return centroids
 
-        ivf_build_sec, centroids = _median_point(_build, warmup=first)
+        ivf_build_sec, centroids = _median_point(
+            _build, (label, "ivf_build"), warmup=first
+        )
         indexed = indexed_holder.pop()
-        ivf_probe_sec, _ = _median_point(
+        ivf_probe_sec, found = _median_point(
             lambda: [
                 ivf_probe(indexed, centroids, q, k=K, n_probe=4).collect()
                 for q in qids
             ],
+            (label, "ivf_probe"),
             warmup=first,
         )
         indexed.unpersist()
         emb.unpersist()
+        hits = sum(
+            len({r["vec_id"] for r in rows} & truth[q]) for q, rows in zip(qids, found)
+        )
         out[label] = {
             "ivf_build_sec": ivf_build_sec,
             "ivf_probe_sec_per_query": round(ivf_probe_sec / len(qids), 4),
+            "ivf_recall": round(hits / (K * len(qids)), 4),
         }
     key = "ivf_probe_sec_per_query"
     out["ivf_probe_time_growth"] = round(out["ten_x"][key] / out["one_x"][key], 4)
@@ -1400,10 +1422,7 @@ def replay_plan_probes(spark) -> dict:
 
     emb = load_table(spark, SF_DIR, "embeddings")
     qid = emb.agg(F.min("vec_id")).first()[0]
-    model, indexed = build_ivf_index(emb, n_lists=4)
-    centroids = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
+    centroids, indexed = build_ivf_index(emb, n_lists=4)
 
     return {
         "sri_etl_replay": etl_probe,

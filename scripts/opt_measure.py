@@ -9,7 +9,10 @@ evidence the optimization round commits.
 Each timed execution goes through bench.py's ledger, so next to its median
 wall every query prints its median-repeat stage metrics: jobs, tasks,
 executor time, shuffle write/read, disk spill and task skew — the layer
-that moved in an A/B, not just the wall.
+that moved in an A/B, not just the wall. It also prints the median CPU
+seconds of this process, the JVM and its Python workers per execution
+(perfbench/run.py::cpu_s, the unit perfbench gates), which host CPU steal
+does not inflate the way it inflates the wall.
 
 Usage:
     python scripts/opt_measure.py q1 q2 ...            # time only
@@ -50,6 +53,7 @@ def main() -> None:
     queries = all_queries()
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     import bench
+    from perfbench.run import cpu_s
 
     plans_dir = os.path.join(here, "plans", f"r{bench._current_round()}")
     ledger = bench._Ledger()
@@ -75,11 +79,22 @@ def main() -> None:
             ).save()
             unpersist_all()
 
+        def run_cpu():
+            before = cpu_s()
+            run()
+            return cpu_s() - before
+
         run()  # warm-up, untimed (JIT, codegen caches, footer reads)
-        ts = sorted(ledger.timed(run, name)[0] for _ in range(args.repeats))
+        reps = [ledger.timed(run_cpu, name) for _ in range(args.repeats)]
+        ts, cpus = sorted(r[0] for r in reps), sorted(r[1] for r in reps)
         sm = bench._median_repeat(ledger.stage_metrics[name])
-        out[name] = {"sec": round(ts[len(ts) // 2], 4), "stage_metrics": sm}
+        out[name] = {
+            "sec": round(ts[len(ts) // 2], 4),
+            "cpu_s": round(cpus[len(cpus) // 2], 3),
+            "stage_metrics": sm,
+        }
         print(f"{name}: median {out[name]['sec']}s  (all: {[round(t, 3) for t in ts]})"
+              f"  cpu {out[name]['cpu_s']} s  (all: {[round(c, 2) for c in cpus]})"
               f"  jobs {sm['jobs']} tasks {sm['tasks']} exec {sm['exec_ms']} ms"
               f"  shuffle w/r {sm['shuffle_write'] / bench.MIB:.2f}/"
               f"{sm['shuffle_read'] / bench.MIB:.2f} MiB"

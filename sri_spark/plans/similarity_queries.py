@@ -86,10 +86,11 @@ def similarity_lsh_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN top-k: seeded-KMeans cells, probe the best 4 of 8 by centroid
-    cosine, exact re-rank inside them (similarity.ivf.ivf_topk returns the
-    actual neighbour rows; per-row values aren't SQL-reproducible because
-    KMeans cell boundaries are engine-specific).
+    """IVF ANN top-k: 8 cells from a quantizer trained on a hashed sample,
+    probe the best 4 by centroid cosine, exact re-rank inside them
+    (similarity.ivf.ivf_topk returns the actual neighbour rows; per-row
+    values aren't SQL-reproducible because cell boundaries are
+    engine-specific). The build is one job; the probe is one plan.
 
     Cross-engine contract: run IVF AND the brute-force truth, emit
     (k, n_resultados, recall_ok) where recall_ok asserts recall@10 >= 0.5 —

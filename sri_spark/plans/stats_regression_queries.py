@@ -998,8 +998,9 @@ def _day_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         Python workers by value and needs no package import there.
 
         Hot-path operators stay JVM-side everywhere else (session.py);
-        this kernel is the one exception because its input is bounded by
-        the calendar, not by the data: one row per order day (TPC-H order
+        this kernel and the IVF quantizer fit (similarity/ivf.py) are the
+        exceptions, because their input does not grow with the data. Here
+        it is bounded by the calendar: one row per order day (TPC-H order
         dates span the same 1992–1998 calendar at every scale factor,
         2,405 days at sf0.1), guarded to `_MAX_GRID_DAYS`, so its 2.9M
         pairs fit one worker.

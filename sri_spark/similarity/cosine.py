@@ -14,7 +14,8 @@ from pyspark.sql import functions as F
 
 
 def _as_double(arr: Column) -> Column:
-    return F.transform(arr, lambda x: x.cast("double"))
+    # one generated-code cast, not a per-element interpreted lambda
+    return arr.cast("array<double>")
 
 
 def _dot(a: Column, b: Column) -> Column:

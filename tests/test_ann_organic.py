@@ -41,11 +41,8 @@ def tuned(spark, sf_dir):
         q: {r["vec_id"] for r in cosine_topk(emb, q, k=K).collect()}
         for q in set(eval_qids) | set(tune_qids)
     }
-    model, indexed = build_ivf_index(emb, n_lists=16)
+    centroids, indexed = build_ivf_index(emb, n_lists=16)
     indexed = indexed.persist()
-    centroids = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
     n_probe_star, tune_recall = tune_n_probe(
         indexed,
         centroids,

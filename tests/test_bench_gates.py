@@ -393,7 +393,9 @@ def test_median_point_honors_single_shot_env(monkeypatch):
 
     monkeypatch.setattr(bench, "REPLAY_REPEATS", 1)
     calls = []
-    sec, result = bench._median_point(lambda: calls.append(1) or "r", warmup=True)
+    sec, result = bench._median_point(
+        lambda: calls.append(1) or "r", "p", warmup=True
+    )
     assert len(calls) == 1 and result == "r"
 
     calls.clear()
@@ -410,7 +412,7 @@ def test_median_point_defaults_unchanged_without_env():
 
     assert bench.REPLAY_REPEATS == 3
     calls = []
-    bench._median_point(lambda: calls.append(1), warmup=True)
+    bench._median_point(lambda: calls.append(1), "p", warmup=True)
     assert len(calls) == 4  # warm-up + 3 timed
 
     calls.clear()
@@ -430,7 +432,7 @@ def test_compile_ledger_books_every_timed_repeat(monkeypatch):
 
     ledger = bench._Ledger()
     monkeypatch.setattr(bench, "_LEDGER", ledger)
-    bench._median_point(lambda: None, warmup=True)
+    bench._median_point(lambda: None, "p", warmup=True)
     assert ledger.compiles == {} and ledger.stage_metrics == {}
 
     compiled = [0]
@@ -450,14 +452,14 @@ def test_compile_ledger_books_every_timed_repeat(monkeypatch):
         compiled[0] += 5 if compiled[0] == 0 else 0
 
     ledger.start_block("fam")
-    bench._median_point(cold_once, warmup=False)
+    bench._median_point(cold_once, "build", warmup=False)
     bench._interleaved_medians(
         {"one_x": lambda: None, ("ten_x", "win"): lambda: None},
         repeats=2,
         warmup_keys=("one_x",),
     )
     assert ledger.compiles == {
-        "fam.point1": [5, 0, 0],
+        "fam.build": [5, 0, 0],
         "fam.one_x": [0, 0],
         "fam.ten_x.win": [0, 0],
     }
@@ -465,6 +467,29 @@ def test_compile_ledger_books_every_timed_repeat(monkeypatch):
         k: [k] * len(v) for k, v in ledger.compiles.items()
     }
     assert len(read) == 7  # timed executions only, not the warm-up
+
+
+def test_ledger_keys_survive_an_added_leg(monkeypatch):
+    """Points are keyed by what they time, not by their position in the
+    block: inserting a leg ahead of the others adds its own key and leaves
+    every other point's key (shuffle_gate's pairing) unchanged."""
+    import bench
+
+    def keys(legs):
+        ledger = bench._Ledger()
+        ledger.probe = lambda: 0
+        monkeypatch.setattr(bench, "_LEDGER", ledger)
+        monkeypatch.setattr(bench, "REPLAY_REPEATS", 1)
+        ledger.start_block("ann_replay_10x")
+        for label in legs:
+            bench._median_point(lambda: None, label)
+        return set(ledger.compiles)
+
+    before = keys([("one_x", "ivf_build"), ("one_x", "ivf_probe")])
+    after = keys([("one_x", "lsh_probe"), ("one_x", "ivf_build"), ("one_x", "ivf_probe")])
+    assert before == {"ann_replay_10x.one_x.ivf_build", "ann_replay_10x.one_x.ivf_probe"}
+    assert after - before == {"ann_replay_10x.one_x.lsh_probe"}
+    assert before < after
 
 
 def test_compact_final_line_fits_driver_tail_window():

@@ -25,8 +25,8 @@ an action IS the algorithm (not a metadata shortcut):
   localCheckpoint (which also cuts the lineage) and its convergence
   signature (count + bit_xor) rides that job via observe() — the loop
   cannot be expressed lazily (data-dependent round count);
-- KMeans/PQ index training: spark.ml fit + sample-collected codebooks
-  (bounded by k and sample size, not corpus);
+- IVF index training: one collect of the centroids a sample-trained
+  quantizer fit (n_lists rows, bounded by n_lists, not the corpus);
 - query-vector fetch: a .first() on a 1-row filtered frame (the serving
   pattern — the query point must reach the driver to broadcast);
 - two-phase prefix-sum packing: phase one collects ONE row per partition
@@ -53,7 +53,7 @@ ITERATIVE_OK = {
     "dedup_duplicate_clusters": "large-star/small-star components over MinHash-LSH pairs: one eager localCheckpoint per round, fixpoint signature via observe()",
     "dedup_semantic_clusters": "large-star/small-star components over embedding LSH near-pairs: one eager localCheckpoint per round, fixpoint signature via observe()",
     "graph_components_trade": "large-star/small-star components of the dimension-sized trade graph: one eager localCheckpoint per round",
-    "similarity_ivf_topk": "IVF index build and probe: the KMeans coarse-quantizer fit, its bounded distinct-count probe that clamps k, and the n_lists-row cell-ranking collect",
+    "similarity_ivf_topk": "IVF index build: one collect of the n_lists centroids the sample-trained quantizer fit",
 }
 
 
