@@ -23,8 +23,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from sri_spark.operators.caching import scoped_persist
-
 
 def exact_quantile_by_group(
     df: DataFrame,
@@ -60,10 +58,10 @@ def exact_quantile_by_group(
     null-safe per field); `keys` must name at least one column
     (ValueError otherwise). Result: `keys + [out]`, one row per group with
     >= 1 non-NULL value; no qualifying groups → empty frame. The frame is
-    returned as a LAZY scoped-persist leaf — group-sized by construction —
-    so callers weave it into bigger plans without re-running the
-    selection (the cache materializes inline in their first action and is
-    shared by later ones).
+    a plain lazy plan with no cache: every caller reads it once, so it
+    fuses into the caller's action, and AQE coalesces its shuffles like
+    any other stage's. Twin calls over the same input (two quantiles of
+    one column) share their histogram exchange through ReuseExchange.
 
     At 100 TB: both passes are map-side-combined codegen aggregates whose
     shuffles carry ≤ (groups × populated buckets) histogram cells or the
@@ -115,7 +113,7 @@ def exact_quantile_by_group(
             + (h - F.floor(h)) * (F.col("__vhi") - F.col("__vlo")),
         ).alias(out),
     )
-    return _lazy_leaf(guarded, keys, out)
+    return _unpack_keys(guarded, keys, out)
 
 
 def weighted_quantile_by_group(
@@ -139,10 +137,11 @@ def weighted_quantile_by_group(
     (`_band`) tie-collapses its rows to (value, weight) cells, so a
     billion-row tie run is one cell. The finale takes the smallest value
     whose cumulative weight (offset by the weight below the bucket)
-    reaches t, behind the same loud `assert_true` guard. The (group,
-    value, weight) projection is persisted once for the two passes. No
-    driver round trip, no data-dependent round count: the result is a
-    lazy scoped-persist leaf like the unweighted one.
+    reaches t, behind the same loud `assert_true` guard. Both passes
+    re-scan the (group, value, weight) projection; at the catalog's sizes
+    that costs less than building a cache of it. No driver round trip,
+    no data-dependent round count, and no cache: the result is a plain
+    lazy plan like the unweighted one.
 
     Cross-engine determinism: weights are summed as decimal(38,6) —
     EXACT, order-independent — so the boundary comparison
@@ -157,7 +156,7 @@ def weighted_quantile_by_group(
     """
     if not 0.0 <= p <= 1.0:
         raise ValueError(f"quantile p must be in [0,1], got {p}")
-    vals = scoped_persist(_grouped_values(df, keys, col, weight_col))
+    vals = _grouped_values(df, keys, col, weight_col)
 
     t = F.col("__total") * F.lit(p).cast("decimal(12,10)")
     # weights are > 0, so exactly one bucket has start < t <= start + mass
@@ -185,7 +184,7 @@ def weighted_quantile_by_group(
             F.col("__q"),
         ).alias(out),
     )
-    return _lazy_leaf(guarded, keys, out)
+    return _unpack_keys(guarded, keys, out)
 
 
 def _grouped_values(
@@ -294,13 +293,6 @@ def _band(vals: DataFrame, span: DataFrame, mass: Column) -> DataFrame:
     )
 
 
-def _lazy_leaf(guarded: DataFrame, keys: list[str], out: str) -> DataFrame:
-    """`keys + [out]` as a LAZY scoped-persist leaf: it bounds nested
-    callers' plans with an InMemoryRelation, and the selection FUSES into
-    the caller's action instead of paying its own build-time job — the
-    caches materialize inline on first read, twin calls over the same
-    input share their histogram exchanges via ReuseExchange, and builders
-    stay action-free."""
-    return scoped_persist(
-        guarded.select(*[F.col(f"__g.{k}").alias(k) for k in keys], out)
-    )
+def _unpack_keys(guarded: DataFrame, keys: list[str], out: str) -> DataFrame:
+    """`keys + [out]`: the group keys unpacked from the `__g` struct."""
+    return guarded.select(*[F.col(f"__g.{k}").alias(k) for k in keys], out)

@@ -7,7 +7,7 @@ same approach as dedup_duplicate_clusters' recursive-CTE oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sri_spark.graph.pagerank import DAMPING, pagerank
@@ -177,33 +177,37 @@ def _top_trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle count on the top-30-edge trade graph via the canonical
-    ordered three-way self-join (a < b < c, so each triangle is counted
-    exactly once). On an oriented edge list the join degree is bounded by
-    per-node out-degree under the ordering — the standard degree-ordering
-    trick that keeps triangle counting feasible on power-law graphs. The
-    edge list here is dimension-sized (nations); the heavy work is the
-    upstream trade rollup, which is the same star join the metrics
-    queries already exercise."""
-    e = _top_trade_edges(spark, sf_dir)
-    e1 = e.alias("e1")
-    e2 = e.alias("e2")
-    e3 = e.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e2.a") == F.col("e1.b"))
-        .join(
-            e3,
-            (F.col("e3.a") == F.col("e1.a")) & (F.col("e3.b") == F.col("e2.b")),
+    """Triangle count on the top-30-edge trade graph, edge list run once.
+
+    Each triangle a < b < c counts once (`_count_triangles`). The edge
+    list is dimension-sized (nations); the heavy work is the upstream
+    trade rollup, the same star join the metrics queries exercise, and
+    the plan references it once."""
+    return _count_triangles(_top_trade_edges(spark, sf_dir))
+
+
+def _count_triangles(edges: DataFrame) -> DataFrame:
+    """(n_edges, n_triangles) of an oriented, distinct (a, b) edge list, as
+    one row from one reference to `edges`: collect_list packs the edges
+    into one array E, and n_triangles counts the pairs x, y in E with
+    y.a = x.b for which (x.a, y.b) is in E too. The comparisons grow with
+    |E|^3, so this is for an edge list a LIMIT bounds (TOP_EDGES = 30:
+    at most 27k)."""
+    e = F.col("E")
+
+    def closes(x: Column) -> Column:
+        return F.size(
+            F.filter(
+                e,
+                lambda y: (y["a"] == x["b"])
+                & F.exists(e, lambda z: (z["a"] == x["a"]) & (z["b"] == y["b"])),
+            )
         )
-        .agg(F.count("*").alias("n_triangles"))
-    )
-    # edge count rides the plan as a 1-row aggregate (crossJoin of two
-    # 1-row frames), not a driver-side e.count(): one action, one job,
-    # and the scalar never round-trips through the driver
-    n1 = e.agg(F.count("*").cast("long").alias("n_edges"))
-    return tri.crossJoin(n1).select(
-        "n_edges",
-        F.col("n_triangles").cast("long").alias("n_triangles"),
+
+    return edges.agg(F.collect_list(F.struct("a", "b")).alias("E")).select(
+        F.size(e).cast("long").alias("n_edges"),
+        F.aggregate(e, F.lit(0).cast("long"), lambda acc, x: acc + closes(x))
+        .alias("n_triangles"),
     )
 
 

@@ -17,11 +17,9 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from sri_spark.similarity.cosine import _as_double
+
 INT8_MAX = 127
-
-
-def _as_double(arr: Column) -> Column:
-    return F.transform(arr, lambda x: x.cast("double"))
 
 
 def l2_norm(arr: Column) -> Column:

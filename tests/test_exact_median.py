@@ -237,3 +237,53 @@ def test_weighted_quantile_wide_group_with_non_finite_value(spark, bad):
         got = res.first()["q"]
         want = _np_weighted(vs, np.ones(n + 1), p)
         assert got == want or (np.isnan(got) and np.isnan(want)), p
+
+
+# ---------------------------------------------------------------------------
+# no caches: both quantile leaves are plain lazy plans
+
+
+def _quantile_leaves(spark):
+    from sri_spark.operators.median import weighted_quantile_by_group
+
+    df = spark.createDataFrame(
+        [("a", float(v), 1.0 + v % 3) for v in range(50)], "k string, v double, w double"
+    )
+    return {
+        "cont": exact_quantile_by_group(df, ["k"], "v", "q"),
+        "weighted": weighted_quantile_by_group(df, ["k"], "v", "w", "q"),
+    }
+
+
+def test_quantile_leaves_hold_no_cache(spark):
+    """Each caller reads a quantile result once, so neither leaf persists
+    its input projection or its result: no InMemoryRelation in either
+    plan, and nothing is left cached after they run."""
+    for name, leaf in _quantile_leaves(spark).items():
+        plans = leaf._jdf.queryExecution()
+        text = plans.optimizedPlan().toString() + plans.executedPlan().toString()
+        assert "InMemoryRelation" not in text, name
+        assert "InMemoryTableScan" not in text, name
+        assert leaf.count() == 1
+        assert not leaf.is_cached
+
+
+def test_weighted_median_stages_coalesce_under_default_partitions(spark, sf_dir):
+    """At Spark's default 200 shuffle partitions AQE coalesces every stage
+    of the weighted median: a cached leaf would be planned with AQE off and
+    run each of its shuffles at 200 tasks."""
+    from sri_spark.operators.caching import unpersist_all
+    from sri_spark.operators.observability import stage_metrics
+    from sri_spark.plans import all_queries
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        with stage_metrics(spark, "weighted_median_200") as m:
+            rows = all_queries()["agg_weighted_median_price"](spark, sf_dir).collect()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+        unpersist_all()
+    assert rows
+    assert m["jobs"] >= 1
+    assert m["tasks"] < 200, m

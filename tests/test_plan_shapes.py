@@ -230,12 +230,20 @@ ROUND4_NO_CARTESIAN = [
 @pytest.mark.parametrize("name", ROUND4_NO_CARTESIAN)
 def test_round4_ops_keyed_joins_only(spark, sf_dir, name):
     """Round-4 pair/probe operators candidate-join on keys (span text,
-    (seed, bucket), bit position, ordered edge endpoints, IVF cell) — a
-    static CartesianProduct or nested loop here is the plan that dies at
-    scale."""
+    (seed, bucket), bit position, IVF cell), and the triangle count joins
+    no edge list with itself — a static CartesianProduct or nested loop
+    here is the plan that dies at scale."""
     plan = _plan(spark, sf_dir, name)
     assert "CartesianProduct" not in plan, name
     assert not unbounded_nested_loops(plan), name
+
+
+def test_triangle_count_plans_its_edge_list_once(spark, sf_dir):
+    """graph_triangle_count references its top-30 edge list once (packed
+    into one array), so the trade rollup and its top-k run once, not once
+    per self-join side plus once for the edge count."""
+    plan = _plan(spark, sf_dir, "graph_triangle_count")
+    assert plan.count("TakeOrderedAndProject") == 1, plan
 
 
 def test_span_dedup_two_exchanges(spark, sf_dir):
